@@ -1404,53 +1404,45 @@ def semantic_dedup_pairs(
     unlike the flood case the backstop hub may miss the threshold, so
     scale k rather than lean on it.  Under the caps (every driver
     fixture) output is EXACT, so the quadratic SQL oracle stays sound."""
-    import numpy as np
-    import pandas as pd
-
-    from .similarity import _complete_key_blocks, _mat, assign_nearest_cells
+    from .similarity import assign_nearest_cells
 
     cen_ids, cen_mat = centroids
     cells = assign_nearest_cells(emb, cen_ids, cen_mat, 1, "vid", "vec", id_col, vec_col)
+    return _semantic_cell_pairs(cells, threshold, cell_cap)
 
-    # r16 (guide §2.4/§4, the ANN-scorer rewire): k cells scale with the
-    # corpus (k ~ n/256 — the contract above), so a groupBy(cell)
-    # .applyInPandas pays per-GROUP Python dispatch on millions of
-    # constant-sized groups at scale. One hash exchange + partition-local
-    # sort + a streaming mapInPandas that regroups complete cells
-    # (``_complete_key_blocks``) keeps the same single-shuffle plan while
-    # Python is invoked per Arrow batch; the vector matrix is built once
-    # per block and cells are numpy slices.
-    part = cells.repartition(F.col("cell")).sortWithinPartitions("cell")
 
-    def fn(batches):
-        for pdf in _complete_key_blocks(batches, "cell"):
-            ks = pdf["cell"].to_numpy()
-            ids = pdf["vid"].to_numpy(dtype=np.int64)
-            vm = _mat(pdf["vec"])
-            out_a, out_b, out_s = [], [], []
-            bounds = np.flatnonzero(ks[1:] != ks[:-1]) + 1
-            starts = np.concatenate(([0], bounds))
-            ends = np.concatenate((bounds, [len(ks)]))
-            for s0, e0 in zip(starts, ends):
-                if e0 - s0 < 2:
-                    continue
-                ia, ib, s = _cell_pairs_arrays(
-                    ids[s0:e0], vm[s0:e0], None, threshold, cell_cap
-                )
-                if len(ia):
-                    out_a.append(ia)
-                    out_b.append(ib)
-                    out_s.append(s)
-            if out_a:
-                yield pd.DataFrame(
-                    {
-                        "id_a": np.concatenate(out_a),
-                        "id_b": np.concatenate(out_b),
-                        "sim": np.concatenate(out_s),
-                    }
-                )
+def _semantic_cell_pairs(cells: DataFrame, threshold: float, cell_cap: int) -> DataFrame:
+    """Within-cell pairs over ``(cell, vid, vec[, is_new])`` rows through
+    the keyed-block scaffold (``similarity._key_blocks``): one hash
+    exchange on ``cell``, a partition-local sort, and ``_cell_pairs_arrays``
+    per complete cell. k cells scale with the corpus (k ~ n/256), so a
+    per-GROUP ``applyInPandas`` would pay Python dispatch on millions of
+    constant-sized groups; here the vector matrix is built once per block.
+    With an ``is_new`` column only pairs touching a new row are scored —
+    the streaming new-vs-all rule of ``sinks.semantic_dedup_sink``."""
+    import numpy as np
+    import pandas as pd
 
-    return part.mapInPandas(fn, "id_a long, id_b long, sim double")
+    from .similarity import _key_blocks, _mat
+
+    def block(pdf, starts, ends):
+        ids = pdf["vid"].to_numpy(dtype=np.int64)
+        vm = _mat(pdf["vec"])
+        newf = pdf["is_new"].to_numpy(dtype=bool) if "is_new" in pdf else None
+        out = []
+        for s0, e0 in zip(starts, ends):
+            nf = None if newf is None else newf[s0:e0]
+            if e0 - s0 < 2 or (nf is not None and not nf.any()):
+                continue
+            ia, ib, s = _cell_pairs_arrays(ids[s0:e0], vm[s0:e0], nf, threshold, cell_cap)
+            if len(ia):
+                out.append((ia, ib, s))
+        if not out:
+            return None
+        ia, ib, s = (np.concatenate(c) for c in zip(*out))
+        return pd.DataFrame({"id_a": ia, "id_b": ib, "sim": s})
+
+    return _key_blocks(cells, "cell", block, "id_a long, id_b long, sim double")
 
 
 def semantic_cell_stats(

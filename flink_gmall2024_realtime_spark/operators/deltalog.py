@@ -32,10 +32,10 @@ cardinality/size/CRC all cross-checked; merge-on-read masks rows in
 both the audit reader and the distributed ``delta_scan`` via
 ``_metadata.row_index`` anti-joins). Unknown features refuse BY NAME.
 
-This is the open-format twin of the engine's own versioned keyed store
-(``streaming/sinks.py`` version chain): the same reproducible
-training-data-snapshot guarantee (leakage-free re-runs via
-``version=``) against a table laid out by ANY Delta writer.
+This is the read side of the engine's versioned keyed store
+(``streaming/delta.py``): the same reproducible training-data-snapshot
+guarantee (leakage-free re-runs via ``version=``) against a table laid
+out by ANY Delta writer.
 
 Reference scope note: the reference app (hellohappyworld/
 flink-gmall2024-realtime) has no lake-format path; this is part of the

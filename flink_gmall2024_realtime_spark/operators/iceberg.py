@@ -2909,7 +2909,7 @@ class IcebergAppendSink:
         tolerates nothing."""
         if expected_state is None or md is None:
             return
-        from ..streaming.versioned import ConcurrentWriteError
+        from ..streaming.delta import ConcurrentWriteError
 
         cur = self._live_signature()
         if exact:

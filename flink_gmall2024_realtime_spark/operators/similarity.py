@@ -315,27 +315,68 @@ def _complete_key_blocks(batches, key_col: str = "_k"):
     contain only COMPLETE key groups: the trailing (possibly incomplete)
     key's rows are carried into the next batch and flushed at end-of-
     partition. Memory is bounded by one Arrow batch plus the largest single
-    key group — the same bound a cogroup holds. Requires rows sorted
-    ascending by ``key_col`` within the partition (``searchsorted`` relies
-    on it)."""
+    key group — the same bound a cogroup holds.
+
+    The carried group is a list of frames concatenated once when the group
+    closes, so a group spanning B batches costs O(rows), not O(B^2). Rows
+    must be sorted ascending by ``key_col`` (``searchsorted`` relies on it);
+    a key that decreases within a batch or across the carry raises
+    ``ValueError`` — an unsorted stream would split groups and silently
+    drop their pairs. Empty blocks are never yielded."""
     import numpy as np
     import pandas as pd
 
-    pend = None
+    def cat(frames):
+        return frames[0] if len(frames) == 1 else pd.concat(frames, ignore_index=True)
+
+    pend, last = [], None  # frames of the open trailing group, its key
     for pdf in batches:
-        if pend is not None:
-            pdf = pd.concat([pend, pdf], ignore_index=True)
-            pend = None
         if len(pdf) == 0:
             continue
         ks = pdf[key_col].to_numpy()
+        if (ks[1:] < ks[:-1]).any() or (pend and ks[0] < last):
+            raise ValueError(
+                f"key-block input is not sorted ascending by {key_col!r}; "
+                "repartition and sortWithinPartitions by the key first"
+            )
         cut = int(np.searchsorted(ks, ks[-1], side="left"))
-        pend = pdf.iloc[cut:]
-        head = pdf.iloc[:cut]
-        if len(head):
-            yield head
-    if pend is not None and len(pend):
-        yield pend
+        if cut == 0 and pend and ks[0] == last:
+            pend.append(pdf)  # the whole batch continues the open group
+            continue
+        head = pend + ([pdf.iloc[:cut]] if cut else [])
+        if head:
+            yield cat(head)
+        pend, last = [pdf.iloc[cut:]], ks[-1]
+    if pend:
+        yield cat(pend)
+
+
+def _key_blocks(df: DataFrame, key: str, block_fn, schema: str) -> DataFrame:
+    """The keyed-block streaming scaffold: ONE hash exchange on ``key``, a
+    partition-local sort, and a ``mapInPandas`` pass that regroups the
+    sorted stream into complete key blocks (``_complete_key_blocks``).
+    ``block_fn(pdf, starts, ends)`` runs once per block — so a vector
+    matrix is built once per block and each key group is the numpy slice
+    ``[starts[i], ends[i])`` — and returns a frame of ``schema`` rows (or
+    None). Python is invoked per Arrow batch instead of per group, which is
+    what keeps millions of constant-sized buckets/cells cheap at scale."""
+    import numpy as np
+
+    part = df.repartition(F.col(key)).sortWithinPartitions(key)
+
+    def fn(batches):
+        for pdf in _complete_key_blocks(batches, key):
+            ks = pdf[key].to_numpy()
+            bounds = np.flatnonzero(ks[1:] != ks[:-1]) + 1
+            out = block_fn(
+                pdf,
+                np.concatenate(([0], bounds)),
+                np.concatenate((bounds, [len(ks)])),
+            )
+            if out is not None and len(out):
+                yield out
+
+    return part.mapInPandas(fn, schema)
 
 
 def _score_grouped(corpus_side: DataFrame, query_side: DataFrame, key: str, k: int, dim: int) -> DataFrame:
@@ -350,17 +391,14 @@ def _score_grouped(corpus_side: DataFrame, query_side: DataFrame, key: str, k: i
     ``row_number`` window is exact over the candidate set.
 
     Execution (r16, guide §2.4/§4): both sides union under a role tag and
-    share ONE hash exchange on the key + a partition-local sort; scoring is
-    a ``mapInPandas`` pass that regroups the sorted stream into complete
-    key blocks (``_complete_key_blocks``) and scores each group with
-    ``_score_arrays``. The prior ``cogroup().applyInPandas`` form shuffled
-    each side separately (2 exchanges) and paid the per-GROUP Python
-    dispatch + pandas-frame cost on every bucket — at ~256 rows/bucket by
-    construction (``auto_planes``), a 10^9-vector corpus has ~4M groups, so
-    per-group overhead is a real at-scale tax, not a fixture artifact.
-    Here Python is invoked per Arrow batch, the vector matrix is built once
-    per block, and groups are numpy slices. Measured at sf0.1: lsh 0.70x,
-    ivf 0.79x (pairwise medians), results bit-identical."""
+    share ONE hash exchange on the key through ``_key_blocks``; each group
+    is scored with ``_score_arrays``. The prior ``cogroup().applyInPandas``
+    form shuffled each side separately (2 exchanges) and paid the per-GROUP
+    Python dispatch + pandas-frame cost on every bucket — at ~256
+    rows/bucket by construction (``auto_planes``), a 10^9-vector corpus has
+    ~4M groups, so per-group overhead is a real at-scale tax, not a fixture
+    artifact. Measured at sf0.1: lsh 0.70x, ivf 0.79x (pairwise medians),
+    results bit-identical."""
     import numpy as np
     import pandas as pd
 
@@ -377,30 +415,24 @@ def _score_grouped(corpus_side: DataFrame, query_side: DataFrame, key: str, k: i
             F.col("qv").alias("_v"),
         )
     )
-    part = u.repartition(F.col("_k")).sortWithinPartitions("_k")
 
-    def fn(batches):
-        for pdf in _complete_key_blocks(batches):
-            ks = pdf["_k"].to_numpy()
-            isq = pdf["_q"].to_numpy()
-            ids = pdf["_id"].to_numpy(dtype=np.int64)
-            vm = _mat(pdf["_v"])
-            rows = []
-            bounds = np.flatnonzero(ks[1:] != ks[:-1]) + 1
-            starts = np.concatenate(([0], bounds))
-            ends = np.concatenate((bounds, [len(ks)]))
-            for s, e in zip(starts, ends):
-                q = isq[s:e]
-                # a group missing either side scores nothing (the cogroup
-                # emitted empty for one-sided groups too)
-                if q.all() or not q.any():
-                    continue
-                ci = np.flatnonzero(~q) + s
-                qi = np.flatnonzero(q) + s
-                rows.extend(_score_arrays(ids[ci], vm[ci], ids[qi], vm[qi], k, dim))
-            yield pd.DataFrame(rows, columns=["query_id", "neighbor_id", "sim"])
+    def block(pdf, starts, ends):
+        isq = pdf["_q"].to_numpy()
+        ids = pdf["_id"].to_numpy(dtype=np.int64)
+        vm = _mat(pdf["_v"])
+        rows = []
+        for s, e in zip(starts, ends):
+            q = isq[s:e]
+            # a group missing either side scores nothing (the cogroup
+            # emitted empty for one-sided groups too)
+            if q.all() or not q.any():
+                continue
+            ci = np.flatnonzero(~q) + s
+            qi = np.flatnonzero(q) + s
+            rows.extend(_score_arrays(ids[ci], vm[ci], ids[qi], vm[qi], k, dim))
+        return pd.DataFrame(rows, columns=["query_id", "neighbor_id", "sim"])
 
-    return part.mapInPandas(fn, "query_id long, neighbor_id long, sim double")
+    return _key_blocks(u, "_k", block, "query_id long, neighbor_id long, sim double")
 
 
 def estimated_row_count(df: DataFrame, with_source: bool = False):

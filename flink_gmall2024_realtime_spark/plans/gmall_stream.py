@@ -487,6 +487,50 @@ def k3_upsert_final_state(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def _dim_store_asof(
+    spark: SparkSession, sf_dir: str, prefix: str, make_store,
+    clean_log: bool = False,
+) -> DataFrame:
+    """Three deterministic dim micro-batches (batch b = docs with
+    doc_id%3==b, key doc_id%37, order doc_id; batch 2 carries deletes)
+    committed through the keyed store ``make_store(path)`` builds, read
+    back with ``read_as_of(1)``: the table AS IT STOOD before batch 2,
+    proving an old snapshot survives later commits (the
+    reproducible-training-run contract). ``clean_log`` prunes the JSON log
+    after batch 1 and replays batch 1 over the cleaned log, so the batch-2
+    commit and the time travel both resolve through the checkpoint. The
+    shared oracle folds batches 0+1 independently (batch-1 rows overwrite
+    batch-0 per key; within a batch the max-doc_id row wins)."""
+    import shutil as _shutil
+    import tempfile
+
+    docs = _t(spark, sf_dir, "documents").select(
+        (F.col("doc_id") % 37).alias("k"),
+        F.col("doc_id").alias("v"),
+        (F.col("doc_id") % 3).cast("int").alias("src_batch"),
+        F.col("doc_id").alias("ord"),
+    )
+    tmp = tempfile.mkdtemp(prefix=prefix)
+    try:
+        store = make_store(tmp)
+        write = store.sink()
+        for b in range(3):
+            batch = docs.filter(F.col("src_batch") == b).withColumn(
+                "op",
+                F.when(
+                    (F.lit(b) == 2) & (F.col("k") % 5 == 0), F.lit("delete")
+                ).otherwise(F.lit("u")),
+            )
+            write(batch, b)
+            if clean_log and b == 1:
+                store.clean_log()  # prune the JSON prefix mid-stream
+                write(batch, b)  # at-least-once replay over a cleaned log
+        asof = store.read_as_of(1).select("k", "v", "src_batch").toPandas()
+    finally:
+        _shutil.rmtree(tmp, ignore_errors=True)
+    return spark.createDataFrame(asof, "k long, v long, src_batch int")
+
+
 @register(
     "dim_version_store_asof",
     oracle="""
@@ -502,47 +546,20 @@ FROM r GROUP BY k
     survey_ids=("K5", "W6"),
 )
 def dim_version_store_asof(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Versioned keyed store time travel (r11 — VERDICT r10 #4): three
-    deterministic dim micro-batches (batch b = docs with doc_id%3==b,
-    key doc_id%37, order doc_id; batch 2 carries deletes) commit through
-    ``VersionedKeyedStore`` — atomic version claim, immutable snapshot
-    dirs, manifest chain, ``_latest`` rename as the commit point — and
-    the entry reads ``read_as_of(2)``: the table AS IT STOOD before
-    batch 2, proving an old snapshot survives later commits byte-stable
-    (the reproducible-training-run contract). The oracle folds batches
-    0+1 independently (batch-1 rows overwrite batch-0 per key; within a
-    batch the max-doc_id row wins). The store is driver-local here only
-    because the fixture fits; snapshots are parquet dirs, so at scale
-    the same chain lives on the object store and readers stay fully
-    distributed (``streaming/versioned.py``)."""
-    import shutil as _shutil
-    import tempfile
+    """Versioned keyed store time travel (r11 — VERDICT r10 #4): the dim
+    micro-batches of ``_dim_store_asof`` commit through a plain
+    ``DeltaKeyedStore`` (one MERGE-as-compaction Delta commit per batch,
+    JSON log only) and the entry reads version 1 — the table before
+    batch 2 (Delta versions are 0-based). The store is driver-local here
+    only because the fixture fits; snapshots are parquet files under a
+    Delta log, so at scale the same table lives on the object store and
+    readers stay fully distributed (``streaming/delta.py``)."""
+    from ..streaming.delta import DeltaKeyedStore
 
-    from ..streaming.versioned import VersionedKeyedStore
-
-    docs = _t(spark, sf_dir, "documents").select(
-        (F.col("doc_id") % 37).alias("k"),
-        F.col("doc_id").alias("v"),
-        (F.col("doc_id") % 3).cast("int").alias("src_batch"),
-        F.col("doc_id").alias("ord"),
-        F.col("doc_id"),
+    return _dim_store_asof(
+        spark, sf_dir, "dim_version_store_asof_",
+        lambda path: DeltaKeyedStore(spark, path, "k", "ord", type_col="op"),
     )
-    tmp = tempfile.mkdtemp(prefix="dim_version_store_asof_")
-    try:
-        store = VersionedKeyedStore(spark, tmp, "k", "ord", type_col="op")
-        write = store.sink()
-        for b in range(3):
-            batch = docs.filter(F.col("src_batch") == b).withColumn(
-                "op",
-                F.when(
-                    (F.lit(b) == 2) & (F.col("k") % 5 == 0), F.lit("delete")
-                ).otherwise(F.lit("u")),
-            ).drop("doc_id")
-            write(batch, b)
-        asof = store.read_as_of(2).select("k", "v", "src_batch").toPandas()
-    finally:
-        _shutil.rmtree(tmp, ignore_errors=True)
-    return spark.createDataFrame(asof, "k long, v long, src_batch int")
 
 
 @register(
@@ -561,51 +578,22 @@ FROM r GROUP BY k
 )
 def delta_keyed_store_asof(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Delta-backed keyed store time travel (r12 — VERDICT r11 #6): the
-    SAME three dim micro-batches as ``dim_version_store_asof`` (same
-    oracle — the open-format twin must land on identical state) commit
-    through ``DeltaKeyedStore``: each batch is a MERGE-as-compaction
-    Delta commit (remove old live files + add the merged snapshot) with
-    txn-based replay idempotence, a checkpoint parquet every 2 commits,
-    and ``clean_log()`` pruning the JSON prefix MID-STREAM after batch 1
-    — so the batch-2 commit and the ``read_as_of(1)`` time travel both
-    resolve through the checkpoint, not the JSON log. Batch 1 is also
-    REPLAYED once (skipped via txn rows). Proves the r12 Delta surface
-    end-to-end under the oracle: nested-parquet checkpoint decode,
-    pruned-log replay, and keyed-upsert semantics equal to the manifest
-    chain (``streaming/delta.py``)."""
-    import shutil as _shutil
-    import tempfile
-
+    SAME dim micro-batches and oracle as ``dim_version_store_asof``,
+    through a ``DeltaKeyedStore`` writing a checkpoint parquet every 2
+    commits with ``clean_log()`` pruning the JSON prefix MID-STREAM after
+    batch 1 and batch 1 REPLAYED once (skipped via txn rows). Proves the
+    Delta surface end-to-end under the oracle: nested-parquet checkpoint
+    decode, pruned-log replay, and keyed-upsert semantics
+    (``streaming/delta.py``)."""
     from ..streaming.delta import DeltaKeyedStore
 
-    docs = _t(spark, sf_dir, "documents").select(
-        (F.col("doc_id") % 37).alias("k"),
-        F.col("doc_id").alias("v"),
-        (F.col("doc_id") % 3).cast("int").alias("src_batch"),
-        F.col("doc_id").alias("ord"),
-        F.col("doc_id"),
+    return _dim_store_asof(
+        spark, sf_dir, "delta_keyed_store_asof_",
+        lambda path: DeltaKeyedStore(
+            spark, path, "k", "ord", type_col="op", checkpoint_interval=2
+        ),
+        clean_log=True,
     )
-    tmp = tempfile.mkdtemp(prefix="delta_keyed_store_asof_")
-    try:
-        store = DeltaKeyedStore(
-            spark, tmp, "k", "ord", type_col="op", checkpoint_interval=2
-        )
-        write = store.sink()
-        for b in range(3):
-            batch = docs.filter(F.col("src_batch") == b).withColumn(
-                "op",
-                F.when(
-                    (F.lit(b) == 2) & (F.col("k") % 5 == 0), F.lit("delete")
-                ).otherwise(F.lit("u")),
-            ).drop("doc_id")
-            write(batch, b)
-            if b == 1:
-                store.clean_log()  # prune the JSON prefix mid-stream
-                write(batch, b)  # at-least-once replay over a cleaned log
-        asof = store.read_as_of(1).select("k", "v", "src_batch").toPandas()
-    finally:
-        _shutil.rmtree(tmp, ignore_errors=True)
-    return spark.createDataFrame(asof, "k long, v long, src_batch int")
 
 
 @register(
@@ -698,40 +686,16 @@ def delta_bucketed_store_asof(spark: SparkSession, sf_dir: str) -> DataFrame:
     membership (encoded in file names) provably survives checkpoint
     resume. ``read_as_of(1)`` time-travels through the checkpoint
     (``streaming/delta.py`` ``BucketedDeltaKeyedStore``)."""
-    import shutil as _shutil
-    import tempfile
-
     from ..streaming.delta import BucketedDeltaKeyedStore
 
-    docs = _t(spark, sf_dir, "documents").select(
-        (F.col("doc_id") % 37).alias("k"),
-        F.col("doc_id").alias("v"),
-        (F.col("doc_id") % 3).cast("int").alias("src_batch"),
-        F.col("doc_id").alias("ord"),
-        F.col("doc_id"),
-    )
-    tmp = tempfile.mkdtemp(prefix="delta_bucketed_store_asof_")
-    try:
-        store = BucketedDeltaKeyedStore(
-            spark, tmp, "k", "ord", type_col="op", n_buckets=8,
+    return _dim_store_asof(
+        spark, sf_dir, "delta_bucketed_store_asof_",
+        lambda path: BucketedDeltaKeyedStore(
+            spark, path, "k", "ord", type_col="op", n_buckets=8,
             checkpoint_interval=2,
-        )
-        write = store.sink()
-        for b in range(3):
-            batch = docs.filter(F.col("src_batch") == b).withColumn(
-                "op",
-                F.when(
-                    (F.lit(b) == 2) & (F.col("k") % 5 == 0), F.lit("delete")
-                ).otherwise(F.lit("u")),
-            ).drop("doc_id")
-            write(batch, b)
-            if b == 1:
-                store.clean_log()  # prune the JSON prefix mid-stream
-                write(batch, b)  # at-least-once replay over a cleaned log
-        asof = store.read_as_of(1).select("k", "v", "src_batch").toPandas()
-    finally:
-        _shutil.rmtree(tmp, ignore_errors=True)
-    return spark.createDataFrame(asof, "k long, v long, src_batch int")
+        ),
+        clean_log=True,
+    )
 
 
 @register(

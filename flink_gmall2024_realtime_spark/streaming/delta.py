@@ -4,10 +4,9 @@
 Each micro-batch becomes one Delta commit: the batch's rows land in
 parquet data files, then the commit is published by atomically linking a
 fully-written ``_delta_log/{version:020d}.json`` into place — the
-putIfAbsent primitive the actual Delta protocol commits through. That
-gives the three guarantees the versioned keyed store
-(``streaming/versioned.py``) documents, but in an OPEN format any Delta
-reader can consume:
+putIfAbsent primitive the actual Delta protocol commits through. The log
+is the idempotent, replayable commit point a Structured Streaming sink
+needs, in an OPEN format any Delta reader can consume:
 
 - **exactly-once under at-least-once replay**: every commit carries a
   ``txn`` action (Delta's setTransaction: appId + monotonically
@@ -58,7 +57,11 @@ import time
 
 from pyspark.sql import DataFrame
 
-from .versioned import ConcurrentWriteError
+
+class ConcurrentWriteError(RuntimeError):
+    """Another live writer moved the table under this commit. The loser
+    must not silently retry on top of state it did not observe."""
+
 
 _SPARK_TO_DELTA = {
     "long": "long",
@@ -653,15 +656,20 @@ class DeltaAppendSink:
                 # another writer landed between our snapshot and this
                 # attempt: every file we remove/re-add must be UNCHANGED
                 # (same add action, same deletionVector) or the
-                # mutation was computed against stale state
+                # mutation was computed against stale state; one
+                # computed against an EMPTY table conflicts with any commit
                 live_now = self._replay_state(head)["live"]
-                for rel, seen in expected_files.items():
-                    if live_now.get(rel) != seen:
-                        raise ConcurrentWriteError(
-                            f"concurrent update to {rel!r} between "
-                            f"version {snapshot_version} and {head}; "
-                            "recompute the mutation against the new head"
-                        )
+                drifted = [
+                    rel for rel, seen in expected_files.items()
+                    if live_now.get(rel) != seen
+                ]
+                if drifted or not expected_files:
+                    raise ConcurrentWriteError(
+                        f"concurrent update to "
+                        f"{drifted[0] if drifted else 'the empty table'!r} "
+                        f"between version {snapshot_version} and {head}; "
+                        "recompute the mutation against the new head"
+                    )
             next_v = head + 1
             lines = [txn, info]
             if extra_lines:
@@ -1579,8 +1587,8 @@ class DeltaAppendSink:
 
 
 class DeltaKeyedStore(DeltaAppendSink):
-    """Keyed UPSERT (MERGE) store over the Delta log — the open-format
-    twin of ``VersionedKeyedStore`` (K5's versioned manifest chain),
+    """Keyed UPSERT (MERGE) store over the Delta log — the engine's
+    versioned keyed store (K5: dim/serving tables with time travel),
     sharing the append sink's putIfAbsent commit, txn-based replay
     idempotence, checkpointing and log cleanup.
 
@@ -1593,9 +1601,13 @@ class DeltaKeyedStore(DeltaAppendSink):
     one file and every historical version remains time-travelable
     (``read_as_of``) until vacuumed.
 
+    A merge computed against a snapshot that another writer has since
+    replaced raises ``ConcurrentWriteError`` instead of committing a
+    second live snapshot (single logical writer per table).
+
     Dim/serving-table shape by design (one driver-side Arrow file per
-    merged snapshot, like the manifest-chain store it twins); big fact
-    streams belong on ``DeltaAppendSink.commit_batch_distributed``."""
+    merged snapshot); big fact streams belong on
+    ``DeltaAppendSink.commit_batch_distributed``."""
 
     def __init__(
         self,
@@ -1720,6 +1732,8 @@ class DeltaKeyedStore(DeltaAppendSink):
         return self._commit_actions(
             batch, batch_id, [self._add_action(rel, table.num_rows)],
             removes=old, extra_lines=extra,
+            expected_files={r: state["live"][r] for r in old},
+            snapshot_version=head,
         )
 
     def commit_batch_distributed(self, batch, batch_id):

@@ -119,17 +119,22 @@ def dim_app_pipeline(
         pruned = routed.withColumn(
             "data", F.map_filter(F.col("data"), lambda k, _v: F.array_contains(keep, k))
         )
-        for sink_table in [r["sink_table"] for r in cfg_rows if r["op"] != "d"]:
-            part = pruned.filter(F.col("sink_table") == sink_table).select(
-                F.col("data")[F.col("sink_row_key")].alias("row_key"),
-                "type",
-                "data",
-                "ts",
-            )
-            writer = keyed_upsert_sink(
-                spark, catalog.path(sink_table) + "/table", "row_key", "ts", type_col="type"
-            )
-            writer(part, batch_id)
+        # one scan of the CDC batch however many dim tables it routes to
+        batch.persist()
+        try:
+            for sink_table in [r["sink_table"] for r in cfg_rows if r["op"] != "d"]:
+                part = pruned.filter(F.col("sink_table") == sink_table).select(
+                    F.col("data")[F.col("sink_row_key")].alias("row_key"),
+                    "type",
+                    "data",
+                    "ts",
+                )
+                writer = keyed_upsert_sink(
+                    spark, catalog.path(sink_table) + "/table", "row_key", "ts", type_col="type"
+                )
+                writer(part, batch_id)
+        finally:
+            batch.unpersist()
 
     return process_batch
 

@@ -601,7 +601,7 @@ def semantic_dedup_sink(
     batch via the same head-pairs + hub-star degradation."""
     import numpy as np
 
-    from ..operators.dedup import SIMHASH_BUCKET_CAP
+    from ..operators.dedup import SIMHASH_BUCKET_CAP, _semantic_cell_pairs
     from ..operators.similarity import assign_nearest_cells
 
     if cell_cap is None:
@@ -629,7 +629,12 @@ def semantic_dedup_sink(
                 idx = spark.read.schema(CELLS_SCHEMA).parquet(*paths).select("cell", "vid", "vec")
             else:
                 idx = spark.createDataFrame([], CELLS_SCHEMA)
-            pairs = _semantic_new_vs_all_pairs(new_cells, idx, threshold, cell_cap)
+            # the batch operator's cell scorer, restricted to pairs that
+            # touch a NEW vector: per-batch emissions union to its pair set
+            both = idx.withColumn("is_new", F.lit(False)).unionByName(
+                new_cells.select("cell", "vid", "vec").withColumn("is_new", F.lit(True))
+            )
+            pairs = _semantic_cell_pairs(both, threshold, cell_cap)
             pairs.write.mode("overwrite").parquet(os.path.join(pairs_data, f"batch={batch_id}"))
             _mark_committed(pairs_path, batch_id)
         if not _committed(index_path, batch_id):
@@ -643,63 +648,6 @@ def semantic_dedup_sink(
             _mark_committed(index_path, batch_id)
 
     return write
-
-
-def _semantic_new_vs_all_pairs(
-    new_cells: DataFrame, idx: DataFrame, threshold: float, cell_cap: int
-) -> DataFrame:
-    """One groupBy(cell) over (index ∪ batch) rows scoring exactly the
-    pairs that involve at least one NEW vector — delegates to the SAME
-    numpy core as the batch scorer (``dedup._cell_pairs_arrays``:
-    identical-vector collapse, capped group expansion, rep-level
-    star backstop, dim-sequential arithmetic), so per-batch emissions
-    union to the batch operator's pair set.
-
-    r16 (the ANN-scorer/semantic_dedup_pairs rewire): cells scale with the
-    corpus, so the pairing is one hash exchange + partition-local sort +
-    a streaming ``mapInPandas`` over complete cell blocks instead of a
-    per-GROUP ``applyInPandas`` dispatch."""
-    import numpy as np
-    import pandas as pd
-
-    from ..operators.dedup import _cell_pairs_arrays
-    from ..operators.similarity import _complete_key_blocks, _mat
-
-    both = idx.withColumn("is_new", F.lit(False)).unionByName(
-        new_cells.select("cell", "vid", "vec").withColumn("is_new", F.lit(True))
-    )
-    part = both.repartition(F.col("cell")).sortWithinPartitions("cell")
-
-    def fn(batches):
-        for pdf in _complete_key_blocks(batches, "cell"):
-            ks = pdf["cell"].to_numpy()
-            ids = pdf["vid"].to_numpy(dtype=np.int64)
-            newf_all = pdf["is_new"].to_numpy(dtype=bool)
-            vm = _mat(pdf["vec"])
-            out_a, out_b, out_s = [], [], []
-            bounds = np.flatnonzero(ks[1:] != ks[:-1]) + 1
-            starts = np.concatenate(([0], bounds))
-            ends = np.concatenate((bounds, [len(ks)]))
-            for s0, e0 in zip(starts, ends):
-                if e0 - s0 < 2 or not newf_all[s0:e0].any():
-                    continue
-                ia, ib, s = _cell_pairs_arrays(
-                    ids[s0:e0], vm[s0:e0], newf_all[s0:e0], threshold, cell_cap
-                )
-                if len(ia):
-                    out_a.append(ia)
-                    out_b.append(ib)
-                    out_s.append(s)
-            if out_a:
-                yield pd.DataFrame(
-                    {
-                        "id_a": np.concatenate(out_a),
-                        "id_b": np.concatenate(out_b),
-                        "sim": np.concatenate(out_s),
-                    }
-                )
-
-    return part.mapInPandas(fn, "id_a long, id_b long, sim double")
 
 
 def pq_index_sink(

@@ -67,7 +67,6 @@ _SLOW_TESTS = frozenset(
 "tests/test_curation.py::test_hll_register_sink_streaming_equals_batch_and_replay_safe",
 "tests/test_deltalog.py::TestBucketedDeltaKeyedStore::test_state_equivalence_with_single_file_store",
 "tests/test_deltalog.py::TestDeltaKeyedStore::test_checkpoint_and_clean_log_keyed",
-"tests/test_deltalog.py::TestDeltaKeyedStore::test_equivalence_with_versioned_keyed_store",
 "tests/test_deltalog.py::TestDeltaKeyedStore::test_replay_equals_batch_and_restart_twice",
 "tests/test_deltalog.py::TestDeltaSinkCheckpointing::test_checkpoint_after_clean_uses_prior_checkpoint",
 "tests/test_deltalog.py::TestMultiPartSinkCheckpoints::test_sink_multipart_checkpoint_roundtrip",

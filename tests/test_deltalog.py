@@ -5,6 +5,7 @@ from __future__ import annotations
 
 import io
 import json
+import os
 import zipfile
 
 import pytest
@@ -715,8 +716,9 @@ class TestDeltaSinkCheckpointing:
 
 
 class TestDeltaKeyedStore:
-    """r12: keyed MERGE upserts over the Delta log — open-format twin of
-    VersionedKeyedStore (VERDICT r11 #6)."""
+    """r12: keyed MERGE upserts over the Delta log — the engine's versioned
+    keyed store (VERDICT r11 #6); its snapshot contract is also covered
+    in tests/test_versioned.py."""
 
     def _batches(self, spark):
         return [
@@ -770,6 +772,10 @@ class TestDeltaKeyedStore:
         ]
         with pytest.raises(Exception):
             store.read_as_of(0).collect()
+        # the log (the lineage) survives vacuum; unknown versions refuse
+        assert store.committed_versions() == [0, 1, 2]
+        with pytest.raises(ValueError, match="not committed"):
+            store.read_as_of(99)
 
     def test_replay_equals_batch_and_restart_twice(self, spark, tmp_path):
         # once-through vs replayed-twice vs restarted-mid-stream: all
@@ -827,26 +833,6 @@ class TestDeltaKeyedStore:
         store = self._store(spark, str(tmp_path / "tbl"))
         with pytest.raises(NotImplementedError, match="dim-shaped"):
             store.commit_batch_distributed(None, 0)
-
-    def test_equivalence_with_versioned_keyed_store(self, spark, tmp_path):
-        from flink_gmall2024_realtime_spark.streaming.versioned import (
-            VersionedKeyedStore,
-        )
-
-        delta = self._store(spark, str(tmp_path / "delta"))
-        chain = VersionedKeyedStore(
-            spark, str(tmp_path / "chain"), key="k", order_col="ts",
-            type_col="op",
-        )
-        for i, b in enumerate(self._batches(spark)):
-            delta.commit_batch(b, i)
-            chain.commit_batch(b, i)
-        assert self._rows(delta.read_latest()) == self._rows(chain.read_latest())
-        # per-version history matches too (chain versions are 1-based)
-        for v in range(3):
-            assert self._rows(delta.read_as_of(v)) == self._rows(
-                chain.read_as_of(v + 1)
-            )
 
 
 class TestDeltaScan:
@@ -2496,10 +2482,8 @@ class TestR14Hardening:
         import pytest as _pytest
 
         from flink_gmall2024_realtime_spark.streaming.delta import (
-            DeltaAppendSink,
-        )
-        from flink_gmall2024_realtime_spark.streaming.versioned import (
             ConcurrentWriteError,
+            DeltaAppendSink,
         )
 
         path = str(tmp_path / "tbl")

@@ -1097,7 +1097,7 @@ class TestIcebergDeleteWhere:
             IcebergAppendSink,
             iceberg_scan,
         )
-        from flink_gmall2024_realtime_spark.streaming.versioned import (
+        from flink_gmall2024_realtime_spark.streaming.delta import (
             ConcurrentWriteError,
         )
 
@@ -1161,7 +1161,7 @@ class TestIcebergDeleteWhere:
         from flink_gmall2024_realtime_spark.operators.iceberg import (
             IcebergKeyedStore,
         )
-        from flink_gmall2024_realtime_spark.streaming.versioned import (
+        from flink_gmall2024_realtime_spark.streaming.delta import (
             ConcurrentWriteError,
         )
 

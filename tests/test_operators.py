@@ -4,6 +4,8 @@ from __future__ import annotations
 
 from datetime import datetime
 
+import pytest
+
 from pyspark.sql import Row
 from pyspark.sql import functions as F
 
@@ -291,22 +293,33 @@ def test_simhash_identical_docs_equal(spark):
     assert out[1] != out[3]
 
 
-def test_complete_key_blocks_carries_split_groups():
-    """The streaming scorer's batch regrouper (r16): a key group split
+def test_complete_key_blocks_carries_split_groups(spark, sf_dir, tmp_path):
+    """The keyed-block scaffold's batch regrouper (r16): a key group split
     across Arrow batch boundaries must be reassembled before scoring — the
     trailing key of each batch is carried forward and flushed at
     end-of-partition. Every block emitted holds only complete groups, and
-    concatenating the blocks reproduces the input rows exactly."""
+    concatenating the blocks reproduces the input rows exactly. Unsorted
+    input fails loudly. End to end, with ``maxRecordsPerBatch`` so small
+    that a key group spans >= 3 Arrow batches, all three scaffold callers
+    match a default-batch run: ANN scoring, semantic dedup, and its
+    streaming sink (whose emissions union to the batch pair set)."""
+    import os
+
     import pandas as pd
 
     from flink_gmall2024_realtime_spark.operators.similarity import (
         _complete_key_blocks,
+        assign_nearest_cells,
+        ivf_topk,
+        kmeans_centroids_micro,
+        lsh_topk,
     )
+    from flink_gmall2024_realtime_spark.streaming import sinks
 
     rows = [(k, i) for k in (1, 1, 1, 2, 3, 3, 3, 3, 4) for i in [0]]
     rows = [(k, i) for i, (k, _) in enumerate(rows)]
     full = pd.DataFrame(rows, columns=["_k", "v"])
-    for cuts in ([3], [1, 2, 5], [2], [1, 1, 1, 1, 1, 1, 1, 1]):
+    for cuts in ([3], [1, 2, 5], [2], [1, 1, 1, 1, 1, 1, 1, 1], [0, 4, 0]):
         # split the sorted frame into batches at the given sizes
         batches, pos = [], 0
         for c in cuts:
@@ -314,6 +327,7 @@ def test_complete_key_blocks_carries_split_groups():
             pos += c
         batches.append(full.iloc[pos:])
         blocks = list(_complete_key_blocks(iter(batches)))
+        assert all(len(b) for b in blocks)
         # each block holds only whole key groups (no key spans two blocks)
         seen = []
         for b in blocks:
@@ -324,6 +338,52 @@ def test_complete_key_blocks_carries_split_groups():
         cat = pd.concat(blocks, ignore_index=True)
         assert list(cat["v"]) == list(full["v"])
         assert list(cat["_k"]) == list(full["_k"])
+    # a key decreasing within a batch or across the carry is refused
+    for batches in ([full.iloc[::-1]], [full.iloc[4:], full.iloc[:4]]):
+        with pytest.raises(ValueError, match="not sorted"):
+            list(_complete_key_blocks(iter(batches)))
+
+    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet").select(
+        "vec_id", "embedding"
+    )
+    queries = emb.filter(F.col("vec_id") % 10 == 0)
+    cen_ids, cen_micro = kmeans_centroids_micro(emb, k=8, iters=3)
+    centroids = (cen_ids, cen_micro / 1e6)
+    per_batch = 4
+    biggest = (
+        assign_nearest_cells(emb, *centroids, 1, "vid", "vec", "vec_id", "embedding")
+        .groupBy("cell").count().agg(F.max("count")).first()[0]
+    )
+    assert biggest >= 3 * per_batch
+
+    def run_all():
+        outs = [
+            ivf_topk(emb, queries, k=5, nprobe=2),
+            lsh_topk(emb, queries, k=5, planes=4),
+            dedup.semantic_dedup_pairs(emb, centroids, threshold=0.4),
+        ]
+        return [sorted(map(tuple, df.collect())) for df in outs]
+
+    want = run_all()
+    conf = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    old = spark.conf.get(conf)
+    spark.conf.set(conf, str(per_batch))
+    try:
+        got = run_all()
+        # the streaming sink's per-batch emissions union to the batch pairs
+        root = str(tmp_path)
+        write = sinks.semantic_dedup_sink(
+            spark, centroids, os.path.join(root, "idx"), os.path.join(root, "pairs"),
+            threshold=0.4,
+        )
+        for i in range(2):
+            write(emb.filter(F.col("vec_id") % 2 == i), i)
+        sink_pairs = spark.read.parquet(os.path.join(root, "pairs", "data"))
+        got_sink = sorted(map(tuple, sink_pairs.select("id_a", "id_b", "sim").collect()))
+    finally:
+        spark.conf.set(conf, old)
+    assert all(want) and got == want
+    assert got_sink == want[2]
 
 
 def test_brute_force_topk_self_similarity_excluded(spark):
@@ -344,6 +404,20 @@ def test_lang_id_markers(spark):
     )
     out = {r["doc_id"]: r["l"] for r in df.select("doc_id", text.lang_id(F.col("text")).alias("l")).collect()}
     assert out == {1: "en", 2: "es", 3: "und"}
+
+
+def test_marker_hits_degenerate_markers(spark):
+    """An empty marker set counts 0 hits; a marker that is empty or holds
+    whitespace can never equal a token, so it fails loudly."""
+    df = spark.createDataFrame([Row(t="the cat the"), Row(t="")])
+    got = df.select(
+        text.marker_hits(F.col("t"), ()).alias("none"),
+        text.marker_hits(F.col("t"), ("the",)).alias("the"),
+    ).collect()
+    assert [(r["none"], r["the"]) for r in got] == [(0, 2), (0, 0)]
+    for bad in (("the", "the cat"), ("",), ("a\tb",)):
+        with pytest.raises(ValueError, match="single non-empty tokens"):
+            text.marker_hits(F.col("t"), bad)
 
 
 def test_md5_long_range(spark):

@@ -341,6 +341,37 @@ def test_dim_app_pipeline_end_to_end(spark, tmp_path):
     assert skus[0]["data"] == {"id": "9", "price": "5"}
 
 
+def test_dim_app_pipeline_reads_each_batch_row_once(spark, tmp_path):
+    """A CDC micro-batch routed to two dim tables is scanned once: the
+    query's numInputRows equals the rows written, not rows x tables."""
+    schema = "`table` string, type string, data map<string,string>, ts long"
+    rows = [
+        ("user_info", "insert", {"id": "1", "name": "a"}, 1),
+        ("user_info", "insert", {"id": "2", "name": "b"}, 1),
+        ("sku_info", "insert", {"id": "9", "price": "5"}, 1),
+    ]
+    src = os.path.join(str(tmp_path), "cdc")
+    spark.createDataFrame(rows, schema).coalesce(1).write.parquet(src)
+    cfg = spark.createDataFrame(
+        [("user_info", "dim_user_info", "id,name", "id", "c"),
+         ("sku_info", "dim_sku_info", "id,price", "id", "c")],
+        "source_table string, sink_table string, sink_columns string, sink_row_key string, op string",
+    )
+    catalog = sinks.DimCatalog(os.path.join(str(tmp_path), "dimstore"))
+    q = (
+        spark.readStream.schema(schema).parquet(src)
+        .writeStream.foreachBatch(
+            pipelines.dim_app_pipeline(spark, None, cfg, catalog, str(tmp_path))
+        )
+        .option("checkpointLocation", os.path.join(str(tmp_path), "ck"))
+        .trigger(availableNow=True)
+        .start()
+    )
+    q.awaitTermination(300)
+    assert catalog.tables() == ["dim_sku_info", "dim_user_info"]
+    assert sum(p["numInputRows"] for p in q.recentProgress) == len(rows)
+
+
 def test_dwd_base_log_split_stream(spark, tmp_path):
     """R1 five-way split on a streamed JSON log file."""
     logs = [

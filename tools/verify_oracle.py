@@ -3,7 +3,11 @@
 Runs every catalog query on Spark and its DuckDB oracle on the same parquet,
 compares row count, column names, and an order-insensitive value hash.
 
-Usage: python tools/verify_oracle.py [sf_dir] [query ...]
+Usage: python tools/verify_oracle.py [sf_dir[,sf_dir...]] [query ...]
+
+A comma-separated list of SF dirs runs every named entry on each of them
+(e.g. the entries a change touches at sf0.001, sf0.01 and sf0.1). Exits
+non-zero on any failure, including an entry name the catalog lacks.
 """
 
 from __future__ import annotations
@@ -40,10 +44,8 @@ def value_hash(rows, columns) -> str:
     return h.hexdigest()[:16]
 
 
-def main() -> int:
-    sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.001"
-    only = set(sys.argv[2:])
-    spark = get_spark("verify-oracle")
+def check(spark, sf_dir: str, only: set) -> list[str]:
+    """Run the selected entries on one SF dir; return the failed names."""
     con = duckdb.connect()
     for t in TABLES:
         con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{table_path(sf_dir, t)}'")
@@ -58,10 +60,10 @@ def main() -> int:
             scols = sdf.columns
         except Exception as e:
             failures.append(name)
-            print(f"FAIL {name}: spark error: {e}")
+            print(f"FAIL {name} @ {sf_dir}: spark error: {e}")
             continue
         if spec.oracle is None:
-            print(f"ok?  {name}: rows-only ({len(srows)} rows)")
+            print(f"ok?  {name} @ {sf_dir}: rows-only ({len(srows)} rows)")
             continue
         try:
             res = con.execute(spec.oracle)
@@ -69,9 +71,10 @@ def main() -> int:
             orows = res.fetchall()
         except Exception as e:
             failures.append(name)
-            print(f"FAIL {name}: oracle error: {e}")
+            print(f"FAIL {name} @ {sf_dir}: oracle error: {e}")
             continue
         problems = []
+        sh = None
         if len(srows) != len(orows):
             problems.append(f"rows {len(srows)} vs {len(orows)}")
         if sorted(scols) != sorted(ocols):
@@ -83,7 +86,7 @@ def main() -> int:
                 problems.append(f"hash {sh} vs {oh}")
         if problems:
             failures.append(name)
-            print(f"FAIL {name}: {'; '.join(problems)}")
+            print(f"FAIL {name} @ {sf_dir}: {'; '.join(problems)}")
             # show a tiny diff sample
             sset = {tuple(norm_cell(v) for v in r) for r in srows}
             oset = {tuple(norm_cell(v) for v in r) for r in orows}
@@ -91,10 +94,30 @@ def main() -> int:
                 for row in list(diff)[:3]:
                     print(f"    {label}: {row}")
         else:
-            print(f"PASS {name} ({len(srows)} rows)")
+            print(f"PASS {name} @ {sf_dir} ({len(srows)} rows, hash {sh})")
+    con.close()
+    return failures
+
+
+def main() -> int:
+    sf_dirs = (sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.001").split(",")
+    only = set(sys.argv[2:])
+    unknown = sorted(only - set(CATALOG))
+    if unknown:
+        print(f"FAIL unknown catalog entries: {unknown}")
+        return 1
+    spark = get_spark("verify-oracle")
+    failures = []
+    for sf_dir in sf_dirs:
+        failures += [f"{name} @ {sf_dir}" for name in check(spark, sf_dir, only)]
     spark.stop()
-    print(f"\n{len(failures)} failures" if failures else "\nALL PASS")
-    return 1 if failures else 0
+    if failures:
+        print(f"\n{len(failures)} failures:")
+        for f in failures:
+            print(f"  {f}")
+        return 1
+    print("\nALL PASS")
+    return 0
 
 
 if __name__ == "__main__":
