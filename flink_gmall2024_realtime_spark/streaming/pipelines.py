@@ -16,7 +16,7 @@ from pyspark.sql import functions as F
 
 from ..operators.etl import etl_log_stream
 from ..operators.split import split_log_stream
-from .sinks import DimCatalog, keyed_upsert_sink
+from .sinks import TABLE_COL, DimCatalog, upsert_tables
 from .state import (
     FIRST_SEEN_SCHEMA,
     FIRST_SEEN_STATE,
@@ -98,11 +98,16 @@ def dim_app_pipeline(
     """The DimApp topology (DimApp.java:56-85) as one foreachBatch loop:
 
     1. apply config ops to the dim catalog (R4 DDL side effects);
-    2. broadcast-join the CDC batch with the config (J5) — the reference's
+    2. route each CDC record through a literal map from ``source_table`` to
+       its ``(table index, kept columns, row-key column)`` routes, built from
+       the config rows just collected (J5 without a join) — the reference's
        broadcast-state race machinery (W5) is unnecessary: config is read
-       fresh at the top of every batch;
-    3. prune each record's ``data`` to the config's sinkColumns (P6);
-    4. keyed upsert (insert/update) or delete into each dim table (K5).
+       fresh at the top of every batch; a source routed to several dim
+       tables explodes into one row per route;
+    3. prune each record's ``data`` to the config's sinkColumns (P6) and
+       take ``row_key`` from the pruned map;
+    4. keyed upsert (insert/update) or delete into every dim table at once
+       (K5): one merge and one write per batch (``sinks.upsert_tables``).
 
     Returns the foreachBatch function (also directly callable on batch
     DataFrames for deterministic tests).
@@ -111,30 +116,44 @@ def dim_app_pipeline(
     def process_batch(batch: DataFrame, batch_id: int) -> None:
         cfg_rows = config_df.collect()
         catalog.apply_ops(cfg_rows)
-        active_cfg = config_df.filter(F.col("op") != "d")
-        routed = batch.join(
-            F.broadcast(active_cfg.withColumnRenamed("source_table", "table")), on="table"
+        active = [r for r in cfg_rows if r["op"] != "d"]
+        tables = list(dict.fromkeys(r["sink_table"] for r in active))
+        if not tables:
+            return
+        routes: dict[str, list] = {}
+        for r in active:
+            keep = r["sink_columns"].split(",") if r["sink_columns"] is not None else []
+            routes.setdefault(r["source_table"], []).append(F.struct(
+                F.lit(tables.index(r["sink_table"])).alias(TABLE_COL),
+                F.array(*[F.lit(c) for c in keep]).cast("array<string>").alias("keep"),
+                F.lit(r["sink_row_key"]).cast("string").alias("rk"),
+            ))
+        route_map = F.create_map(*[
+            x for src, rs in routes.items() if src is not None for x in (F.lit(src), F.array(*rs))
+        ])
+        routed = batch.select(
+            F.explode(route_map[F.col("table")]).alias("r"), "type", "data", "ts"
         )
-        keep = F.split(F.col("sink_columns"), ",")
         pruned = routed.withColumn(
-            "data", F.map_filter(F.col("data"), lambda k, _v: F.array_contains(keep, k))
+            "data",
+            F.map_filter(F.col("data"), lambda k, _v: F.array_contains(F.col("r.keep"), k)),
         )
-        # one scan of the CDC batch however many dim tables it routes to
-        batch.persist()
-        try:
-            for sink_table in [r["sink_table"] for r in cfg_rows if r["op"] != "d"]:
-                part = pruned.filter(F.col("sink_table") == sink_table).select(
-                    F.col("data")[F.col("sink_row_key")].alias("row_key"),
-                    "type",
-                    "data",
-                    "ts",
-                )
-                writer = keyed_upsert_sink(
-                    spark, catalog.path(sink_table) + "/table", "row_key", "ts", type_col="type"
-                )
-                writer(part, batch_id)
-        finally:
-            batch.unpersist()
+        upsert_tables(
+            spark,
+            catalog.root,
+            [catalog.path(t) + "/table" for t in tables],
+            pruned.select(
+                F.col(f"r.{TABLE_COL}").alias(TABLE_COL),
+                F.col("data")[F.col("r.rk")].alias("row_key"),
+                "type",
+                "data",
+                "ts",
+            ),
+            batch_id,
+            "row_key",
+            "ts",
+            type_col="type",
+        )
 
     return process_batch
 

@@ -2,14 +2,14 @@
 
 The reference's sink zoo (transactional Kafka, upsert-kafka with PK
 compaction, per-record HBase puts/deletes, Doris stream-load) collapses into
-three Spark-first writers:
+four Spark-first writers plus the dim catalog:
 
 - ``append_serving_sink``   — Doris-equivalent: append parquet partitioned by
                               ``cur_date`` (FlinkSinkUtil.java:63-86 / K4)
 - ``keyed_upsert_sink``     — upsert-kafka/HBase-equivalent (K3/K5):
                               last-write-wins MERGE into a hash-bucketed
-                              keyed table (only touched buckets rewrite),
-                              delete-type rows removed
+                              keyed table, delete-type rows removed; the
+                              one-table call of ``upsert_tables``
 - ``dynamic_routing_sink``  — K2/R3: each record lands in the table named by
                               its ``sink_table`` column
 - ``jdbc_merge_sink``       — K3/K5 against a serving DATABASE: per-batch
@@ -17,6 +17,17 @@ three Spark-first writers:
                               (tested e2e against embedded Derby)
 - ``DimCatalog``            — R4 (DimApp.java:112-178): config-op-driven
                               create/drop of dim tables as metadata ops
+
+``upsert_tables`` is the one keyed-upsert implementation: rows carry the
+index of their table, and a micro-batch does one touched-set collect, one
+merge keyed on ``(table, key)`` and ONE write partitioned by
+``(table, bucket)`` into a dot-prefixed staging dir, then swaps each touched
+``bucket=NN`` into its table by two renames. Only touched buckets rewrite,
+however many tables the batch routes to (the DIM pipeline's case).
+
+The rest of the module holds the curation-side sinks (streaming LSH /
+semantic dedup indexes, PQ codes, HLL / count-min / HDR sketches, aggregate
+views), which reuse the same swap-and-heal and commit-marker patterns.
 
 All are per-micro-batch idempotent, which is what turns Spark's
 at-least-once replay into effectively-once end-to-end — the role the
@@ -75,8 +86,8 @@ def append_serving_sink(base_dir: str, table: str, partition_col: str = "cur_dat
     return write
 
 
-def upsert_batch(current: DataFrame | None, batch: DataFrame, key: str, order_col: str,
-                 type_col: str | None = None) -> DataFrame:
+def upsert_batch(current: DataFrame | None, batch: DataFrame, key: str | list[str],
+                 order_col: str, type_col: str | None = None) -> DataFrame:
     """K3/K5 core — last-write-wins merge of ``batch`` into ``current``:
 
     1. dedupe the batch by key keeping the latest (PK compaction,
@@ -84,6 +95,9 @@ def upsert_batch(current: DataFrame | None, batch: DataFrame, key: str, order_co
        ``max_by`` argmax — map-side combine, no per-key lifetime sort;
     2. rows with type 'delete' remove the key (HBase deleteCells,
        DimHBaseSinkFunction.java:34-47); others upsert.
+
+    ``key`` may name several columns (the multi-table upsert keys on
+    ``(table, key)``).
     """
     from ..operators.skew import latest_by_key
 
@@ -98,17 +112,134 @@ def upsert_batch(current: DataFrame | None, batch: DataFrame, key: str, order_co
     return merged
 
 
+TABLE_COL = "_table"
+
+
+def _heal_buckets(path: str) -> None:
+    """Finish or undo an interrupted bucket swap under ``path``. A crash
+    between the two renames leaves only ``.old_NN``: restore it. A crash
+    after the second rename leaves a stale backup: drop it. Orphaned
+    ``.tmp_*`` staging dirs are garbage either way — the uncommitted batch
+    replays, and last-write-wins makes re-merging into buckets that already
+    swapped a no-op."""
+    for d in os.listdir(path):
+        if d.startswith(".tmp_"):
+            shutil.rmtree(os.path.join(path, d), ignore_errors=True)
+        elif d.startswith(".old_"):
+            live = os.path.join(path, f"bucket={d.split('_', 1)[1]}")
+            if os.path.exists(live):
+                shutil.rmtree(os.path.join(path, d), ignore_errors=True)
+            else:
+                os.rename(os.path.join(path, d), live)
+
+
+def _data_file(bucket_dir: str) -> str:
+    return os.path.join(bucket_dir, next(
+        f for f in sorted(os.listdir(bucket_dir))
+        if f.endswith(".parquet") and not f.startswith((".", "_"))
+    ))
+
+
+def upsert_tables(spark: SparkSession, root: str, paths: list[str], rows: DataFrame,
+                  batch_id: int, key: str, order_col: str, type_col: str | None = None,
+                  n_buckets: int = 16) -> None:
+    """Last-write-wins MERGE of ``rows`` into the hash-bucketed keyed tables
+    ``paths``: each row names its table by index in the ``_table`` column.
+    One micro-batch costs one touched-set collect, one merge and one
+    partitioned write, however many tables or buckets it touches.
+
+    1. Rows are bucketed by ``pmod(xxhash64(key), n_buckets)`` and persisted.
+    2. The distinct ``(table, bucket)`` pairs are collected once.
+    3. Every touched live bucket is read with the batch's schema (no footer
+       inference); the stored column names, read from one footer per table
+       on the driver, must be the batch's or ``ValueError`` is raised.
+    4. ``upsert_batch`` keyed on ``(table, key)`` merges everything at once,
+       and one write partitioned by ``(table, bucket)`` lands in the staging
+       dir ``root/.tmp_<batch_id>`` (dot-prefixed, so neither Spark's file
+       listing nor ``DimCatalog.tables`` sees it).
+    5. Each touched ``bucket=NN`` swaps in with two renames (live aside to
+       ``.old_NN``, staged in, backup dropped); ``_heal_buckets`` repairs an
+       interrupted swap before the next write. A bucket every row of which
+       was deleted gets an empty file carrying the schema, so the table
+       stays readable."""
+    import pyarrow.parquet as pq
+    from pyspark.sql.pandas.types import to_arrow_schema
+    from pyspark.sql.types import IntegerType, StructField, StructType
+
+    for p in dict.fromkeys([root, *paths]):
+        os.makedirs(p, exist_ok=True)
+        _heal_buckets(p)
+    data_cols = [c for c in rows.columns if c != TABLE_COL]
+    data_schema = StructType([rows.schema[c] for c in data_cols])
+    read_schema = StructType([*data_schema.fields, StructField("bucket", IntegerType())])
+    bucketed = rows.withColumn(
+        "bucket",
+        F.coalesce(F.pmod(F.xxhash64(F.col(key)), F.lit(n_buckets)), F.lit(0)).cast("int"),
+    ).persist()
+    try:
+        touched = sorted(
+            (r[TABLE_COL], r["bucket"])
+            for r in bucketed.select(TABLE_COL, "bucket").distinct().collect()
+        )
+        if not touched:
+            return
+        stored = []
+        for t, path in enumerate(paths):
+            live = [os.path.join(path, f"bucket={b}") for tt, b in touched if tt == t]
+            live = [d for d in live if os.path.isdir(d)]
+            if not live:
+                continue
+            names = pq.read_schema(_data_file(live[0])).names
+            if sorted(names) != sorted(data_cols):
+                raise ValueError(
+                    f"{path} stores columns {names}, the batch carries {data_cols}"
+                )
+            stored.append(
+                spark.read.schema(read_schema)
+                .option("basePath", path)
+                .parquet(*live)
+                .withColumn(TABLE_COL, F.lit(t))
+            )
+        current = None
+        for df in stored:
+            current = df if current is None else current.unionByName(df)
+        merged = upsert_batch(current, bucketed, [TABLE_COL, key], order_col, type_col)
+        stage = os.path.join(root, f".tmp_{batch_id}")
+        (
+            merged.select(*data_cols, TABLE_COL, "bucket")
+            .write.mode("overwrite")
+            .partitionBy(TABLE_COL, "bucket")
+            .parquet(stage)
+        )
+        empty = to_arrow_schema(data_schema).empty_table()
+        for t, b in touched:
+            staged = os.path.join(stage, f"{TABLE_COL}={t}", f"bucket={b}")
+            if not os.path.isdir(staged):
+                os.makedirs(staged)
+                pq.write_table(empty, os.path.join(staged, "part-00000-empty.parquet"))
+            live = os.path.join(paths[t], f"bucket={b}")
+            old = os.path.join(paths[t], f".old_{b}")
+            if os.path.exists(live):
+                os.rename(live, old)
+            os.rename(staged, live)
+            shutil.rmtree(old, ignore_errors=True)
+        shutil.rmtree(stage, ignore_errors=True)
+    finally:
+        bucketed.unpersist()
+
+
 def keyed_upsert_sink(spark: SparkSession, path: str, key: str, order_col: str,
                       type_col: str | None = None, n_buckets: int = 16):
     """foreachBatch writer maintaining a keyed parquet table with MERGE
-    semantics (the engine's HBase-dim / upsert-kafka stand-in).
+    semantics (the engine's HBase-dim / upsert-kafka stand-in): the
+    one-table call of ``upsert_tables``.
 
     The table is hash-bucketed by key into ``bucket=NN/`` directories
     (``pmod(xxhash64(key), n_buckets)``), and a micro-batch rewrites ONLY the
     buckets containing its keys — per-batch write cost is O(touched buckets),
-    proportional to the batch, not the table. Readers use plain
-    ``spark.read.parquet(path)`` (the bucket dirs are ordinary partition
-    dirs, so key lookups also prune to one bucket).
+    proportional to the batch, not the table — in one staged write. Readers
+    use plain ``spark.read.parquet(path)`` (the bucket dirs are ordinary
+    partition dirs, so key lookups also prune to one bucket).
 
     Each bucket swap is crash-safe: the live dir is renamed aside (to a
     dot-prefixed dir Spark's file listing ignores) before the new one moves
@@ -117,49 +248,9 @@ def keyed_upsert_sink(spark: SparkSession, path: str, key: str, order_col: str,
     this writer is the seam where Delta/Iceberg MERGE INTO plugs in unchanged
     (buckets play the role of its file groups)."""
 
-    def bpath(b: int) -> str:
-        return os.path.join(path, f"bucket={b}")
-
-    def opath(b: int) -> str:
-        return os.path.join(path, f".old_{b}")
-
-    def heal_all() -> None:
-        # A crash between the two renames leaves only `.old_NN`: restore it.
-        # A crash after the second rename leaves a stale backup: drop it.
-        # Orphaned `.tmp_*` write dirs are garbage either way.
-        for d in os.listdir(path):
-            if d.startswith(".tmp_"):
-                shutil.rmtree(os.path.join(path, d), ignore_errors=True)
-            elif d.startswith(".old_"):
-                b = int(d.split("_", 1)[1])
-                if os.path.exists(bpath(b)):
-                    shutil.rmtree(opath(b), ignore_errors=True)
-                else:
-                    os.rename(opath(b), bpath(b))
-
     def write(batch: DataFrame, batch_id: int) -> None:
-        os.makedirs(path, exist_ok=True)
-        heal_all()
-        bucketed = batch.withColumn(
-            "_bucket",
-            F.coalesce(F.pmod(F.xxhash64(F.col(key)), F.lit(n_buckets)), F.lit(0)).cast("int"),
-        ).persist()
-        try:
-            touched = sorted(
-                r["_bucket"] for r in bucketed.select("_bucket").distinct().collect()
-            )
-            for b in touched:
-                current = spark.read.parquet(bpath(b)) if os.path.exists(bpath(b)) else None
-                part = bucketed.filter(F.col("_bucket") == b).drop("_bucket")
-                merged = upsert_batch(current, part, key, order_col, type_col)
-                tmp = os.path.join(path, f".tmp_{batch_id}_{b}")
-                merged.write.mode("overwrite").parquet(tmp)
-                if os.path.exists(bpath(b)):
-                    os.rename(bpath(b), opath(b))
-                os.rename(tmp, bpath(b))
-                shutil.rmtree(opath(b), ignore_errors=True)
-        finally:
-            bucketed.unpersist()
+        upsert_tables(spark, path, [path], batch.withColumn(TABLE_COL, F.lit(0)), batch_id,
+                      key, order_col, type_col, n_buckets)
 
     return write
 
@@ -954,8 +1045,11 @@ class DimCatalog:
                 os.makedirs(self.path(sink_table), exist_ok=True)
 
     def tables(self) -> list[str]:
+        """Dim tables, without the dot-prefixed staging dirs the upsert
+        writes beside them."""
         return sorted(
-            d for d in os.listdir(self.root) if os.path.isdir(os.path.join(self.root, d))
+            d for d in os.listdir(self.root)
+            if not d.startswith(".") and os.path.isdir(os.path.join(self.root, d))
         )
 
 

@@ -251,6 +251,68 @@ def test_keyed_upsert_sink_heals_interrupted_swap(spark, tmp_path):
     assert rows.get("b") == 9
 
 
+def _buckets(spark, keys, n_buckets):
+    return {
+        r["id"]: r["b"]
+        for r in spark.createDataFrame([(k,) for k in keys], "id string").select(
+            "id", F.pmod(F.xxhash64("id"), F.lit(n_buckets)).cast("int").alias("b")
+        ).collect()
+    }
+
+
+def test_keyed_upsert_sink_delete_empties_touched_bucket(spark, tmp_path):
+    """A batch whose deletes empty a touched bucket: its keys are gone, the
+    bucket keeps a schema-carrying file, and every other bucket keeps its
+    exact file listing and rows."""
+    path = os.path.join(str(tmp_path), "dim_emptied")
+    schema = "id string, type string, v string, ts long"
+    writer = sinks.keyed_upsert_sink(
+        spark, path, key="id", order_col="ts", type_col="type", n_buckets=4
+    )
+    keys = [str(i) for i in range(12)]
+    writer(spark.createDataFrame([(k, "insert", f"v{k}", 1) for k in keys], schema), 0)
+    buckets = _buckets(spark, keys, 4)
+    target = buckets["0"]
+    victims = [k for k in keys if buckets[k] == target]
+    assert len(victims) < len(keys)
+
+    def listing(d):
+        full = os.path.join(path, d)
+        return sorted((f, os.path.getmtime(os.path.join(full, f))) for f in os.listdir(full))
+
+    others = [d for d in os.listdir(path) if d.startswith("bucket=") and d != f"bucket={target}"]
+    before = {d: listing(d) for d in others}
+    writer(spark.createDataFrame([(k, "delete", None, 2) for k in victims], schema), 1)
+    assert {d: listing(d) for d in others} == before
+    assert spark.read.parquet(os.path.join(path, f"bucket={target}")).count() == 0
+    final = {r["id"]: r["v"] for r in spark.read.parquet(path).collect()}
+    assert final == {k: f"v{k}" for k in keys if k not in victims}
+
+
+def test_keyed_upsert_sink_deleting_every_row_leaves_readable_table(spark, tmp_path):
+    path = os.path.join(str(tmp_path), "dim_all_deleted")
+    schema = "id string, type string, v string, ts long"
+    writer = sinks.keyed_upsert_sink(
+        spark, path, key="id", order_col="ts", type_col="type", n_buckets=4
+    )
+    keys = [str(i) for i in range(8)]
+    writer(spark.createDataFrame([(k, "insert", "x", 1) for k in keys], schema), 0)
+    writer(spark.createDataFrame([(k, "delete", None, 2) for k in keys], schema), 1)
+    table = spark.read.parquet(path)
+    assert table.count() == 0
+    assert table.columns == ["id", "type", "v", "ts", "bucket"]
+
+
+def test_keyed_upsert_sink_rejects_changed_columns(spark, tmp_path):
+    """Stored buckets are read with the batch's schema, so a batch whose
+    columns differ from the stored ones must fail loudly, not read nulls."""
+    path = os.path.join(str(tmp_path), "dim_cols")
+    writer = sinks.keyed_upsert_sink(spark, path, key="id", order_col="ts", n_buckets=2)
+    writer(spark.createDataFrame([("a", "x", 1)], "id string, v string, ts long"), 0)
+    with pytest.raises(ValueError, match="stores columns"):
+        writer(spark.createDataFrame([("a", "y", 2)], "id string, w string, ts long"), 1)
+
+
 def test_append_sink_replay_is_idempotent(spark, tmp_path):
     """W6: an at-least-once replay of a committed micro-batch must not
     duplicate rows in the append-mode serving sink."""
@@ -370,6 +432,212 @@ def test_dim_app_pipeline_reads_each_batch_row_once(spark, tmp_path):
     q.awaitTermination(300)
     assert catalog.tables() == ["dim_sku_info", "dim_user_info"]
     assert sum(p["numInputRows"] for p in q.recentProgress) == len(rows)
+
+
+CFG_SCHEMA = (
+    "source_table string, sink_table string, sink_columns string, "
+    "sink_row_key string, op string"
+)
+CDC_SCHEMA = "`table` string, type string, data map<string,string>, ts long"
+
+
+def _lww_fold(spark, phases):
+    """The DIM tables a plain in-memory last-write-wins fold reaches:
+    ``phases`` is a list of (config rows, CDC rows) per batch. Config ops
+    apply first (d drops, u empties, c/r create); each active config row
+    then routes its source's rows, pruned, through ``sinks.upsert_batch``."""
+    state: dict[str, list] = {}
+    for cfg, rows in phases:
+        for src, sink, cols, rk, op in cfg:
+            if op == "d":
+                state.pop(sink, None)
+            elif op == "u":
+                state[sink] = []
+            else:
+                state.setdefault(sink, [])
+        for src, sink, cols, rk, op in cfg:
+            if op == "d":
+                continue
+            keep = cols.split(",")
+            part = []
+            for table, typ, data, ts in rows:
+                if table == src:
+                    pruned = {k: v for k, v in data.items() if k in keep}
+                    part.append((pruned.get(rk), typ, pruned, ts))
+            schema = "row_key string, type string, data map<string,string>, ts long"
+            current = spark.createDataFrame(state[sink], schema) if state[sink] else None
+            merged = sinks.upsert_batch(
+                current, spark.createDataFrame(part, schema), "row_key", "ts", "type"
+            )
+            state[sink] = [tuple(r) for r in merged.select("row_key", "type", "data", "ts").collect()]
+    return {t: sorted((r[0] or "", r[1], sorted(r[2].items()), r[3]) for r in v)
+            for t, v in state.items()}
+
+
+def _dim_state(spark, catalog):
+    out = {}
+    for t in catalog.tables():
+        path = catalog.path(t) + "/table"
+        has_data = os.path.isdir(path) and any(d.startswith("bucket=") for d in os.listdir(path))
+        rows = spark.read.parquet(path).collect() if has_data else []
+        out[t] = sorted(
+            (r["row_key"] or "", r["type"], sorted(r["data"].items()), r["ts"]) for r in rows
+        )
+    return out
+
+
+def test_dim_app_pipeline_matches_in_memory_lww_fold(spark, tmp_path):
+    """Routing equivalence: five DIM batches (updates, deletes, one source
+    routed to two sink tables, a row-key column pruned away by
+    sink_columns, a mid-stream config change with d and u ops) leave the
+    dim tables equal to a plain in-memory LWW fold of the same batches."""
+    from flink_gmall2024_realtime_spark.sources.cdc import jdbc_config_source
+
+    url = "jdbc:derby:memory:gmall_dimcfg_lww;create=true"
+    driver = "org.apache.derby.iapi.jdbc.AutoloadedDriver"
+    varchar_cols = ", ".join(
+        f"{c} VARCHAR(256)"
+        for c in ["source_table", "sink_table", "sink_columns", "sink_row_key", "op"]
+    )
+
+    def write_cfg(rows):
+        (
+            spark.createDataFrame(rows, CFG_SCHEMA)
+            .write.option("createTableColumnTypes", varchar_cols)
+            .jdbc(url, "table_process_dim", mode="overwrite", properties={"driver": driver})
+        )
+
+    cfg_a = [
+        ("user_info", "dim_user_info", "id,name", "id", "c"),
+        ("sku_info", "dim_sku_info", "id,price", "id", "c"),
+        # same source, second sink; its row key `id` is pruned away
+        ("sku_info", "dim_sku_price", "price,name", "id", "c"),
+    ]
+    cfg_b = [
+        ("user_info", "dim_user_info", "id,name", "id", "u"),
+        ("sku_info", "dim_sku_info", "id,price", "id", "c"),
+        ("sku_info", "dim_sku_price", "price,name", "id", "d"),
+        ("base_province", "dim_province", "id,name", "id", "r"),
+    ]
+    u = lambda i, name: {"id": str(i), "name": name, "secret": "s"}
+    sku = lambda i, price: {"id": str(i), "price": str(price), "name": f"sku{i}"}
+    batches = [
+        (cfg_a, [("user_info", "insert", u(i, f"u{i}"), 1) for i in range(6)]
+         + [("sku_info", "insert", sku(i, 10 + i), 1) for i in range(6)]
+         + [("other_tbl", "insert", {"id": "0"}, 1)]),
+        (cfg_a, [("user_info", "update", u(1, "u1b"), 2), ("user_info", "update", u(1, "u1c"), 3),
+                 ("user_info", "delete", u(2, "u2"), 2), ("sku_info", "update", sku(3, 99), 2),
+                 ("sku_info", "delete", sku(4, 14), 2), ("user_info", "delete", u(50, "x"), 2)]),
+        (cfg_a, [("sku_info", "insert", sku(7, 70), 3), ("sku_info", "delete", sku(7, 70), 4),
+                 ("user_info", "insert", u(8, "u8"), 3)]),
+        (cfg_b, [("user_info", "update", u(3, "u3b"), 5), ("sku_info", "update", sku(5, 55), 5),
+                 ("base_province", "insert", {"id": "p1", "name": "north"}, 5)]),
+        (cfg_b, [("user_info", "insert", u(9, "u9"), 6), ("sku_info", "delete", sku(0, 10), 6),
+                 ("base_province", "update", {"id": "p1", "name": "south"}, 6),
+                 ("base_province", "insert", {"id": "p2", "name": "east"}, 6)]),
+    ]
+    catalog = sinks.DimCatalog(os.path.join(str(tmp_path), "dimstore_lww"))
+    write_cfg(batches[0][0])
+    cfg = jdbc_config_source(spark, url, "table_process_dim", "", "", driver)
+    process = pipelines.dim_app_pipeline(spark, None, cfg, catalog, str(tmp_path))
+    for i, (cfg_rows, rows) in enumerate(batches):
+        write_cfg(cfg_rows)
+        process(spark.createDataFrame(rows, CDC_SCHEMA), i)
+        assert _dim_state(spark, catalog) == _lww_fold(spark, batches[: i + 1]), f"batch {i}"
+    assert catalog.tables() == ["dim_province", "dim_sku_info", "dim_user_info"]
+
+
+def _two_table_dim(spark, tmp_path, name):
+    cfg = spark.createDataFrame(
+        [("user_info", "dim_user_info", "id,name", "id", "c"),
+         ("sku_info", "dim_sku_info", "id,price", "id", "c")],
+        CFG_SCHEMA,
+    )
+    catalog = sinks.DimCatalog(os.path.join(str(tmp_path), name))
+    return cfg, catalog, pipelines.dim_app_pipeline(spark, None, cfg, catalog, str(tmp_path))
+
+
+def _two_table_batches():
+    b0 = [("user_info", "insert", {"id": str(i), "name": f"u{i}"}, 1) for i in range(8)] + [
+        ("sku_info", "insert", {"id": str(i), "price": str(i)}, 1) for i in range(8)
+    ]
+    b1 = [("user_info", "update", {"id": str(i), "name": f"u{i}b"}, 2) for i in range(0, 8, 2)] + [
+        ("sku_info", "delete", {"id": str(i), "price": str(i)}, 2) for i in range(1, 8, 2)
+    ] + [("sku_info", "insert", {"id": "20", "price": "20"}, 2)]
+    b2 = [("user_info", "delete", {"id": "0", "name": "u0"}, 3),
+          ("sku_info", "update", {"id": "2", "price": "22"}, 3)]
+    return [b0, b1, b2]
+
+
+def test_dim_app_pipeline_one_parquet_write_per_batch(spark, tmp_path, monkeypatch):
+    """A two-table DIM batch touching several buckets per table issues
+    exactly one DataFrameWriter.parquet call, on the first batch and on
+    batches that merge into stored buckets."""
+    from pyspark.sql import DataFrameWriter
+
+    calls = []
+    real = DataFrameWriter.parquet
+
+    def counting(self, *a, **kw):
+        calls.append(a[0] if a else kw.get("path"))
+        return real(self, *a, **kw)
+
+    monkeypatch.setattr(DataFrameWriter, "parquet", counting)
+    _, _, process = _two_table_dim(spark, tmp_path, "dim_onewrite")
+    for i, rows in enumerate(_two_table_batches()[:2]):
+        for source in ("user_info", "sku_info"):
+            keys = [data["id"] for table, _, data, _ in rows if table == source]
+            assert len(set(_buckets(spark, keys, 16).values())) >= 2
+        calls.clear()
+        process(spark.createDataFrame(rows, CDC_SCHEMA), i)
+        assert len(calls) == 1, calls
+
+
+@pytest.mark.parametrize("crash_at", ["before_swap", "mid_swap"])
+def test_dim_app_pipeline_recovers_orphaned_staging(spark, tmp_path, monkeypatch, crash_at):
+    """A crash leaves the staging dir orphaned either after the write but
+    before any bucket swapped, or after some buckets swapped (one bucket
+    half-swapped, its live dir moved aside). The staging dir never shows
+    up as a dim table, and the replayed batch heals the store and ends at
+    the last-write-wins state."""
+    cfg, catalog, process = _two_table_dim(spark, tmp_path, f"dim_crash_{crash_at}")
+    batches = _two_table_batches()
+    process(spark.createDataFrame(batches[0], CDC_SCHEMA), 0)
+
+    real_rename = os.rename
+    stage = os.path.join(catalog.root, ".tmp_1")
+    swaps_in = []
+
+    def crashing_rename(src, dst):
+        if crash_at == "before_swap":
+            raise OSError("crash before the first swap")
+        if src.startswith(stage):
+            swaps_in.append(src)
+            if len(swaps_in) == 2:
+                raise OSError("crash in the middle of the swaps")
+        return real_rename(src, dst)
+
+    monkeypatch.setattr(sinks.os, "rename", crashing_rename)
+    with pytest.raises(OSError, match="crash"):
+        process(spark.createDataFrame(batches[1], CDC_SCHEMA), 1)
+    monkeypatch.setattr(sinks.os, "rename", real_rename)
+
+    assert os.path.isdir(stage)
+    assert catalog.tables() == ["dim_sku_info", "dim_user_info"]
+    if crash_at == "mid_swap":
+        olds = [d for t in catalog.tables()
+                for d in os.listdir(catalog.path(t) + "/table") if d.startswith(".old_")]
+        assert olds  # the second swap stopped between its two renames
+
+    cfg_rows = [tuple(r) for r in cfg.collect()]
+    for i, rows in enumerate(batches[1:], start=1):  # replay of 1, then 2
+        process(spark.createDataFrame(rows, CDC_SCHEMA), i)
+        assert catalog.tables() == ["dim_sku_info", "dim_user_info"]
+        want = _lww_fold(spark, [(cfg_rows, b) for b in batches[: i + 1]])
+        assert _dim_state(spark, catalog) == want
+    assert not [d for d in os.listdir(catalog.root) if d.startswith(".")]
+    for t in catalog.tables():
+        assert not [d for d in os.listdir(catalog.path(t) + "/table") if d.startswith(".")]
 
 
 def test_dwd_base_log_split_stream(spark, tmp_path):
