@@ -2349,27 +2349,13 @@ def delta_scan(
     paths) and cast per the table's schemaString. Rows never pass
     through the driver; at 100 TB this is a plain multi-file parquet
     scan with file-skip pruning."""
-    import os
-
-    from pyspark.sql import functions as F
-
     state = replay_delta_dir(path, version)
     mapping = _column_mapping(state["metadata"])  # logical -> physical
-    ids = _column_ids(state["metadata"])  # logical -> field id (id mode)
 
     def phys(name: str) -> str:
         return mapping.get(name, name) if mapping else name
 
     pcols = state["metadata"]["partitionColumns"]
-    ptypes = {}
-    for f in json.loads(state["metadata"]["schemaString"]).get("fields", []):
-        if f["name"] in pcols:
-            t = f.get("type")
-            if not isinstance(t, str) or t not in _DELTA_TO_SPARK:
-                raise NotImplementedError(
-                    f"unsupported partition column type {t!r}"
-                )
-            ptypes[f["name"]] = _DELTA_TO_SPARK[t]
     live = state["live"]
     if partition_filter:
         unknown = set(partition_filter) - set(pcols)
@@ -2391,13 +2377,42 @@ def delta_scan(
         live = _stats_skip(
             live, {phys(k): v for k, v in stats_filter.items()}
         )
+    return scan_adds(spark, path, state["metadata"], live)
+
+
+def scan_adds(spark, path: str, metadata: dict, live: dict) -> DataFrame:
+    """Distributed read of the add actions ``live`` ({rel: add}) of a table
+    whose metaData action is ``metadata``: every file projected to the
+    log's schema, partition columns attached from ``partitionValues`` and
+    deletion vectors applied as ``_metadata.row_index`` anti-joins. The
+    snapshot scan and the incremental source both read through it."""
+    import os
+
+    from pyspark.sql import functions as F
+
+    mapping = _column_mapping(metadata)  # logical -> physical
+    ids = _column_ids(metadata)  # logical -> field id (id mode)
+
+    def phys(name: str) -> str:
+        return mapping.get(name, name) if mapping else name
+
+    pcols = metadata["partitionColumns"]
+    ptypes = {}
+    for f in json.loads(metadata["schemaString"]).get("fields", []):
+        if f["name"] in pcols:
+            t = f.get("type")
+            if not isinstance(t, str) or t not in _DELTA_TO_SPARK:
+                raise NotImplementedError(
+                    f"unsupported partition column type {t!r}"
+                )
+            ptypes[f["name"]] = _DELTA_TO_SPARK[t]
     # project every file to the TABLE schema (schemaString order): after
     # schema evolution, pre-evolution files lack the appended columns —
     # they read as typed nulls, exactly like real Delta. Files carry
     # PHYSICAL column names under column mapping; the scan returns
     # logical ones.
     table_fields = []
-    for f in json.loads(state["metadata"]["schemaString"]).get("fields", []):
+    for f in json.loads(metadata["schemaString"]).get("fields", []):
         if f["name"] in pcols:
             continue
         t = f.get("type")
@@ -2527,7 +2542,7 @@ def delta_scan(
     if not parts:
         # empty selection: derive the schema from schemaString
         fields = []
-        for f in json.loads(state["metadata"]["schemaString"])["fields"]:
+        for f in json.loads(metadata["schemaString"])["fields"]:
             t = f.get("type")
             if not isinstance(t, str) or t not in _DELTA_TO_SPARK:
                 raise NotImplementedError(f"unsupported column type {t!r}")

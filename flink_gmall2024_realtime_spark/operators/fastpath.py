@@ -12,8 +12,9 @@ dispatch policy (VERDICT r10 "Next round" #1):
 1. decode via the C library (pyarrow ``CompressedInputStream`` for the
    frame formats with no declared size, sized one-shot for raw snappy);
 2. every k-th record — deterministic on the payload bytes
-   (``crc32(payload[:64]) % k``), so partition-order-free and
-   resumable — ALSO runs the in-repo spec decoder and raises
+   (``crc32(payload) % k`` over the WHOLE payload: records that share a
+   container header still sample independently), so partition-order-free
+   and resumable — ALSO runs the in-repo spec decoder and raises
    ``ValueError`` on any byte divergence: the spec oracle stays live in
    production, not just in pytest;
 3. any library failure falls back to the spec decoder, which either
@@ -45,7 +46,7 @@ _FAMILIES = (
 
 
 def _sampled(payload: bytes, k: int) -> bool:
-    return k > 0 and zlib.crc32(payload[:64]) % k == 0
+    return k > 0 and zlib.crc32(payload) % k == 0
 
 
 # --------------------------------------------------------- scope parity

@@ -39,6 +39,15 @@ from typing import Iterator
 import pandas as pd
 from pyspark.sql import DataFrame
 
+from ..streaming.tablecommit import (
+    check_drift,
+    drain,
+    footer_stats,
+    place_staged,
+    publish_if_absent,
+    replace_atomically,
+    sweep_orphans,
+)
 from .codecguard import malformed_guard
 
 
@@ -271,6 +280,80 @@ def _stats_keep(df: dict, stats_filter: dict, md: dict) -> bool:
     return True
 
 
+def _dir_get(path: str):
+    """``get(name, optional=False)`` -> bytes of a table-relative file."""
+    import os
+
+    def get(name, optional=False):
+        full = os.path.join(path, name)
+        if not os.path.isfile(full):
+            if optional:
+                return None
+            raise ValueError(f"{name!r} missing from table directory")
+        with open(full, "rb") as f:
+            return f.read()
+
+    return get
+
+
+def _dir_reader(path: str):
+    """(``get``, ``metadata/`` file names) over a table DIRECTORY — the
+    first two arguments of ``_iceberg_live``."""
+    import os
+
+    mdir = os.path.join(path, "metadata")
+    names = (
+        ["metadata/" + fn for fn in os.listdir(mdir)]
+        if os.path.isdir(mdir)
+        else []
+    )
+    return _dir_get(path), names
+
+
+def _added_manifests(get, snap: dict, location: str) -> list:
+    """(content, manifest records) of every manifest ``snap`` ADDED."""
+    from .avro import parse_avro
+
+    _, entries = parse_avro(get(_strip_location(snap["manifest-list"], location)))
+    return [
+        (e.get("content", 0), parse_avro(
+            get(_strip_location(e["manifest_path"], location))
+        )[1])
+        for e in entries
+        if e.get("added_snapshot_id") == snap["snapshot-id"]
+    ]
+
+
+def _metadata_version(name: str) -> int:
+    """``[metadata/]v<N>[-<uuid>].metadata.json`` -> N."""
+    stem = name.rsplit("/", 1)[-1][: -len(".metadata.json")]
+    return int(stem.lstrip("v").split("-")[0])
+
+
+def _metadata_versions(path: str) -> dict[int, str]:
+    """{version: file name} of a table directory's ``*.metadata.json``."""
+    import os
+
+    return {
+        _metadata_version(fn): fn
+        for fn in os.listdir(os.path.join(path, "metadata"))
+        if fn.endswith(".metadata.json")
+    }
+
+
+def _head_metadata(path: str) -> tuple[int, dict | None]:
+    """(version, metadata document) of the newest ``*.metadata.json`` —
+    (0, None) before the first commit."""
+    import os
+
+    versions = _metadata_versions(path)
+    if not versions:
+        return 0, None
+    v = max(versions)
+    with open(os.path.join(path, "metadata", versions[v])) as f:
+        return v, json.load(f)
+
+
 def _iceberg_live(
     members_get,
     names,
@@ -291,12 +374,11 @@ def _iceberg_live(
     files for the caller to apply (merge-on-read, r13)."""
     from .avro import parse_avro
 
-    metas = {}
-    for name in names:
-        if name.startswith("metadata/") and name.endswith(".metadata.json"):
-            stem = name.rsplit("/", 1)[1][: -len(".metadata.json")]
-            ver = int(stem.lstrip("v").split("-")[0])
-            metas[ver] = name
+    metas = {
+        _metadata_version(name): name
+        for name in names
+        if name.startswith("metadata/") and name.endswith(".metadata.json")
+    }
     if not metas:
         raise ValueError("no metadata/*.metadata.json in payload")
     hint = members_get("metadata/version-hint.text", optional=True)
@@ -851,19 +933,7 @@ def iceberg_scan(
 
     from pyspark.sql import functions as F
 
-    names = []
-    mdir = os.path.join(path, "metadata")
-    if os.path.isdir(mdir):
-        names = ["metadata/" + fn for fn in os.listdir(mdir)]
-
-    def get(name, optional=False):
-        full = os.path.join(path, name)
-        if not os.path.isfile(full):
-            if optional:
-                return None
-            raise ValueError(f"{name!r} missing from table directory")
-        with open(full, "rb") as f:
-            return f.read()
+    get, names = _dir_reader(path)
 
     sid, _, live, deletes, eq_dels, md, location = _iceberg_live(
         get, names, snapshot_id, partition_filter, stats_filter
@@ -2532,6 +2602,43 @@ def iceberg_transform_stats(media: DataFrame) -> DataFrame:
     )
 
 
+def _ml_entry(e: dict) -> bytes:
+    """One manifest-list record (the sequence-number schema) from a parsed
+    or new entry; absent spec ids and sequence numbers encode as 0."""
+    from .avro import _zz
+
+    return (
+        _enc_str(e["manifest_path"])
+        + _zz(e["manifest_length"])
+        + _zz(e.get("partition_spec_id", 0))
+        + _zz(e["content"])
+        + _zz(e.get("sequence_number", 0))
+        + _zz(e["added_snapshot_id"])
+    )
+
+
+def _enc_bounds(pairs: list) -> bytes:
+    """A manifest's lower/upper bounds map: [(field id, bytes)] as an Avro
+    array of key/value records."""
+    from .avro import _zz
+
+    if not pairs:
+        return _zz(0)
+    out = _zz(len(pairs))
+    for k, v in pairs:
+        out += _zz(k) + _zz(len(v)) + v
+    return out + _zz(0)
+
+
+def _bound_pairs(kvs) -> list:
+    """Parsed bounds records -> [(field id, bytes)]."""
+    return [
+        (kv["key"], kv["value"].encode() if isinstance(kv["value"], str)
+         else kv["value"])
+        for kv in kvs or []
+    ]
+
+
 class IcebergAppendSink:
     """Append-only Iceberg v2 table writer for ``foreachBatch`` — the
     WRITE side of ``read_iceberg_snapshot``/``iceberg_scan`` and the
@@ -2551,7 +2658,14 @@ class IcebergAppendSink:
     already appears in the snapshot log is skipped before any write
     (Iceberg's real streaming sinks dedupe the same way, via snapshot
     summary properties). Dim/serving shape: one driver-side Arrow file
-    per commit — fact streams belong on the Delta distributed path."""
+    per commit — fact streams belong on the Delta distributed path.
+
+    The format-neutral commit steps come from the table-format core
+    (``streaming/tablecommit.py``, shared with ``DeltaAppendSink``): the
+    putIfAbsent publish of each metadata version, footer stats, staged
+    file placement, the drift check of mutating commits and the orphan
+    sweep. This class keeps what is Iceberg's own: manifests, manifest
+    lists, snapshot summaries and position/equality deletes."""
 
     def __init__(
         self,
@@ -2582,24 +2696,10 @@ class IcebergAppendSink:
     # ------------------------------------------------------------ state
 
     def _meta_versions(self) -> dict[int, str]:
-        import os
-
-        out = {}
-        for fn in os.listdir(os.path.join(self.path, "metadata")):
-            if fn.endswith(".metadata.json"):
-                stem = fn[: -len(".metadata.json")]
-                out[int(stem.lstrip("v").split("-")[0])] = fn
-        return out
+        return _metadata_versions(self.path)
 
     def _head(self) -> tuple[int, dict | None]:
-        import os
-
-        versions = self._meta_versions()
-        if not versions:
-            return 0, None
-        v = max(versions)
-        with open(os.path.join(self.path, "metadata", versions[v])) as f:
-            return v, json.load(f)
+        return _head_metadata(self.path)
 
     def committed_batch_ids(self) -> set[int]:
         _, md = self._head()
@@ -2629,30 +2729,15 @@ class IcebergAppendSink:
 
     # ----------------------------------------------------------- write
 
-    def _publish(self, target: str, body: bytes) -> bool:
-        """putIfAbsent metadata publish via POSIX ``link(2)`` (complete-
-        before-visible, fail-if-exists). Deployment note (VERDICT r12
-        #7): on object stores swap this single method for the
-        platform's conditional create — S3 ``If-None-Match: *`` / GCS
-        ``ifGenerationMatch=0`` — or a catalog-backed pointer swap
-        (what Iceberg's REST/Hive catalogs do); the OCC retry loop and
-        batch-id dedupe above it carry over unchanged."""
+    def _publish_metadata(self, version: int, md: dict) -> bool:
+        """Claim metadata version ``version`` (putIfAbsent through the
+        commit core); False when a concurrent writer claimed it first."""
         import os
 
-        tmp = target + f".{os.getpid()}.tmp"
-        fd = os.open(tmp, os.O_CREAT | os.O_WRONLY | os.O_TRUNC)
-        try:
-            with os.fdopen(fd, "wb") as f:
-                f.write(body)
-                f.flush()
-                os.fsync(f.fileno())
-            try:
-                os.link(tmp, target)
-            except FileExistsError:
-                return False
-            return True
-        finally:
-            os.unlink(tmp)
+        return publish_if_absent(
+            os.path.join(self.path, "metadata", f"v{version}.metadata.json"),
+            json.dumps(md).encode(),
+        )
 
     _SPARK_TO_ICE = {
         "bigint": "long", "int": "int", "smallint": "int", "tinyint": "int",
@@ -2695,39 +2780,7 @@ class IcebergAppendSink:
         skipping must never change results)."""
         import struct as _struct
 
-        import pyarrow.parquet as pq
-
-        by_name = {f["name"]: (f["id"], f["type"]) for f in fields}
-        md = pq.ParquetFile(full).metadata
-        mins: dict[str, object] = {}
-        maxs: dict[str, object] = {}
-        for rg in range(md.num_row_groups):
-            for ci in range(md.num_columns):
-                col = md.row_group(rg).column(ci)
-                name = col.path_in_schema
-                if name not in by_name or by_name[name][1] not in (
-                    "long", "int", "string"
-                ):
-                    continue
-                st = col.statistics
-                if st is None or not st.has_min_max:
-                    mins.pop(name, None)
-                    maxs.pop(name, None)
-                    continue
-                mn, mx = st.min, st.max
-                if isinstance(mn, bytes):
-                    try:
-                        mn, mx = mn.decode(), mx.decode()
-                    except UnicodeDecodeError:
-                        mins.pop(name, None)
-                        maxs.pop(name, None)
-                        continue
-                if rg == 0 or name in mins:
-                    mins[name] = mn if name not in mins else min(mins[name], mn)
-                    maxs[name] = mx if name not in maxs else max(maxs[name], mx)
-
-        def ser(name: str, v) -> bytes | None:
-            t = by_name[name][1]
+        def ser(t: str, v) -> bytes | None:
             if t == "long" and isinstance(v, int):
                 return _struct.pack("<q", v)
             if t == "int" and isinstance(v, int):
@@ -2736,14 +2789,27 @@ class IcebergAppendSink:
                 return v.encode()
             return None
 
+        mins, maxs, _nulls = footer_stats(full)
         lowers: dict[int, bytes] = {}
         uppers: dict[int, bytes] = {}
-        for name in mins:
-            lo, hi = ser(name, mins[name]), ser(name, maxs[name])
-            if lo is not None and hi is not None:
-                lowers[by_name[name][0]] = lo
-                uppers[by_name[name][0]] = hi
+        for f in fields:
+            if f["name"] in mins:
+                lo = ser(f["type"], mins[f["name"]])
+                hi = ser(f["type"], maxs[f["name"]])
+                if lo is not None and hi is not None:
+                    lowers[f["id"]], uppers[f["id"]] = lo, hi
         return lowers, uppers
+
+    def _data_entry(
+        self, rel: str, n_rows: int, fields: list[dict], pv: dict | None = None
+    ) -> tuple:
+        """Manifest entry for a written data file: (rel, rows, bytes,
+        lower bounds, upper bounds, partition values)."""
+        import os
+
+        full = os.path.join(self.path, rel)
+        lo, hi = self._footer_bounds(full, fields)
+        return (rel, n_rows, os.path.getsize(full), lo, hi, pv or {})
 
     def commit_batch(self, batch, batch_id: int) -> int | None:
         """One micro-batch -> one snapshot via ONE driver-side Arrow
@@ -2765,10 +2831,8 @@ class IcebergAppendSink:
         table = batch.toArrow()
         pq.write_table(table, full, compression="snappy")
         fields = self._schema_fields(batch)
-        lo, hi = self._footer_bounds(full, fields)
         return self._commit_snapshot(
-            batch_id, fields,
-            [(rel, table.num_rows, os.path.getsize(full), lo, hi, {})],
+            batch_id, fields, [self._data_entry(rel, table.num_rows, fields)]
         )
 
     def commit_batch_distributed(self, batch, batch_id: int) -> int | None:
@@ -2778,57 +2842,36 @@ class IcebergAppendSink:
         with footer-derived row counts and column bounds — rows never
         pass through the driver, and the resulting manifests feed
         ``stats_filter`` file skipping directly."""
-        import os
-        import shutil
-
-        import pyarrow.parquet as pq
-
         if self._is_committed(batch_id):
             return None
         missing = [c for c in self.partition_columns if c not in batch.columns]
         if missing:
             raise ValueError(f"batch lacks partition column(s) {missing}")
-        stage = os.path.join(self.path, "_staging", f"b{batch_id:010d}")
-        writer = batch
-        if self.partition_columns:
-            # split by DUPLICATE columns so the source columns stay IN
-            # the data files (identity partitioning stores them)
-            from pyspark.sql import functions as F
-
-            aux = []
-            for c in self.partition_columns:
-                writer = writer.withColumn(f"__ip_{c}", F.col(c))
-                aux.append(f"__ip_{c}")
-            writer.write.mode("overwrite").partitionBy(*aux).parquet(stage)
-        else:
-            writer.write.mode("overwrite").parquet(stage)
+        # split by DUPLICATE columns so the source columns stay IN the
+        # data files (identity partitioning stores them)
+        aux = [f"__ip_{c}" for c in self.partition_columns]
+        df = batch.select(
+            "*", *[batch[c].alias(a) for c, a in zip(self.partition_columns, aux)]
+        )
         fields = self._schema_fields(batch)
         types = {f["name"]: f["type"] for f in fields}
-        files = []
-        i = 0
-        for dirpath, _dirs, fns in sorted(os.walk(stage)):
-            relpath = os.path.relpath(dirpath, stage)
-            pv = None
-            for fn in sorted(fns):
-                if not fn.endswith(".parquet") or fn.startswith((".", "_")):
-                    continue
-                if pv is None:
-                    pv = self._dir_partition(relpath, types)
-                n_rows = pq.ParquetFile(
-                    os.path.join(dirpath, fn)
-                ).metadata.num_rows
-                if n_rows == 0:
-                    continue
-                rel = f"data/part-b{batch_id:010d}-{i:05d}.parquet"
-                os.replace(
-                    os.path.join(dirpath, fn), os.path.join(self.path, rel)
+        placed = place_staged(
+            df,
+            self.path,
+            f"b{batch_id:010d}",
+            lambda i, _p: f"data/part-b{batch_id:010d}-{i:05d}.parquet",
+            aux,
+        )
+        return self._commit_snapshot(
+            batch_id,
+            fields,
+            [
+                self._data_entry(
+                    rel, n_rows, fields, self._dir_partition(relpath, types)
                 )
-                full = os.path.join(self.path, rel)
-                lo, hi = self._footer_bounds(full, fields)
-                files.append((rel, n_rows, os.path.getsize(full), lo, hi, pv))
-                i += 1
-        shutil.rmtree(stage, ignore_errors=True)
-        return self._commit_snapshot(batch_id, fields, files)
+                for rel, relpath, n_rows in placed
+            ],
+        )
 
     def _dir_partition(self, relpath: str, types: dict) -> dict:
         """Staging dir path (``__ip_<col>=<value>`` segments) -> typed
@@ -2862,25 +2905,9 @@ class IcebergAppendSink:
         commit computed against one signature must not publish onto a
         head whose signature drifted (real Iceberg's
         ``validateDataFilesExist``)."""
-        import os
-
-        mdir = os.path.join(self.path, "metadata")
-        if not os.path.isdir(mdir):
-            return {}
-        names = ["metadata/" + fn for fn in os.listdir(mdir)]
-
-        def get(name, optional=False):
-            full = os.path.join(self.path, name)
-            if not os.path.isfile(full):
-                if optional:
-                    return None
-                raise ValueError(f"{name!r} missing from table directory")
-            with open(full, "rb") as f:
-                return f.read()
-
         try:
             _sid, _n, live, dels, eqs, _md, _loc = _iceberg_live(
-                get, names, None
+                *_dir_reader(self.path), None
             )
         except ValueError:
             return {}
@@ -2895,40 +2922,6 @@ class IcebergAppendSink:
             (rel, -1 if s is None else int(s)) for rel, s, _ids in eqs
         )
         return sig
-
-    def _check_expected_state(
-        self, md, expected_state: dict | None, exact: bool, what: str
-    ) -> None:
-        """Raise ``ConcurrentWriteError`` when the head's live-file
-        signature drifted from what a mutating commit was computed
-        against (VERDICT r14 #2 — previously a lost pointer race
-        re-published stale position-delete manifests verbatim, silently
-        resurrecting rows a concurrent compact had rewritten). Subset
-        mode (``exact=False``) tolerates concurrent appends/deletes that
-        leave the referenced files alone; exact mode (replace commits)
-        tolerates nothing."""
-        if expected_state is None or md is None:
-            return
-        from ..streaming.delta import ConcurrentWriteError
-
-        cur = self._live_signature()
-        if exact:
-            drift = cur != expected_state
-        else:
-            drift = any(
-                cur.get(rel) != s for rel, s in expected_state.items()
-            )
-        if drift:
-            gone = sorted(
-                rel for rel, s in expected_state.items()
-                if cur.get(rel) != s
-            )[:3]
-            extra = sorted(set(cur) - set(expected_state))[:3]
-            raise ConcurrentWriteError(
-                f"concurrent update: live files changed under {what} "
-                f"(computed-against files gone/changed: {gone}, "
-                f"new files: {extra}) — recompute against the new head"
-            )
 
     def _commit_snapshot(
         self,
@@ -2964,14 +2957,6 @@ class IcebergAppendSink:
         import os
 
         from .avro import _zz
-
-        def enc_bounds(bmap: dict[int, bytes]) -> bytes:
-            if not bmap:
-                return _zz(0)
-            out = _zz(len(bmap))
-            for k in sorted(bmap):
-                out += _zz(k) + _zz(len(bmap[k])) + bmap[k]
-            return out + _zz(0)
 
         loc = "."  # paths stored table-relative; _strip_location is a no-op
         pcols = self.partition_columns
@@ -3012,8 +2997,16 @@ class IcebergAppendSink:
         for _ in range(self.max_commit_attempts):
             head_v, md = self._head()
             # OCC: validate on EVERY attempt (the head may already have
-            # moved between the caller's read and the first publish)
-            self._check_expected_state(md, expected_state, exact_state, what)
+            # moved between the caller's read and the first publish) — a
+            # lost pointer race must not re-publish stale delete
+            # manifests that resurrect rows a concurrent compact rewrote
+            if expected_state is not None and md is not None:
+                check_drift(
+                    expected_state,
+                    self._live_signature(),
+                    what,
+                    exact=exact_state,
+                )
             schema_update = None
             if md is not None and fields:
                 cur_schema = next(
@@ -3060,8 +3053,8 @@ class IcebergAppendSink:
                     + (enc_partition(pv) if pcols else b"")
                     + _zz(n_rows)
                     + _zz(size)
-                    + enc_bounds(lo)
-                    + enc_bounds(hi)
+                    + _enc_bounds(sorted(lo.items()))
+                    + _enc_bounds(sorted(hi.items()))
                     for rel, n_rows, size, lo, hi, pv in files
                 ]
                 man = _avro_ocf(manifest_schema, entries, batch_id)
@@ -3115,23 +3108,14 @@ class IcebergAppendSink:
 
                 with open(os.path.join(self.path, cur["manifest-list"]), "rb") as f:
                     _, prior_entries = parse_avro(f.read())
-                for e in prior_entries:
-                    prior.append(
-                        _enc_str(e["manifest_path"])
-                        + _zz(e["manifest_length"])
-                        + _zz(e["partition_spec_id"])
-                        + _zz(e["content"])
-                        + _zz(e.get("sequence_number", 0))
-                        + _zz(e["added_snapshot_id"])
-                    )
+                prior = [_ml_entry(e) for e in prior_entries]
             for m_rel, man, content in new_lists:
                 prior.append(
-                    _enc_str(m_rel)
-                    + _zz(len(man))
-                    + _zz(0)
-                    + _zz(content)
-                    + _zz(seq)
-                    + _zz(snap_id)
+                    _ml_entry({
+                        "manifest_path": m_rel, "manifest_length": len(man),
+                        "content": content, "sequence_number": seq,
+                        "added_snapshot_id": snap_id,
+                    })
                 )
             ml = _avro_ocf(_MANIFEST_LIST_SEQ_SCHEMA, prior, batch_id + 7)
             with open(os.path.join(self.path, ml_rel), "wb") as f:
@@ -3201,10 +3185,7 @@ class IcebergAppendSink:
                 if schema_update is not None:
                     new_md["schemas"] = md["schemas"] + [schema_update]
                     new_md["current-schema-id"] = schema_update["schema-id"]
-            target = os.path.join(
-                self.path, "metadata", f"v{head_v + 1}.metadata.json"
-            )
-            if not self._publish(target, json.dumps(new_md).encode()):
+            if not self._publish_metadata(head_v + 1, new_md):
                 if self._is_committed(batch_id):
                     return None
                 continue  # lost the pointer race: retry on the new head
@@ -3222,10 +3203,7 @@ class IcebergAppendSink:
             except (FileNotFoundError, ValueError):
                 pass
             if head_v + 1 > current:
-                tmp = hint + f".{os.getpid()}.tmp"
-                with open(tmp, "w") as f:
-                    f.write(str(head_v + 1))
-                os.replace(tmp, hint)
+                replace_atomically(hint, str(head_v + 1).encode())
             return snap_id
         raise RuntimeError(
             f"could not claim an iceberg metadata version for batch "
@@ -3254,7 +3232,6 @@ class IcebergAppendSink:
         Replay-idempotent via the snapshot-summary batch id; returns
         the committed snapshot id or None on replay."""
         import os
-        import shutil
 
         import pyarrow.parquet as pq
 
@@ -3262,17 +3239,7 @@ class IcebergAppendSink:
 
         if self._is_committed(batch_id):
             return None
-        mdir = os.path.join(self.path, "metadata")
-        names = ["metadata/" + fn for fn in os.listdir(mdir)]
-
-        def get(name, optional=False):
-            full = os.path.join(self.path, name)
-            if not os.path.isfile(full):
-                if optional:
-                    return None
-                raise ValueError(f"{name!r} missing from table directory")
-            with open(full, "rb") as f:
-                return f.read()
+        get, names = _dir_reader(self.path)
 
         _sid, _n, live, _dels, _eqs, md, _loc = _iceberg_live(
             get, names, None
@@ -3324,30 +3291,21 @@ class IcebergAppendSink:
             matched = matched.repartitionByRange(n_out, "file_path", "pos")
         else:
             matched = matched.repartition(1)
-        matched = matched.sortWithinPartitions("file_path", "pos")
-        stage = os.path.join(self.path, "_staging", f"del-b{batch_id:010d}")
-        matched.write.mode("overwrite").parquet(stage)
+        placed = place_staged(
+            matched.sortWithinPartitions("file_path", "pos"),
+            self.path,
+            f"del-b{batch_id:010d}",
+            lambda i, _p: f"data/delete-b{batch_id:010d}-{i:05d}.parquet",
+        )
         delete_files = []
         referenced: set[str] = set()
-        i = 0
-        for fn in sorted(os.listdir(stage)):
-            if not fn.endswith(".parquet") or fn.startswith((".", "_")):
-                continue
-            n_rows = pq.ParquetFile(os.path.join(stage, fn)).metadata.num_rows
-            if n_rows == 0:
-                continue
-            rel = f"data/delete-b{batch_id:010d}-{i:05d}.parquet"
-            os.replace(os.path.join(stage, fn), os.path.join(self.path, rel))
+        for rel, _p, n_rows in placed:
+            full = os.path.join(self.path, rel)
             referenced.update(
-                pq.ParquetFile(os.path.join(self.path, rel))
-                .read(columns=["file_path"])["file_path"]
+                pq.ParquetFile(full).read(columns=["file_path"])["file_path"]
                 .to_pylist()
             )
-            delete_files.append(
-                (rel, n_rows, os.path.getsize(os.path.join(self.path, rel)))
-            )
-            i += 1
-        shutil.rmtree(stage, ignore_errors=True)
+            delete_files.append((rel, n_rows, os.path.getsize(full)))
         fields = next(
             s
             for s in md["schemas"]
@@ -3385,8 +3343,6 @@ class IcebergAppendSink:
         ``vacuum_orphans`` reclaims them under its retention horizon,
         the same maintenance split real Iceberg/Delta make. Returns the
         expired snapshot ids."""
-        import os
-
         if keep_last < 1:
             raise ValueError("keep_last must be >= 1")
         for _ in range(self.max_commit_attempts):
@@ -3415,10 +3371,7 @@ class IcebergAppendSink:
             props = dict(md.get("properties") or {})
             props["max-expired-batch-id"] = str(new_wm)
             new_md["properties"] = props
-            target = os.path.join(
-                self.path, "metadata", f"v{head_v + 1}.metadata.json"
-            )
-            if self._publish(target, json.dumps(new_md).encode()):
+            if self._publish_metadata(head_v + 1, new_md):
                 return [s["snapshot-id"] for s in expired]
             # lost a race with a concurrent commit: retry on the new head
         raise RuntimeError(
@@ -3438,7 +3391,6 @@ class IcebergAppendSink:
         same horizon as the Delta twin) are kept — a concurrent writer
         may have written them but not yet committed."""
         import os
-        import time
 
         from .avro import parse_avro
 
@@ -3467,28 +3419,18 @@ class IcebergAppendSink:
                             md.get("location", ""),
                         )
                     )
-        horizon = time.time() - retention_seconds
-        dropped = []
-        for sub in ("data", "metadata"):
-            root = os.path.join(self.path, sub)
-            if not os.path.isdir(root):
-                continue
-            for fn in sorted(os.listdir(root)):
-                rel = f"{sub}/{fn}"
-                full = os.path.join(root, fn)
-                if not os.path.isfile(full):
-                    continue
-                if fn.endswith(".metadata.json") or fn.startswith(
-                    ("version-hint", ".", "_")
-                ):
-                    continue
-                if rel in referenced:
-                    continue
-                if os.path.getmtime(full) > horizon:
-                    continue  # possibly an in-flight writer's file
-                os.unlink(full)
-                dropped.append(rel)
-        return dropped
+
+        def candidate(rel: str) -> bool:
+            sub, fn = os.path.split(rel)
+            return (
+                sub in ("data", "metadata")
+                and not fn.endswith(".metadata.json")
+                and not fn.startswith("version-hint")
+            )
+
+        return sweep_orphans(
+            self.path, referenced, retention_seconds, candidate
+        )
 
     def rollback_to(self, snapshot_id: int) -> int:
         """Iceberg's ``rollback_to_snapshot`` (r14): publish a new
@@ -3497,8 +3439,6 @@ class IcebergAppendSink:
         rolled-past snapshots stay in the list until expired), readers
         at explicit snapshot ids are unaffected. Returns the new
         metadata version."""
-        import os
-
         for _ in range(self.max_commit_attempts):
             head_v, md = self._head()
             if md is None:
@@ -3511,10 +3451,7 @@ class IcebergAppendSink:
                 )
             new_md = dict(md)
             new_md["current-snapshot-id"] = snapshot_id
-            target = os.path.join(
-                self.path, "metadata", f"v{head_v + 1}.metadata.json"
-            )
-            if self._publish(target, json.dumps(new_md).encode()):
+            if self._publish_metadata(head_v + 1, new_md):
                 return head_v + 1
         raise RuntimeError(
             "could not claim an iceberg metadata version for rollback "
@@ -3610,18 +3547,6 @@ class IcebergAppendSink:
                     },
                 )
 
-            def enc_bounds_list(b):
-                b = b or []
-                if not b:
-                    return _zz(0)
-                out = _zz(len(b))
-                for kv in b:
-                    v = kv["value"]
-                    if isinstance(v, str):
-                        v = v.encode()
-                    out += _zz(kv["key"]) + _zz(len(v)) + v
-                return out + _zz(0)
-
             blobs = []
             for snap_id, seq, df in sorted(
                 entries, key=lambda t: t[2]["file_path"]
@@ -3647,8 +3572,8 @@ class IcebergAppendSink:
                     + part
                     + _zz(df.get("record_count", 0))
                     + _zz(df.get("file_size_in_bytes", 0))
-                    + enc_bounds_list(df.get("lower_bounds"))
-                    + enc_bounds_list(df.get("upper_bounds"))
+                    + _enc_bounds(_bound_pairs(df.get("lower_bounds")))
+                    + _enc_bounds(_bound_pairs(df.get("upper_bounds")))
                 )
             snap_id = batch_id + 1
             seq = head_v + 1
@@ -3658,22 +3583,12 @@ class IcebergAppendSink:
                 f.write(man)
             ml_rel = f"metadata/snap-{snap_id}-b{batch_id:010d}.avro"
             out_entries = [
-                _enc_str(m_rel)
-                + _zz(len(man))
-                + _zz(0)
-                + _zz(0)
-                + _zz(seq)
-                + _zz(snap_id)
-            ]
-            for e in keep_lists:
-                out_entries.append(
-                    _enc_str(e["manifest_path"])
-                    + _zz(e["manifest_length"])
-                    + _zz(e.get("partition_spec_id", 0))
-                    + _zz(1)
-                    + _zz(e.get("sequence_number", 0))
-                    + _zz(e["added_snapshot_id"])
-                )
+                _ml_entry({
+                    "manifest_path": m_rel, "manifest_length": len(man),
+                    "content": 0, "sequence_number": seq,
+                    "added_snapshot_id": snap_id,
+                })
+            ] + [_ml_entry({**e, "content": 1}) for e in keep_lists]
             ml = _avro_ocf(_MANIFEST_LIST_SEQ_SCHEMA, out_entries, batch_id + 7)
             with open(os.path.join(self.path, ml_rel), "wb") as f:
                 f.write(ml)
@@ -3689,10 +3604,7 @@ class IcebergAppendSink:
             new_md["last-sequence-number"] = seq
             new_md["current-snapshot-id"] = snap_id
             new_md["snapshots"] = md["snapshots"] + [snapshot]
-            target = os.path.join(
-                self.path, "metadata", f"v{head_v + 1}.metadata.json"
-            )
-            if self._publish(target, json.dumps(new_md).encode()):
+            if self._publish_metadata(head_v + 1, new_md):
                 return snap_id
             if self._is_committed(batch_id):
                 return None
@@ -3794,10 +3706,7 @@ class IcebergKeyedStore(IcebergAppendSink):
             rel = f"data/part-b{batch_id:010d}.parquet"
             full = os.path.join(self.path, rel)
             pq.write_table(data_tbl, full, compression="snappy")
-            lo, hi = self._footer_bounds(full, fields)
-            files.append(
-                (rel, data_tbl.num_rows, os.path.getsize(full), lo, hi, {})
-            )
+            files.append(self._data_entry(rel, data_tbl.num_rows, fields))
         if keys_tbl.num_rows:
             del_rel = f"data/eqdel-b{batch_id:010d}.parquet"
             del_full = os.path.join(self.path, del_rel)
@@ -3846,11 +3755,10 @@ class IcebergKeyedStore(IcebergAppendSink):
         rel = f"data/compact-b{batch_id:010d}.parquet"
         full = os.path.join(self.path, rel)
         pq.write_table(tbl, full, compression="snappy")
-        lo, hi = self._footer_bounds(full, fields)
         return self._commit_snapshot(
             batch_id,
             fields,
-            [(rel, tbl.num_rows, os.path.getsize(full), lo, hi, {})],
+            [self._data_entry(rel, tbl.num_rows, fields)],
             replace=True,
             operation="replace",
             expected_state=expected,
@@ -3860,12 +3768,6 @@ class IcebergKeyedStore(IcebergAppendSink):
 
     def read_as_of(self, snapshot_id: int | None = None):
         return iceberg_scan(self.spark, self.path, snapshot_id)
-
-    def sink(self):
-        def write(batch, batch_id: int) -> None:
-            self.commit_batch(batch, batch_id)
-
-        return write
 
 def iceberg_table_changes(
     spark,
@@ -3899,20 +3801,7 @@ def iceberg_table_changes(
 
     from pyspark.sql import functions as F
 
-    from .avro import parse_avro
-
-    mdir = os.path.join(path, "metadata")
-    names = ["metadata/" + fn for fn in os.listdir(mdir)]
-
-    def get(name, optional=False):
-        full = os.path.join(path, name)
-        if not os.path.isfile(full):
-            if optional:
-                return None
-            raise ValueError(f"{name!r} missing from table directory")
-        with open(full, "rb") as f:
-            return f.read()
-
+    get, names = _dir_reader(path)
     _sid, _n, _live, _d, _e, md, location = _iceberg_live(get, names, None)
     snaps = sorted(
         md.get("snapshots", []), key=lambda s: s.get("sequence-number", 0)
@@ -3934,20 +3823,6 @@ def iceberg_table_changes(
         s for s in snaps if lo_seq < s.get("sequence-number", 0) <= hi_seq
     ]
 
-    def snapshot_manifests(snap):
-        """(content, manifest records) pairs this snapshot ADDED."""
-        ml_rel = _strip_location(snap["manifest-list"], location)
-        _, entries = parse_avro(get(ml_rel))
-        out = []
-        for e in entries:
-            if e.get("added_snapshot_id") != snap["snapshot-id"]:
-                continue
-            _, recs = parse_avro(
-                get(_strip_location(e["manifest_path"], location))
-            )
-            out.append((e.get("content", 0), recs))
-        return out
-
     prev_of = {}
     prev = None
     for s_ in snaps:
@@ -3962,7 +3837,7 @@ def iceberg_table_changes(
         if op == "replace":
             continue
         sid = snap["snapshot-id"]
-        for content, recs in snapshot_manifests(snap):
+        for content, recs in _added_manifests(get, snap, location):
             for rec in recs:
                 if rec.get("status", 1) != 1:
                     continue
@@ -4177,55 +4052,25 @@ class IcebergStreamSource:
         self._pos: int | None = None  # last consumed snapshot id
 
     def _md(self) -> dict:
-        import os
-
-        mdir = os.path.join(self.path, "metadata")
-        versions = {}
-        for fn in os.listdir(mdir):
-            if fn.endswith(".metadata.json"):
-                stem = fn[: -len(".metadata.json")]
-                versions[int(stem.lstrip("v").split("-")[0])] = fn
-        if not versions:
+        _v, md = _head_metadata(self.path)
+        if md is None:
             raise ValueError("no iceberg metadata files")
-        with open(os.path.join(mdir, versions[max(versions)])) as f:
-            return json.load(f)
+        return md
 
     def _added_files(self, snap: dict, location: str) -> list[str]:
-        """Data files first added BY this snapshot, from its manifest
-        list (manifests with added_snapshot_id == the snapshot's, entries
-        with status ADDED)."""
-        import os
-
-        from .avro import parse_avro
-
-        with open(
-            os.path.join(
-                self.path, _strip_location(snap["manifest-list"], location)
-            ),
-            "rb",
-        ) as f:
-            _, entries = parse_avro(f.read())
+        """Data files first added BY this snapshot (ADDED entries of the
+        data manifests it added)."""
         out = []
-        for e in entries:
-            if e.get("content", 0) != 0:
-                continue
-            if e.get("added_snapshot_id") != snap["snapshot-id"]:
-                continue
-            with open(
-                os.path.join(
-                    self.path,
-                    _strip_location(e["manifest_path"], location),
-                ),
-                "rb",
-            ) as f:
-                _, recs = parse_avro(f.read())
-            for rec in recs:
-                if rec.get("status", 1) != 1:  # ADDED only
-                    continue
-                if rec.get("snapshot_id") != snap["snapshot-id"]:
-                    continue
+        for content, recs in _added_manifests(
+            _dir_get(self.path), snap, location
+        ):
+            for rec in recs if content == 0 else []:
                 df = rec["data_file"]
-                if df.get("content", 0) != 0:
+                if (
+                    rec.get("status", 1) != 1
+                    or rec.get("snapshot_id") != snap["snapshot-id"]
+                    or df.get("content", 0) != 0
+                ):
                     continue
                 fmt = str(df.get("file_format", "PARQUET")).upper()
                 if fmt != "PARQUET":
@@ -4313,12 +4158,4 @@ class IcebergStreamSource:
         return df, head
 
     def stream_to(self, write, max_batches: int = 1_000_000) -> int:
-        n = 0
-        while n < max_batches:
-            got = self.next_batch()
-            if got is None:
-                return n
-            df, through = got
-            write(df, through)
-            n += 1
-        return n
+        return drain(self.next_batch, write, max_batches)

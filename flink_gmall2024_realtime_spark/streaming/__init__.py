@@ -9,6 +9,10 @@ streaming DataFrame pipeline:
                  routing (K2/R3), dim-catalog DDL from config ops (R4)
 - ``pipelines``  end-to-end topologies: watermarked window aggregates, the
                  DwdBaseLog five-way split, the DimApp config-driven router
+- ``delta``      Delta Lake sinks, keyed stores and the incremental source
+- ``tablecommit`` the commit core under the Delta and Iceberg writers
+                 (publish, footer stats, staged placement, drift check,
+                 orphan sweep)
 - ``kafka``      Kafka source/sink builders (FlinkSourceUtil/FlinkSinkUtil
                  equivalents) for live deployments; fixture tests use file
                  streams with identical topology code

@@ -22,8 +22,17 @@ four Spark-first writers plus the dim catalog:
 index of their table, and a micro-batch does one touched-set collect, one
 merge keyed on ``(table, key)`` and ONE write partitioned by
 ``(table, bucket)`` into a dot-prefixed staging dir, then swaps each touched
-``bucket=NN`` into its table by two renames. Only touched buckets rewrite,
-however many tables the batch routes to (the DIM pipeline's case).
+``bucket=NN`` into its table. Only touched buckets rewrite, however many
+tables the batch routes to (the DIM pipeline's case).
+
+Every directory replacement in this module goes through one pair:
+``swap_in(staged, live, backup)`` (live aside, staged in, backup dropped)
+and ``heal(live, backup)`` (restore a backup whose live copy vanished
+mid-swap, drop a stale one). The bucket swaps (``.old_NN``), the index
+compactions (``<root>.old``, plus the ``_swap_intent`` roll-forward of the
+two-store LSH index) and the sketch tables (``.old_registers``,
+``.old_table``) all use it; orphaned ``.tmp_*`` staging dirs are dropped
+before the next write.
 
 The rest of the module holds the curation-side sinks (streaming LSH /
 semantic dedup indexes, PQ codes, HLL / count-min / HDR sketches, aggregate
@@ -115,22 +124,47 @@ def upsert_batch(current: DataFrame | None, batch: DataFrame, key: str | list[st
 TABLE_COL = "_table"
 
 
-def _heal_buckets(path: str) -> None:
-    """Finish or undo an interrupted bucket swap under ``path``. A crash
-    between the two renames leaves only ``.old_NN``: restore it. A crash
-    after the second rename leaves a stale backup: drop it. Orphaned
-    ``.tmp_*`` staging dirs are garbage either way — the uncommitted batch
-    replays, and last-write-wins makes re-merging into buckets that already
-    swapped a no-op."""
-    for d in os.listdir(path):
+def swap_in(staged: str, live: str, backup: str) -> None:
+    """Replace the directory ``live`` with ``staged`` by two renames: the
+    live copy moves aside to ``backup``, the staged copy moves in, the
+    backup is dropped. No interleaving of a crash leaves ``live`` without a
+    complete copy somewhere: a crash between the renames leaves only
+    ``backup``, which ``heal`` restores."""
+    if os.path.exists(live):
+        shutil.rmtree(backup, ignore_errors=True)  # stale: live is whole
+        os.rename(live, backup)
+    os.rename(staged, live)
+    shutil.rmtree(backup, ignore_errors=True)
+
+
+def heal(live: str, backup: str) -> None:
+    """Finish or undo an interrupted ``swap_in``: a ``backup`` without
+    ``live`` is the only complete copy and is restored; a ``backup`` beside
+    ``live`` is stale and is dropped."""
+    if os.path.exists(backup):
+        if os.path.exists(live):
+            shutil.rmtree(backup, ignore_errors=True)
+        else:
+            os.rename(backup, live)
+
+
+def _drop_tmp(path: str) -> None:
+    """Remove orphaned ``.tmp_*`` staging dirs under ``path``: their batch
+    never committed and replays."""
+    for d in os.listdir(path) if os.path.isdir(path) else []:
         if d.startswith(".tmp_"):
             shutil.rmtree(os.path.join(path, d), ignore_errors=True)
-        elif d.startswith(".old_"):
-            live = os.path.join(path, f"bucket={d.split('_', 1)[1]}")
-            if os.path.exists(live):
-                shutil.rmtree(os.path.join(path, d), ignore_errors=True)
-            else:
-                os.rename(os.path.join(path, d), live)
+
+
+def _heal_buckets(path: str) -> None:
+    """Heal every interrupted bucket swap under ``path`` (``.old_NN``
+    beside ``bucket=NN``) and drop orphaned ``.tmp_*`` staging dirs —
+    last-write-wins makes re-merging the replayed batch into buckets that
+    already swapped a no-op."""
+    _drop_tmp(path)
+    for d in os.listdir(path):
+        if d.startswith(".old_"):
+            heal(os.path.join(path, f"bucket={d.split('_', 1)[1]}"), os.path.join(path, d))
 
 
 def _data_file(bucket_dir: str) -> str:
@@ -157,7 +191,7 @@ def upsert_tables(spark: SparkSession, root: str, paths: list[str], rows: DataFr
        and one write partitioned by ``(table, bucket)`` lands in the staging
        dir ``root/.tmp_<batch_id>`` (dot-prefixed, so neither Spark's file
        listing nor ``DimCatalog.tables`` sees it).
-    5. Each touched ``bucket=NN`` swaps in with two renames (live aside to
+    5. Each touched ``bucket=NN`` swaps in with ``swap_in`` (live aside to
        ``.old_NN``, staged in, backup dropped); ``_heal_buckets`` repairs an
        interrupted swap before the next write. A bucket every row of which
        was deleted gets an empty file carrying the schema, so the table
@@ -217,12 +251,8 @@ def upsert_tables(spark: SparkSession, root: str, paths: list[str], rows: DataFr
             if not os.path.isdir(staged):
                 os.makedirs(staged)
                 pq.write_table(empty, os.path.join(staged, "part-00000-empty.parquet"))
-            live = os.path.join(paths[t], f"bucket={b}")
-            old = os.path.join(paths[t], f".old_{b}")
-            if os.path.exists(live):
-                os.rename(live, old)
-            os.rename(staged, live)
-            shutil.rmtree(old, ignore_errors=True)
+            swap_in(staged, os.path.join(paths[t], f"bucket={b}"),
+                    os.path.join(paths[t], f".old_{b}"))
         shutil.rmtree(stage, ignore_errors=True)
     finally:
         bucketed.unpersist()
@@ -267,12 +297,9 @@ def _heal_store(root: str) -> None:
     """Finish an interrupted ``compact_lsh_index`` swap: restore the backup
     if the live root vanished mid-swap; drop a stale backup/stage
     otherwise."""
-    old, stage = root + ".old", root + ".stage"
-    if not os.path.isdir(root) and os.path.isdir(old):
-        os.rename(old, root)
+    heal(root, root + ".old")
     if os.path.isdir(root):
-        shutil.rmtree(old, ignore_errors=True)
-        shutil.rmtree(stage, ignore_errors=True)
+        shutil.rmtree(root + ".stage", ignore_errors=True)
 
 
 def _heal_index_swap(index_path: str) -> None:
@@ -289,16 +316,24 @@ def _heal_index_swap(index_path: str) -> None:
     if not os.path.isfile(intent):
         return
     for root in (os.path.join(index_path, "bands"), os.path.join(index_path, "docs")):
-        stage, old = root + ".stage", root + ".old"
-        if os.path.isdir(stage):
-            if os.path.isdir(root):
-                shutil.rmtree(old, ignore_errors=True)
-                os.rename(root, old)
-            os.rename(stage, root)
-        elif not os.path.isdir(root) and os.path.isdir(old):
-            os.rename(old, root)  # defensive; not reachable under the protocol
-        shutil.rmtree(old, ignore_errors=True)
+        if os.path.isdir(root + ".stage"):
+            swap_in(root + ".stage", root, root + ".old")
+        else:
+            heal(root, root + ".old")
     os.remove(intent)
+
+
+def _committed_ids(index_path: str) -> set:
+    commits = os.path.join(index_path, "_commits")
+    return set(os.listdir(commits)) if os.path.isdir(commits) else set()
+
+
+def _fold_plan(root: str, committed: set) -> tuple[list[str], list[str]]:
+    """(``batch=base`` plus the committed ``batch=<id>`` dirs under ``root``
+    to fold into it, the uncommitted ones to carry over verbatim)."""
+    batch_dirs = [d for d in sorted(os.listdir(root)) if d.startswith("batch=")]
+    done = [d for d in batch_dirs if d.split("=", 1)[1] in committed | {"base"}]
+    return done, [d for d in batch_dirs if d not in done]
 
 
 def compact_lsh_index(
@@ -340,15 +375,7 @@ def compact_lsh_index(
     _heal_store(docs_root)
     if not os.path.isdir(docs_root):
         return
-    committed = set(os.listdir(os.path.join(index_path, "_commits"))) if os.path.isdir(
-        os.path.join(index_path, "_commits")
-    ) else set()
-    batch_dirs = [d for d in sorted(os.listdir(docs_root)) if d.startswith("batch=")]
-    done = [
-        d for d in batch_dirs
-        if d.split("=", 1)[1] == "base" or d.split("=", 1)[1] in committed
-    ]
-    carry = [d for d in batch_dirs if d not in done]
+    done, carry = _fold_plan(docs_root, _committed_ids(index_path))
     if len(done) <= 1:
         return
     docs = spark.read.schema(INDEX_SCHEMA).parquet(
@@ -389,11 +416,7 @@ def compact_lsh_index(
     with open(intent, "w") as f:
         f.write("bands docs")
     for root, stage in ((bands_root, bands_stage), (docs_root, docs_stage)):
-        old = root + ".old"
-        shutil.rmtree(old, ignore_errors=True)
-        os.rename(root, old)
-        os.rename(stage, root)
-        shutil.rmtree(old, ignore_errors=True)
+        swap_in(stage, root, root + ".old")
     os.remove(intent)
 
 
@@ -404,9 +427,7 @@ def _compact_store(spark, root: str, schema: str, pcol: str, pexpr, committed: s
     _heal_store(root)
     if not os.path.isdir(root):
         return
-    batch_dirs = [d for d in sorted(os.listdir(root)) if d.startswith("batch=")]
-    done = [d for d in batch_dirs if d.split("=", 1)[1] == "base" or d.split("=", 1)[1] in committed]
-    carry = [d for d in batch_dirs if d not in done]
+    done, carry = _fold_plan(root, committed)
     if len(done) <= 1:
         return
     src = [os.path.join(root, d, f"{pcol}=*") for d in done]
@@ -421,11 +442,7 @@ def _compact_store(spark, root: str, schema: str, pcol: str, pexpr, committed: s
     )
     for d in carry:  # preserve uncommitted batch dirs verbatim
         shutil.copytree(os.path.join(root, d), os.path.join(stage, d))
-    old = root + ".old"
-    shutil.rmtree(old, ignore_errors=True)
-    os.rename(root, old)
-    os.rename(stage, root)
-    shutil.rmtree(old, ignore_errors=True)
+    swap_in(stage, root, root + ".old")
 
 
 def compact_cells_index(spark: SparkSession, index_path: str, cell_partitions: int = 64) -> None:
@@ -435,16 +452,13 @@ def compact_cells_index(spark: SparkSession, index_path: str, cell_partitions: i
     stage-and-swap contract as ``compact_lsh_index``, same partition
     semantics (``c`` recomputed from row content, so pruned candidate
     scans are unchanged)."""
-    committed = set(os.listdir(os.path.join(index_path, "_commits"))) if os.path.isdir(
-        os.path.join(index_path, "_commits")
-    ) else set()
     _compact_store(
         spark,
         os.path.join(index_path, "cells"),
         CELLS_SCHEMA,
         "c",
         F.pmod(F.col("cell"), F.lit(cell_partitions)),
-        committed,
+        _committed_ids(index_path),
     )
 
 
@@ -790,7 +804,7 @@ def hll_register_sink(
     associative, commutative, IDEMPOTENT algebra — so re-folding a replayed
     batch provably cannot change the table. The only machinery required is
     an atomic swap of the (tiny: groups x 256 rows) table, done with the
-    same two-rename crash-healing pattern as ``keyed_upsert_sink``. At a
+    same ``swap_in``/``heal`` pair as ``keyed_upsert_sink``. At a
     scale where the group count itself is huge, bucket the store by
     ``pmod(xxhash64(group), B)`` exactly as ``keyed_upsert_sink`` does;
     registers for one group always co-locate. Readers estimate with
@@ -800,19 +814,10 @@ def hll_register_sink(
     reg_path = os.path.join(path, "registers")
     old_path = os.path.join(path, ".old_registers")
 
-    def heal() -> None:
-        for d in os.listdir(path) if os.path.exists(path) else []:
-            if d.startswith(".tmp_"):
-                shutil.rmtree(os.path.join(path, d), ignore_errors=True)
-        if os.path.exists(old_path):
-            if os.path.exists(reg_path):
-                shutil.rmtree(old_path, ignore_errors=True)
-            else:
-                os.rename(old_path, reg_path)
-
     def write(batch: DataFrame, batch_id: int) -> None:
         os.makedirs(path, exist_ok=True)
-        heal()
+        _drop_tmp(path)
+        heal(reg_path, old_path)
         fresh = sketch.hll_registers(batch, group_col, id_col)
         if os.path.exists(reg_path):
             merged = sketch.merge_registers(
@@ -822,10 +827,7 @@ def hll_register_sink(
             merged = fresh
         tmp = os.path.join(path, f".tmp_{batch_id}")
         merged.write.mode("overwrite").parquet(tmp)
-        if os.path.exists(reg_path):
-            os.rename(reg_path, old_path)
-        os.rename(tmp, reg_path)
-        shutil.rmtree(old_path, ignore_errors=True)
+        swap_in(tmp, reg_path, old_path)
 
     return write
 
@@ -849,20 +851,10 @@ def _sum_merge_sink(spark: SparkSession, path: str, build_fn, keys: list[str], m
     RAISES — under the monotonic-id contract the only way to see an older
     id is a reset checkpoint location (ids restart at 0) pointed at a
     surviving store, and silently skipping would then drop every
-    subsequent batch.  Crash healing is the same two-rename pattern as
-    ``keyed_upsert_sink``."""
+    subsequent batch.  Crash healing is the same ``swap_in``/``heal`` pair
+    as ``keyed_upsert_sink``."""
     data_path = os.path.join(path, "table")
     old_path = os.path.join(path, ".old_table")
-
-    def heal() -> None:
-        for d in os.listdir(path) if os.path.exists(path) else []:
-            if d.startswith(".tmp_"):
-                shutil.rmtree(os.path.join(path, d), ignore_errors=True)
-        if os.path.exists(old_path):
-            if os.path.exists(data_path):
-                shutil.rmtree(old_path, ignore_errors=True)
-            else:
-                os.rename(old_path, data_path)
 
     def last_applied() -> int | None:
         marker = os.path.join(data_path, "_last_batch")
@@ -873,7 +865,8 @@ def _sum_merge_sink(spark: SparkSession, path: str, build_fn, keys: list[str], m
 
     def write(batch: DataFrame, batch_id: int) -> None:
         os.makedirs(path, exist_ok=True)
-        heal()
+        _drop_tmp(path)
+        heal(data_path, old_path)
         la = last_applied()
         if la is not None and batch_id == la:
             return  # the one legitimate replay: the last batch, after a crash
@@ -898,10 +891,7 @@ def _sum_merge_sink(spark: SparkSession, path: str, build_fn, keys: list[str], m
         merged.write.mode("overwrite").parquet(tmp)
         with open(os.path.join(tmp, "_last_batch"), "w") as f:
             f.write(str(batch_id))
-        if os.path.exists(data_path):
-            os.rename(data_path, old_path)
-        os.rename(tmp, data_path)
-        shutil.rmtree(old_path, ignore_errors=True)
+        swap_in(tmp, data_path, old_path)
 
     return write
 

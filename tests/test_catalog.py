@@ -134,3 +134,40 @@ def test_semantic_dedup_recall_floor():
     ).collect()[0]
     assert rep["n_exact"] > 0
     assert rep["pair_recall"] >= 0.45, rep
+
+
+def test_verify_oracle_expands_entry_patterns():
+    """tools/verify_oracle.py takes entry names or shell-style patterns;
+    an argument that matches no entry is reported (and exits 1)."""
+    import importlib.util
+    import os
+
+    path = os.path.join(
+        os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
+        "tools",
+        "verify_oracle.py",
+    )
+    spec = importlib.util.spec_from_file_location("verify_oracle", path)
+    vo = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(vo)
+
+    names = ["delta_a", "delta_b", "iceberg_x", "k3_upsert_final_state", "q1"]
+    assert vo.select_entries(["delta_*", "k3_upsert_final_state"], names) == (
+        {"delta_a", "delta_b", "k3_upsert_final_state"},
+        [],
+    )
+    assert vo.select_entries(["q1", "nope_*", "missing"], names) == (
+        {"q1"},
+        ["nope_*", "missing"],
+    )
+    lake, unmatched = vo.select_entries(
+        ["delta_*", "iceberg_*", "dim_version_store_asof", "k3_upsert_final_state"],
+        CATALOG,
+    )
+    assert not unmatched
+    assert {"delta_scan_bench", "iceberg_scan_bench", "dim_version_store_asof"} <= lake
+    assert all(
+        n.startswith(("delta_", "iceberg_"))
+        or n in ("dim_version_store_asof", "k3_upsert_final_state")
+        for n in lake
+    )

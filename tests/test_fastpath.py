@@ -63,6 +63,18 @@ def test_sampling_is_deterministic_and_content_keyed():
     assert not fp._sampled(payload, 0)
 
 
+def test_sampling_keys_on_the_whole_payload():
+    """Records that share a container header (same magic, same frame
+    descriptor) still sample about one in k: a prefix-keyed choice gives
+    them all one decision, so either none or all of a corpus would be
+    cross-verified."""
+    header = b"\x28\xb5\x2f\xfd" + bytes(range(76))  # 80 shared bytes
+    n, k = 320, 16
+    corpus = [header + b"record %d " % i * (1 + i % 5) for i in range(n)]
+    sampled = sum(fp._sampled(p, k) for p in corpus)
+    assert n / (2 * k) <= sampled <= 2 * n / k, sampled
+
+
 def test_divergence_raises(monkeypatch):
     """If the library and the spec decoder ever disagree on a sampled
     record, the row fails loudly instead of shipping library output."""

@@ -3,15 +3,19 @@
 Runs every catalog query on Spark and its DuckDB oracle on the same parquet,
 compares row count, column names, and an order-insensitive value hash.
 
-Usage: python tools/verify_oracle.py [sf_dir[,sf_dir...]] [query ...]
+Usage: python tools/verify_oracle.py [sf_dir[,sf_dir...]] [entry ...]
 
 A comma-separated list of SF dirs runs every named entry on each of them
-(e.g. the entries a change touches at sf0.001, sf0.01 and sf0.1). Exits
-non-zero on any failure, including an entry name the catalog lacks.
+(e.g. the entries a change touches at sf0.001, sf0.01 and sf0.1). An entry
+argument may be a shell-style pattern, so the lake set is one command:
+``'delta_*' 'iceberg_*' dim_version_store_asof k3_upsert_final_state``.
+Exits non-zero on any failure, including an entry name or pattern that
+matches nothing in the catalog.
 """
 
 from __future__ import annotations
 
+import fnmatch
 import hashlib
 import sys
 
@@ -99,10 +103,23 @@ def check(spark, sf_dir: str, only: set) -> list[str]:
     return failures
 
 
+def select_entries(args: list[str], names) -> tuple[set, list[str]]:
+    """Expand entry names and shell-style patterns against the catalog's
+    ``names``: (selected entries, arguments that matched nothing)."""
+    names = sorted(names)
+    selected: set = set()
+    unmatched = []
+    for arg in args:
+        hits = fnmatch.filter(names, arg)
+        selected.update(hits)
+        if not hits:
+            unmatched.append(arg)
+    return selected, unmatched
+
+
 def main() -> int:
     sf_dirs = (sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.001").split(",")
-    only = set(sys.argv[2:])
-    unknown = sorted(only - set(CATALOG))
+    only, unknown = select_entries(sys.argv[2:], CATALOG)
     if unknown:
         print(f"FAIL unknown catalog entries: {unknown}")
         return 1
