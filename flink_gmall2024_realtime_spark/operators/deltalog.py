@@ -54,6 +54,9 @@ from pyspark.sql import DataFrame
 from .codecguard import malformed_guard
 
 
+_LOG = "_delta_log/"
+
+
 @malformed_guard
 def read_delta_snapshot(
     payload: bytes,
@@ -66,32 +69,7 @@ def read_delta_snapshot(
     int_sum totals the first int64 column across live files.
     ``partition_filter`` prunes live files by their ``partitionValues``
     BEFORE any data decode — real partition pruning, file-skip level."""
-    from .archive import zip_extract
-
-    members = dict(zip_extract(payload))
-    log_blobs = {}
-    checkpoint = {}
-    last_checkpoint = None
-    for name, body in members.items():
-        if name == "_delta_log/_last_checkpoint":
-            last_checkpoint = body
-        elif (
-            name.startswith("_delta_log/")
-            and name.endswith(".parquet")
-            and ".checkpoint" in name
-        ):
-            _add_checkpoint_part(checkpoint, name.rsplit("/", 1)[1], body)
-        elif name.startswith("_delta_log/") and name.endswith(".json"):
-            log_blobs[int(name.rsplit("/", 1)[1][: -len(".json")])] = body
-
-    def fetch(path: str) -> bytes:
-        if path not in members:
-            raise ValueError(f"live delta file {path!r} missing from payload")
-        return members[path]
-
-    return _read_snapshot(
-        log_blobs, checkpoint, last_checkpoint, fetch, version, partition_filter
-    )
+    return _audit_snapshot(_zip_reader(payload), version, partition_filter)
 
 
 @malformed_guard
@@ -103,36 +81,86 @@ def read_delta_snapshot_dir(
     """Directory-rooted twin of ``read_delta_snapshot`` — reads a Delta
     table laid out on a filesystem (e.g. one written by
     ``streaming/delta.py``'s append sink)."""
+    return _audit_snapshot(_dir_reader(path), version, partition_filter)
+
+
+def _zip_reader(payload: bytes):
+    """(``get``, member names) over a table shipped as one ZIP payload —
+    the first argument of ``_replay``. ``get(name, optional=False)``
+    returns a table-relative file's bytes."""
+    from .archive import zip_extract
+
+    members = dict(zip_extract(payload))
+
+    def get(name: str, optional: bool = False) -> bytes | None:
+        if name not in members:
+            if optional:
+                return None
+            raise ValueError(f"delta file {name!r} missing from payload")
+        return members[name]
+
+    return get, list(members)
+
+
+def _dir_get(path: str):
+    """``get(name, optional=False)`` -> bytes of a table-relative file
+    under the table DIRECTORY ``path``."""
     import os
 
-    logdir = os.path.join(path, "_delta_log")
-    if not os.path.isdir(logdir):
-        raise ValueError("no _delta_log commit files in payload")
-    log_blobs = {}
-    checkpoint = {}
-    last_checkpoint = None
-    for fn in os.listdir(logdir):
-        full = os.path.join(logdir, fn)
-        if fn == "_last_checkpoint":
-            with open(full, "rb") as f:
-                last_checkpoint = f.read()
-        elif fn.endswith(".parquet") and ".checkpoint" in fn:
-            with open(full, "rb") as f:
-                _add_checkpoint_part(checkpoint, fn, f.read())
-        elif fn.endswith(".json"):
-            with open(full, "rb") as f:
-                log_blobs[int(fn[: -len(".json")])] = f.read()
-
-    def fetch(rel: str) -> bytes:
-        full = os.path.join(path, rel)
+    def get(name: str, optional: bool = False) -> bytes | None:
+        full = os.path.join(path, name)
         if not os.path.isfile(full):
-            raise ValueError(f"live delta file {rel!r} missing from payload")
+            if optional:
+                return None
+            raise ValueError(f"delta file {name!r} missing from payload")
         with open(full, "rb") as f:
             return f.read()
 
-    return _read_snapshot(
-        log_blobs, checkpoint, last_checkpoint, fetch, version, partition_filter
+    return get
+
+
+def _dir_reader(path: str):
+    """(``get``, ``_delta_log/`` member names) over a table DIRECTORY —
+    the directory twin of ``_zip_reader``."""
+    import os
+
+    logdir = os.path.join(path, "_delta_log")
+    names = (
+        [_LOG + fn for fn in os.listdir(logdir)] if os.path.isdir(logdir) else []
     )
+    return _dir_get(path), names
+
+
+def _log_listing(names) -> tuple[dict, dict, bool]:
+    """THE listing of a Delta log: ({version: commit JSON name},
+    {version: {"n": part count, "parts": {index: name}}}, whether the
+    ``_last_checkpoint`` pointer exists). Only direct children of
+    ``_delta_log/`` count — v2 checkpoint sidecars live one level down."""
+    commits: dict[int, str] = {}
+    checkpoints: dict = {}
+    pointer = False
+    for name in names:
+        fn = name[len(_LOG):]
+        if not name.startswith(_LOG) or "/" in fn:
+            continue
+        if fn == "_last_checkpoint":
+            pointer = True
+        elif fn.endswith(".parquet") and ".checkpoint" in fn:
+            _add_checkpoint_part(checkpoints, fn, name)
+        elif fn.endswith(".json"):
+            commits[int(fn[: -len(".json")])] = name
+    return commits, checkpoints, pointer
+
+
+def read_commit(get, version: int, gone: str) -> list[dict]:
+    """THE reader of one JSON commit: its actions, in order. A commit
+    cleaned from the log raises; ``gone`` says what the caller loses."""
+    blob = get(f"{_LOG}{version:020d}.json", optional=True)
+    if blob is None:
+        raise ValueError(
+            f"delta commit {version} was cleaned from the log; {gone}"
+        )
+    return [json.loads(line) for line in blob.splitlines() if line.strip()]
 
 
 def _parse_checkpoint_name(fn: str) -> tuple[int, int, int]:
@@ -157,33 +185,19 @@ def _parse_checkpoint_name(fn: str) -> tuple[int, int, int]:
     raise ValueError(f"unrecognized delta checkpoint file name {fn!r}")
 
 
-def _add_checkpoint_part(checkpoints: dict, fn: str, blob: bytes) -> None:
+def _add_checkpoint_part(checkpoints: dict, fn: str, name: str) -> None:
     v, idx, n = _parse_checkpoint_name(fn)
     entry = checkpoints.setdefault(v, {"n": n, "parts": {}})
     if entry["n"] != n:
         raise ValueError(
             f"checkpoint {v} has files declaring different part counts"
         )
-    entry["parts"][idx] = blob
+    entry["parts"][idx] = name
 
 
-def _complete_checkpoints(checkpoints: dict, at_most: int | None = None) -> list[int]:
-    """Versions of checkpoints whose parts are ALL present (ascending).
-    A crash mid multi-part checkpoint write can leave some parts
-    published — such a checkpoint must never be selected when the
-    ``_last_checkpoint`` pointer is absent; delta-spark falls back to
-    the newest COMPLETE one (ADVICE r12)."""
-    out = []
-    for v, entry in checkpoints.items():
-        if at_most is not None and v > at_most:
-            continue
-        if all(i in entry["parts"] for i in range(entry["n"])):
-            out.append(v)
-    return sorted(out)
-
-
-def _checkpoint_blobs(checkpoints: dict, v: int) -> list[bytes]:
-    """All parts of checkpoint ``v`` in order; raises when incomplete."""
+def _checkpoint_parts(checkpoints: dict, v: int) -> list[str]:
+    """Names of all parts of checkpoint ``v`` in order; raises when
+    incomplete."""
     entry = checkpoints.get(v)
     if entry is None:
         raise ValueError(f"checkpoint parquet for version {v} missing")
@@ -400,9 +414,9 @@ def _dv_positions(dv: dict, fetch) -> list[int]:
     return positions
 
 
-# projection request for checkpoint parquet — only the leaves snapshot
-# replay needs; everything else in the checkpoint (txn, tags, stats_parsed
-# and whatever future writers add) is never decoded
+# projection request for checkpoint parquet — only the leaves state
+# replay needs; everything else in the checkpoint (tags, stats_parsed and
+# whatever future writers add) is never decoded
 _CP_LEAVES = (
     "add.path",
     "add.size",
@@ -414,26 +428,35 @@ _CP_LEAVES = (
     "add.deletionVector.offset",
     "add.deletionVector.sizeInBytes",
     "add.deletionVector.cardinality",
-    "remove.path",
     "metaData.id",
     "metaData.schemaString",
     "metaData.partitionColumns.list.element",
     "metaData.configuration.key_value.key",
     "metaData.configuration.key_value.value",
     "protocol.minReaderVersion",
+    "protocol.minWriterVersion",
     "protocol.readerFeatures.list.element",
-    # v2 checkpoints (r13): self-identifying metadata row + pointers to
-    # sidecar parquet files that carry the add actions
-    "checkpointMetadata.version",
+    "protocol.writerFeatures.list.element",
+    "txn.appId",
+    "txn.version",
+    # v2 checkpoints (r13): pointers to sidecar parquet files that carry
+    # the add actions
     "sidecar.path",
 )
 
 
-def _checkpoint_state(blob: bytes, fetch=None) -> tuple[dict, dict | None]:
-    """Decode one checkpoint parquet (via the in-repo nested record
-    decoder, pyarrow-free) into (live add-file map, metaData dict or
-    None). Applies the same protocol gate as JSON replay; deletion
-    vectors on checkpoint add rows are carried through (r13) — dropping
+def _s(v):
+    return v.decode() if isinstance(v, bytes) else v
+
+
+def _decode_checkpoint(blobs, fetch=None) -> dict:
+    """THE checkpoint decoder (in-repo nested record decoder, pyarrow-
+    free): every part of one checkpoint, each parsed once, to {live,
+    metadata, protocol, txns} — the live add map, the metaData and
+    protocol actions (None when no part carries one) and the highest
+    txn version per streaming app id, which keeps a resumed sink
+    exactly-once after log cleanup. Protocol rows pass the reader gate;
+    deletion vectors on add rows are carried through (r13) — dropping
     one silently would resurrect deleted rows.
 
     V2 checkpoints (r13): rows may include ``sidecar`` actions pointing
@@ -442,171 +465,208 @@ def _checkpoint_state(blob: bytes, fetch=None) -> tuple[dict, dict | None]:
     present: silently ignoring one would drop live files)."""
     from .parquetmeta import parse_parquet_leaf_names, parse_parquet_records
 
-    avail = set(parse_parquet_leaf_names(blob))
-    cols = parse_parquet_records(
-        blob, columns=[c for c in _CP_LEAVES if c in avail]
-    )
-    if "add.path" not in cols and "sidecar.path" not in cols:
-        raise ValueError("delta checkpoint lacks add/sidecar columns")
-    n_rows_cp = len(next(iter(cols.values()))) if cols else 0
-    if "add.path" not in cols:
-        cols["add.path"] = [None] * n_rows_cp
-
-    def col(name, default=None):
-        return cols.get(name) or [default] * len(cols["add.path"])
-
-    def s(v):
-        return v.decode() if isinstance(v, bytes) else v
-
     live: dict[str, dict] = {}
     metadata = None
-    for i, apath in enumerate(cols["add.path"]):
-        mrv = col("protocol.minReaderVersion")[i]
-        if mrv is not None:
-            feats = col("protocol.readerFeatures.list.element")[i]
-            proto = {"minReaderVersion": mrv}
-            if feats is not None:
-                proto["readerFeatures"] = [s(f) for f in feats]
-            _check_protocol(proto)
-        if col("metaData.id")[i] is not None:
-            ckeys = col("metaData.configuration.key_value.key")[i] or []
-            cvals = col("metaData.configuration.key_value.value")[i] or []
-            pcols = col("metaData.partitionColumns.list.element")[i] or []
-            metadata = {
-                "id": s(col("metaData.id")[i]),
-                "schemaString": s(col("metaData.schemaString")[i]),
-                "partitionColumns": [s(c) for c in pcols],
-                "configuration": {
-                    s(k): s(v) for k, v in zip(ckeys, cvals)
-                },
+    protocol = None
+    txns: dict[str, int] = {}
+    for blob in blobs:
+        avail = set(parse_parquet_leaf_names(blob))
+        cols = parse_parquet_records(
+            blob, columns=[c for c in _CP_LEAVES if c in avail]
+        )
+        if "add.path" not in cols and "sidecar.path" not in cols:
+            raise ValueError("delta checkpoint lacks add/sidecar columns")
+        n = len(next(iter(cols.values())))
+
+        def col(name):
+            return cols.get(name) or [None] * n
+
+        for i in range(n):
+            mrv = col("protocol.minReaderVersion")[i]
+            if mrv is not None:
+                protocol = {"minReaderVersion": mrv}
+                mwv = col("protocol.minWriterVersion")[i]
+                if mwv is not None:
+                    protocol["minWriterVersion"] = mwv
+                for key in ("readerFeatures", "writerFeatures"):
+                    feats = col(f"protocol.{key}.list.element")[i]
+                    if feats is not None:
+                        protocol[key] = [_s(f) for f in feats]
+                _check_protocol(protocol)
+            if col("metaData.id")[i] is not None:
+                ckeys = col("metaData.configuration.key_value.key")[i] or []
+                cvals = col("metaData.configuration.key_value.value")[i] or []
+                pcols = col("metaData.partitionColumns.list.element")[i] or []
+                metadata = {
+                    "id": _s(col("metaData.id")[i]),
+                    "schemaString": _s(col("metaData.schemaString")[i]),
+                    "partitionColumns": [_s(c) for c in pcols],
+                    "configuration": {
+                        _s(k): _s(v) for k, v in zip(ckeys, cvals)
+                    },
+                }
+            app = col("txn.appId")[i]
+            if app is not None:
+                app = _s(app)
+                txns[app] = max(txns.get(app, -1), col("txn.version")[i])
+            apath = col("add.path")[i]
+            if apath is None:
+                continue
+            keys = col("add.partitionValues.key_value.key")[i] or []
+            vals = col("add.partitionValues.key_value.value")[i] or []
+            add = {
+                "path": _s(apath),
+                "size": col("add.size")[i],
+                "stats": _s(col("add.stats")[i]),
+                "partitionValues": {_s(k): _s(v) for k, v in zip(keys, vals)},
             }
-        if apath is None:
-            continue
-        keys = col("add.partitionValues.key_value.key")[i] or []
-        vals = col("add.partitionValues.key_value.value")[i] or []
-        add = {
-            "path": s(apath),
-            "size": col("add.size")[i],
-            "stats": s(col("add.stats")[i]),
-            "partitionValues": {
-                s(k): s(v) for k, v in zip(keys, vals)
-            },
-        }
-        dv_storage = col("add.deletionVector.storageType")[i]
-        if dv_storage is not None:
-            add["deletionVector"] = {
-                "storageType": s(dv_storage),
-                "pathOrInlineDv": s(col("add.deletionVector.pathOrInlineDv")[i]),
-                "offset": col("add.deletionVector.offset")[i],
-                "sizeInBytes": col("add.deletionVector.sizeInBytes")[i],
-                "cardinality": col("add.deletionVector.cardinality")[i],
-            }
-        live[s(apath)] = add
-    sidecars = [
-        s(p) for p in (cols.get("sidecar.path") or []) if p is not None
-    ]
-    if sidecars:
-        if fetch is None:
-            raise NotImplementedError(
-                "v2 checkpoint carries sidecar files but no fetch was "
-                "provided to resolve them"
-            )
-        for name in sidecars:
-            part_live, _ = _checkpoint_state(
-                fetch(f"_delta_log/_sidecars/{name}")
-            )
-            live.update(part_live)
-    return live, metadata
+            dv_storage = col("add.deletionVector.storageType")[i]
+            if dv_storage is not None:
+                add["deletionVector"] = {
+                    "storageType": _s(dv_storage),
+                    "pathOrInlineDv": _s(
+                        col("add.deletionVector.pathOrInlineDv")[i]
+                    ),
+                    "offset": col("add.deletionVector.offset")[i],
+                    "sizeInBytes": col("add.deletionVector.sizeInBytes")[i],
+                    "cardinality": col("add.deletionVector.cardinality")[i],
+                }
+            live[add["path"]] = add
+        for name in col("sidecar.path"):
+            if name is None:
+                continue
+            if fetch is None:
+                raise NotImplementedError(
+                    "v2 checkpoint carries sidecar files but no fetch was "
+                    "provided to resolve them"
+                )
+            sidecar = fetch(f"{_LOG}_sidecars/{_s(name)}")
+            live.update(_decode_checkpoint([sidecar])["live"])
+    return {
+        "live": live, "metadata": metadata, "protocol": protocol, "txns": txns,
+    }
 
 
-def _read_snapshot(
-    log_blobs: dict,
-    checkpoints: dict,
-    last_checkpoint: bytes | None,
-    fetch,
-    version: int | None,
-    partition_filter: dict | None = None,
-) -> dict:
-    from .parquetmeta import parse_parquet_data
+def _checkpoint_state(blob: bytes, fetch=None) -> tuple[dict, dict | None]:
+    """(live add map, metaData or None) of ONE checkpoint parquet — the
+    single-part view of ``_decode_checkpoint``."""
+    state = _decode_checkpoint([blob], fetch)
+    return state["live"], state["metadata"]
 
-    log = log_blobs
-    cp_version = None
-    if last_checkpoint is not None:
-        lc = json.loads(last_checkpoint)
-        cp_version = lc["version"]
-        if cp_version not in checkpoints:
+
+def _replay(reader, version: int | None = None) -> dict:
+    """THE Delta log replay: ``reader`` is ``(get, names)`` from
+    ``_zip_reader``/``_dir_reader``; returns {live, metadata, protocol,
+    txns, version} at ``version`` (default: the head) from actions
+    alone — no data file is touched, so the work is proportional to the
+    LOG, never the data.
+
+    One checkpoint policy (the Delta protocol's): state at V starts from
+    the newest checkpoint at or below V, then replays the JSON commits
+    after it. A ``_last_checkpoint`` pointer must name an existing
+    checkpoint with the declared part count, and the checkpoint it names
+    is used even when incomplete (it then raises 'missing parts': the
+    pointer is written only after every part). Without the pointer only
+    COMPLETE checkpoints qualify — a crash mid multi-part write can leave
+    some parts published, and delta-spark then falls back to the newest
+    complete one (ADVICE r12). With no checkpoint at or below V the JSON
+    log must be whole from version 0."""
+    get, names = reader
+    commits, checkpoints, pointer = _log_listing(names)
+    head = max(max(commits, default=-1), max(checkpoints, default=-1))
+    if head < 0:
+        raise ValueError("no _delta_log commit files in payload")
+    usable = {
+        v for v, e in checkpoints.items() if len(e["parts"]) == e["n"]
+    }
+    if pointer:
+        lc = json.loads(get(_LOG + "_last_checkpoint"))
+        pointed = lc["version"]
+        if pointed not in checkpoints:
             raise ValueError(
-                f"_last_checkpoint names version {cp_version} but no such "
+                f"_last_checkpoint names version {pointed} but no such "
                 "checkpoint parquet exists"
             )
-        if lc.get("parts", 1) != checkpoints[cp_version]["n"]:
+        if lc.get("parts", 1) != checkpoints[pointed]["n"]:
             raise ValueError(
                 f"_last_checkpoint declares {lc.get('parts', 1)} parts but "
-                f"checkpoint {cp_version} carries "
-                f"{checkpoints[cp_version]['n']}"
+                f"checkpoint {pointed} carries {checkpoints[pointed]['n']}"
             )
-    elif checkpoints:
-        # tolerate a missing _last_checkpoint (it is only a pointer):
-        # the newest COMPLETE checkpoint is authoritative — a crash mid
-        # multi-part write can leave partial parts published, and those
-        # must not poison the read when an older complete checkpoint or
-        # the full JSON log can serve it (ADVICE r12)
-        complete = _complete_checkpoints(checkpoints)
-        if complete:
-            cp_version = complete[-1]
-        elif 0 not in log:
-            # no usable checkpoint AND the JSON prefix is pruned: loud
-            _checkpoint_blobs(checkpoints, max(checkpoints))
-    if not log and cp_version is None:
-        raise ValueError("no _delta_log commit files in payload")
-    latest = max(max(log, default=-1), cp_version if cp_version is not None else -1)
-    # JSON commits after the checkpoint must be contiguous up to latest;
-    # the prefix at/before the checkpoint may legitimately be pruned
-    tail_start = 0 if cp_version is None else cp_version + 1
-    missing_tail = [v for v in range(tail_start, latest + 1) if v not in log]
-    if missing_tail:
-        if cp_version is None:
-            raise ValueError("delta log versions are not contiguous from 0")
-        raise ValueError(
-            f"delta log versions {missing_tail} missing after checkpoint"
-        )
+        usable.add(pointed)
     if version is None:
-        version = latest
-    if not 0 <= version <= latest:
-        raise ValueError(f"version {version} outside log range 0..{latest}")
-    live: dict[str, dict] = {}
-    metadata: dict | None = None
-    if cp_version is not None and version >= cp_version:
-        live = {}
-        for blob in _checkpoint_blobs(checkpoints, cp_version):
-            part_live, part_meta = _checkpoint_state(blob, fetch)
-            live.update(part_live)
-            metadata = metadata or part_meta
-        replay_from = cp_version + 1
-    else:
-        # time travel to before the checkpoint needs the JSON prefix
-        missing_head = [v for v in range(version + 1) if v not in log]
-        if missing_head:
+        version = head
+    if not 0 <= version <= head:
+        raise ValueError(f"version {version} outside log range 0..{head}")
+    base = max((v for v in usable if v <= version), default=None)
+    start = 0 if base is None else base + 1
+    missing = [v for v in range(start, version + 1) if v not in commits]
+    if missing and base is not None:
+        raise ValueError(
+            f"delta log versions {missing} missing after checkpoint {base}"
+        )
+    if missing:
+        below = [v for v in checkpoints if v <= version]
+        if below:
+            # only incomplete checkpoints serve V: loud, naming the parts
+            _checkpoint_parts(checkpoints, max(below))
+        if checkpoints:
             raise ValueError(
-                f"version {version} precedes checkpoint {cp_version} and "
-                f"JSON commits {missing_head} are pruned"
+                f"version {version} precedes checkpoint {min(checkpoints)} "
+                f"and JSON commits {missing} are pruned"
             )
-        replay_from = 0
-    for v in range(replay_from, version + 1):
-        for line in log[v].splitlines():
-            if not line.strip():
-                continue
-            action = json.loads(line)
-            if "protocol" in action:
-                _check_protocol(action["protocol"])
-            elif "metaData" in action:
-                metadata = action["metaData"]
-            elif "add" in action:
+        raise ValueError("delta log versions are not contiguous from 0")
+    state = {"live": {}, "metadata": None, "protocol": None, "txns": {}}
+    if base is not None:
+        state = _decode_checkpoint(
+            [get(n) for n in _checkpoint_parts(checkpoints, base)], get
+        )
+    live = state["live"]
+    metadata = state["metadata"]
+    protocol = state["protocol"] or {"minReaderVersion": 1, "minWriterVersion": 2}
+    txns = dict(state["txns"])
+    for v in range(start, version + 1):
+        for action in read_commit(get, v, "the log is not contiguous"):
+            if "add" in action:
                 live[action["add"]["path"]] = action["add"]
             elif "remove" in action:
                 live.pop(action["remove"]["path"], None)
+            elif "metaData" in action:
+                m = action["metaData"]
+                metadata = {
+                    "id": m.get("id"),
+                    "schemaString": m["schemaString"],
+                    "partitionColumns": m.get("partitionColumns", []),
+                    "configuration": m.get("configuration") or {},
+                }
+            elif "protocol" in action:
+                protocol = action["protocol"]
+                _check_protocol(protocol)
+            elif "txn" in action:
+                t = action["txn"]
+                txns[t["appId"]] = max(
+                    txns.get(t["appId"], -1), t.get("version", -1)
+                )
     if metadata is None:
         raise ValueError("delta log carries no metaData action")
+    return {
+        "live": live, "metadata": metadata, "protocol": protocol,
+        "txns": txns, "version": version,
+    }
+
+
+def _audit_snapshot(
+    reader, version: int | None, partition_filter: dict | None
+) -> dict:
+    """Snapshot audit over ``_replay``: decode every live parquet file
+    with the in-repo DATA-page decoder and cross-check it against the
+    log (stats numRecords, deletion-vector bounds)."""
+    from .parquetmeta import parse_parquet_data
+
+    fetch = reader[0]
+    state = _replay(reader, version)
+    version = state["version"]
+    live = state["live"]
+    metadata = state["metadata"]
     mapping = _column_mapping(metadata)
     ids = _column_ids(metadata)
     # the audited content sum follows the TABLE's first integer column;
@@ -1778,168 +1838,14 @@ def _dv_grouped_scan(spark, files, pcols, ptypes, fields3, reader=None):
     return df.select(*sel)
 
 
-def read_checkpoint_full_state(blobs, fetch=None) -> dict:
-    """Full checkpoint decode for WRITER-side state rebuilding (pyarrow-
-    free, via the nested record decoder): live add map plus the raw
-    metaData / protocol dicts and the per-appId txn versions a resumed
-    streaming sink needs to stay exactly-once after log cleanup.
-    Accepts one blob or the ordered part list of a MULTI-PART checkpoint
-    (actions merge across parts; metaData/protocol appear in one)."""
-    from .parquetmeta import parse_parquet_leaf_names, parse_parquet_records
-
-    if isinstance(blobs, (bytes, bytearray)):
-        blobs = [blobs]
-    wanted = _CP_LEAVES + (
-        "metaData.partitionColumns.list.element",
-        "protocol.minWriterVersion",
-        "protocol.writerFeatures.list.element",
-        "txn.appId",
-        "txn.version",
-    )
-    live: dict = {}
-    metadata = None
-    protocol = None
-    txns: dict[str, int] = {}
-
-    def s(v):
-        return v.decode() if isinstance(v, bytes) else v
-
-    for blob in blobs:
-        avail = set(parse_parquet_leaf_names(blob))
-        cols = parse_parquet_records(
-            blob, columns=sorted(set(c for c in wanted if c in avail))
-        )
-        part_live, part_meta = _checkpoint_state(blob, fetch)
-        live.update(part_live)
-        if part_meta is not None:
-            metadata = part_meta
-        n = len(cols["add.path"])
-
-        def col(name, default=None):
-            return cols.get(name) or [default] * n
-
-        for i in range(n):
-            if col("protocol.minReaderVersion")[i] is not None:
-                feats = col("protocol.readerFeatures.list.element")[i]
-                wfeats = col("protocol.writerFeatures.list.element")[i]
-                protocol = {
-                    "minReaderVersion": col("protocol.minReaderVersion")[i],
-                    "minWriterVersion": col("protocol.minWriterVersion")[i],
-                }
-                if feats:
-                    protocol["readerFeatures"] = [s(f) for f in feats]
-                if wfeats:
-                    protocol["writerFeatures"] = [s(f) for f in wfeats]
-            app = col("txn.appId")[i]
-            if app is not None:
-                txns[s(app)] = max(txns.get(s(app), -1), col("txn.version")[i])
-    if metadata is None:
-        raise ValueError("delta checkpoint carries no metaData action")
-    return {
-        "live": live,
-        "metadata": metadata,
-        "protocol": protocol or {"minReaderVersion": 1, "minWriterVersion": 2},
-        "txns": txns,
-    }
-
-
 def replay_delta_dir(path: str, version: int | None = None) -> dict:
-    """Metadata-only state replay for a directory-rooted Delta table:
-    {live, metadata, protocol, txns, version} via the newest usable
-    checkpoint plus the JSON tail — no data files touched. Driver-side
-    work proportional to the LOG, never the data (the 100 TB contract:
-    snapshot resolution reads a few KB of actions, the scan stays fully
-    distributed)."""
-    import os
-
-    logdir = os.path.join(path, "_delta_log")
-    if not os.path.isdir(logdir):
-        raise ValueError("no _delta_log commit files in payload")
-    json_versions = {}
-    checkpoints: dict = {}
-    for fn in os.listdir(logdir):
-        if fn.endswith(".json"):
-            json_versions[int(fn[: -len(".json")])] = os.path.join(logdir, fn)
-        elif fn.endswith(".parquet") and ".checkpoint" in fn:
-            _add_checkpoint_part(checkpoints, fn, os.path.join(logdir, fn))
-    head = max(
-        max(json_versions, default=-1), max(checkpoints, default=-1)
-    )
-    if head < 0:
-        raise ValueError("no _delta_log commit files in payload")
-    if version is None:
-        version = head
-    if not 0 <= version <= head:
-        raise ValueError(f"version {version} outside log range 0..{head}")
-    live: dict = {}
-    metadata = None
-    protocol = {"minReaderVersion": 1, "minWriterVersion": 2}
-    txns: dict[str, int] = {}
-    start = 0
-    if 0 not in json_versions:
-        # newest COMPLETE checkpoint at/below the target version — a
-        # partial multi-part checkpoint (crash mid-write) must not be
-        # selected when an older complete one can serve (ADVICE r12)
-        cps = _complete_checkpoints(checkpoints, at_most=version)
-        if not cps:
-            below = [c for c in checkpoints if c <= version]
-            if below:
-                # only incomplete checkpoints exist: loud, with parts
-                _checkpoint_blobs(checkpoints, max(below))
-            raise ValueError(
-                f"version {version} precedes the checkpoint and the JSON "
-                "prefix is pruned"
-            )
-        blobs = []
-        for part_path in _checkpoint_blobs(checkpoints, max(cps)):
-            with open(part_path, "rb") as f:
-                blobs.append(f.read())
-
-        def _fetch_rel(rel):
-            with open(os.path.join(path, rel), "rb") as f:
-                return f.read()
-
-        state = read_checkpoint_full_state(blobs, _fetch_rel)
-        live = state["live"]
-        metadata = state["metadata"]
-        protocol = state["protocol"]
-        txns = dict(state["txns"])
-        start = max(cps) + 1
-    _check_protocol(protocol)
-    for v in range(start, version + 1):
-        if v not in json_versions:
-            raise ValueError(f"delta commit {v} missing during replay")
-        with open(json_versions[v], "rb") as f:
-            for line in f.read().splitlines():
-                if not line.strip():
-                    continue
-                action = json.loads(line)
-                if "add" in action:
-                    live[action["add"]["path"]] = action["add"]
-                elif "remove" in action:
-                    live.pop(action["remove"]["path"], None)
-                elif "metaData" in action:
-                    m = action["metaData"]
-                    metadata = {
-                        "id": m["id"],
-                        "schemaString": m["schemaString"],
-                        "partitionColumns": m.get("partitionColumns", []),
-                        "configuration": m.get("configuration") or {},
-                    }
-                elif "protocol" in action:
-                    protocol = action["protocol"]
-                    _check_protocol(protocol)
-                elif "txn" in action:
-                    t = action["txn"]
-                    txns[t["appId"]] = max(
-                        txns.get(t["appId"], -1), t.get("version", -1)
-                    )
-    if metadata is None:
-        raise ValueError("delta log carries no metaData action")
-    return {
-        "live": live, "metadata": metadata, "protocol": protocol,
-        "txns": txns, "version": version,
-    }
+    """Metadata-only state replay of a directory-rooted Delta table:
+    {live, metadata, protocol, txns, version} through ``_replay`` (newest
+    usable checkpoint plus the JSON tail) — no data files touched.
+    Driver-side work proportional to the LOG, never the data (the 100 TB
+    contract: snapshot resolution reads a few KB of actions, the scan
+    stays fully distributed)."""
+    return _replay(_dir_reader(path), version)
 
 
 _DELTA_TO_SPARK = {
@@ -2028,26 +1934,7 @@ def delta_table_changes(
         raise NotImplementedError(
             "table_changes on column-mapped tables unsupported"
         )
-    logdir = os.path.join(path, "_delta_log")
-
-    def commit_actions(v: int) -> list[dict]:
-        p = os.path.join(logdir, f"{v:020d}.json")
-        if not os.path.isfile(p):
-            raise ValueError(
-                f"delta commit {v} was cleaned from the log; change "
-                "history across it is gone"
-            )
-        with open(p, "rb") as f:
-            return [
-                json.loads(line)
-                for line in f.read().splitlines()
-                if line.strip()
-            ]
-
-    def fetch(rel: str) -> bytes:
-        with open(os.path.join(path, rel), "rb") as f:
-            return f.read()
-
+    fetch = _dir_get(path)
     prior = (
         dict(replay_delta_dir(path, starting_version - 1)["live"])
         if starting_version > 0
@@ -2067,7 +1954,9 @@ def delta_table_changes(
         removes = {}
         all_removes: set[str] = set()
         cdcs = []
-        for action in commit_actions(v):
+        for action in read_commit(
+            fetch, v, "change history across it is gone"
+        ):
             if "add" in action:
                 adds[action["add"]["path"]] = action["add"]
             elif "remove" in action:
@@ -2477,10 +2366,7 @@ def scan_adds(spark, path: str, metadata: dict, live: dict) -> DataFrame:
             df = df.withColumn(c, col)
         return df
 
-    def fetch(rel: str) -> bytes:
-        with open(os.path.join(path, rel), "rb") as f:
-            return f.read()
-
+    fetch = _dir_get(path)
     parts = []
     groups: dict[tuple, list[str]] = {}
     dv_files: list[tuple] = []  # rel, key, raw_dv_bytes, cardinality

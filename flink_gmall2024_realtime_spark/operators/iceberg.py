@@ -41,6 +41,7 @@ from pyspark.sql import DataFrame
 
 from ..streaming.tablecommit import (
     check_drift,
+    commit_with_retry,
     drain,
     footer_stats,
     place_staged,
@@ -2650,28 +2651,30 @@ class IcebergAppendSink:
     snapshot log appends one snapshot — then claims the version by
     linking the fully-written metadata file into place (putIfAbsent; a
     lost race re-reads the head and retries). ``version-hint.text``
-    advances monotonically afterwards (it is only a pointer — readers
-    fall back to latest-metadata-wins when it lags).
+    advances monotonically after every published metadata version (it
+    is only a pointer — readers fall back to latest-metadata-wins when
+    it lags).
 
     Exactly-once under at-least-once replay: every snapshot's summary
     carries the producing ``batch-id``; a replayed batch whose id
     already appears in the snapshot log is skipped before any write
     (Iceberg's real streaming sinks dedupe the same way, via snapshot
-    summary properties). Dim/serving shape: one driver-side Arrow file
-    per commit — fact streams belong on the Delta distributed path.
+    summary properties). ``commit_batch`` writes one driver-side Arrow
+    file per commit (the dim/serving shape); fact streams go through
+    ``commit_batch_distributed`` (one manifest entry per task file).
 
     The format-neutral commit steps come from the table-format core
     (``streaming/tablecommit.py``, shared with ``DeltaAppendSink``): the
-    putIfAbsent publish of each metadata version, footer stats, staged
-    file placement, the drift check of mutating commits and the orphan
-    sweep. This class keeps what is Iceberg's own: manifests, manifest
-    lists, snapshot summaries and position/equality deletes."""
+    putIfAbsent publish of each metadata version, the retry loop around
+    it, footer stats, staged file placement, the drift check of mutating
+    commits and the orphan sweep. This class keeps what is Iceberg's
+    own: manifests, manifest lists, snapshot summaries and
+    position/equality deletes."""
 
     def __init__(
         self,
         spark,
         path: str,
-        max_commit_attempts: int = 20,
         partition_columns: list[str] | None = None,
         schema_evolution: bool = False,
     ) -> None:
@@ -2679,7 +2682,6 @@ class IcebergAppendSink:
 
         self.spark = spark
         self.path = path
-        self.max_commit_attempts = max_commit_attempts
         # r14: batches appending NEW columns evolve the table schema
         # (a new schemas[] entry + current-schema-id bump) when on;
         # loud otherwise. Existing columns must keep name/type/order.
@@ -2729,15 +2731,33 @@ class IcebergAppendSink:
 
     # ----------------------------------------------------------- write
 
-    def _publish_metadata(self, version: int, md: dict) -> bool:
+    def _publish_metadata(self, version: int, body: bytes) -> bool:
         """Claim metadata version ``version`` (putIfAbsent through the
-        commit core); False when a concurrent writer claimed it first."""
+        commit core); False when a concurrent writer claimed it first.
+
+        A claimed version then advances ``version-hint.text``, never
+        backwards: a racing committer's blind replace could otherwise roll
+        the pointer back and serve readers a stale snapshot until the next
+        commit (ADVICE r12). Readers also probe forward past the hint, so
+        a crash between the two is only a lost hint update, never a lost
+        commit."""
         import os
 
-        return publish_if_absent(
-            os.path.join(self.path, "metadata", f"v{version}.metadata.json"),
-            json.dumps(md).encode(),
-        )
+        meta = os.path.join(self.path, "metadata")
+        if not publish_if_absent(
+            os.path.join(meta, f"v{version}.metadata.json"), body
+        ):
+            return False
+        hint = os.path.join(meta, "version-hint.text")
+        current = -1
+        try:
+            with open(hint) as f:
+                current = int(f.read().strip())
+        except (FileNotFoundError, ValueError):
+            pass
+        if version > current:
+            replace_atomically(hint, str(version).encode())
+        return True
 
     _SPARK_TO_ICE = {
         "bigint": "long", "int": "int", "smallint": "int", "tinyint": "int",
@@ -2937,7 +2957,8 @@ class IcebergAppendSink:
         what: str = "commit",
     ) -> int | None:
         """Shared commit core: manifest (with bounds) + manifest list +
-        pointer-swap metadata publish + monotone hint advance.
+        pointer-swap metadata publish, retried on a fresh head after a
+        lost race (``commit_with_retry``).
 
         r14: the manifest list carries SEQUENCE NUMBERS (the seq list
         schema) so position deletes scope correctly — a delete at seq N
@@ -2994,7 +3015,8 @@ class IcebergAppendSink:
                     },
                 },
             )
-        for _ in range(self.max_commit_attempts):
+
+        def build():
             head_v, md = self._head()
             # OCC: validate on EVERY attempt (the head may already have
             # moved between the caller's read and the first publish) — a
@@ -3185,29 +3207,13 @@ class IcebergAppendSink:
                 if schema_update is not None:
                     new_md["schemas"] = md["schemas"] + [schema_update]
                     new_md["current-schema-id"] = schema_update["schema-id"]
-            if not self._publish_metadata(head_v + 1, new_md):
-                if self._is_committed(batch_id):
-                    return None
-                continue  # lost the pointer race: retry on the new head
-            # advance the hint, never move it backwards: a racing
-            # committer's blind os.replace could otherwise roll the
-            # pointer back and serve readers a stale snapshot until the
-            # next commit (ADVICE r12). Readers also probe forward past
-            # the hint, so a crash landing here is only a lost hint
-            # update, never a lost commit.
-            hint = os.path.join(self.path, "metadata", "version-hint.text")
-            current = -1
-            try:
-                with open(hint) as f:
-                    current = int(f.read().strip())
-            except (FileNotFoundError, ValueError):
-                pass
-            if head_v + 1 > current:
-                replace_atomically(hint, str(head_v + 1).encode())
-            return snap_id
-        raise RuntimeError(
-            f"could not claim an iceberg metadata version for batch "
-            f"{batch_id} in {self.max_commit_attempts} attempts"
+            return head_v + 1, json.dumps(new_md).encode(), snap_id
+
+        return commit_with_retry(
+            f"iceberg {what} of batch {batch_id}",
+            build,
+            self._publish_metadata,
+            lambda: self._is_committed(batch_id),
         )
 
     def delete_where(
@@ -3345,13 +3351,12 @@ class IcebergAppendSink:
         expired snapshot ids."""
         if keep_last < 1:
             raise ValueError("keep_last must be >= 1")
-        for _ in range(self.max_commit_attempts):
+
+        def build():
             head_v, md = self._head()
-            if md is None:
-                return []
+            if md is None or len(md["snapshots"]) <= keep_last:
+                return None, None, []
             snaps = md["snapshots"]
-            if len(snaps) <= keep_last:
-                return []
             keep = snaps[-keep_last:]
             if not any(
                 s["snapshot-id"] == md["current-snapshot-id"] for s in keep
@@ -3371,12 +3376,14 @@ class IcebergAppendSink:
             props = dict(md.get("properties") or {})
             props["max-expired-batch-id"] = str(new_wm)
             new_md["properties"] = props
-            if self._publish_metadata(head_v + 1, new_md):
-                return [s["snapshot-id"] for s in expired]
-            # lost a race with a concurrent commit: retry on the new head
-        raise RuntimeError(
-            "could not claim an iceberg metadata version for "
-            f"expire_snapshots in {self.max_commit_attempts} attempts"
+            return (
+                head_v + 1,
+                json.dumps(new_md).encode(),
+                [s["snapshot-id"] for s in expired],
+            )
+
+        return commit_with_retry(
+            "iceberg expire_snapshots", build, self._publish_metadata
         )
 
     def vacuum_orphans(
@@ -3439,7 +3446,8 @@ class IcebergAppendSink:
         rolled-past snapshots stay in the list until expired), readers
         at explicit snapshot ids are unaffected. Returns the new
         metadata version."""
-        for _ in range(self.max_commit_attempts):
+
+        def build():
             head_v, md = self._head()
             if md is None:
                 raise ValueError("rollback on a table with no commits")
@@ -3451,11 +3459,12 @@ class IcebergAppendSink:
                 )
             new_md = dict(md)
             new_md["current-snapshot-id"] = snapshot_id
-            if self._publish_metadata(head_v + 1, new_md):
-                return head_v + 1
-        raise RuntimeError(
-            "could not claim an iceberg metadata version for rollback "
-            f"in {self.max_commit_attempts} attempts"
+            return head_v + 1, json.dumps(new_md).encode(), head_v + 1
+
+        return commit_with_retry(
+            f"iceberg rollback to snapshot {snapshot_id}",
+            build,
+            self._publish_metadata,
         )
 
     def rewrite_manifests(self, batch_id: int) -> int | None:
@@ -3477,7 +3486,8 @@ class IcebergAppendSink:
 
         if self._is_committed(batch_id):
             return None
-        for _ in range(self.max_commit_attempts):
+
+        def build():
             head_v, md = self._head()
             if md is None:
                 raise ValueError("rewrite_manifests on a table with no commits")
@@ -3527,7 +3537,7 @@ class IcebergAppendSink:
                         seq = e.get("sequence_number", 0)
                     entries.append((rec["snapshot_id"], seq, rec["data_file"]))
             if len([e for e in ml_entries if e.get("content", 0) == 0]) <= 1:
-                return None  # already compacted: nothing to do
+                return None, None, None  # already compacted: nothing to do
             schema = json.loads(json.dumps(_BOUNDS_MANIFEST_SCHEMA))
             schema["fields"].insert(
                 2, {"name": "sequence_number", "type": "long"}
@@ -3604,13 +3614,13 @@ class IcebergAppendSink:
             new_md["last-sequence-number"] = seq
             new_md["current-snapshot-id"] = snap_id
             new_md["snapshots"] = md["snapshots"] + [snapshot]
-            if self._publish_metadata(head_v + 1, new_md):
-                return snap_id
-            if self._is_committed(batch_id):
-                return None
-        raise RuntimeError(
-            "could not claim an iceberg metadata version for "
-            f"rewrite_manifests in {self.max_commit_attempts} attempts"
+            return head_v + 1, json.dumps(new_md).encode(), snap_id
+
+        return commit_with_retry(
+            f"iceberg rewrite_manifests of batch {batch_id}",
+            build,
+            self._publish_metadata,
+            lambda: self._is_committed(batch_id),
         )
 
     def sink(self):
@@ -3657,11 +3667,8 @@ class IcebergKeyedStore(IcebergAppendSink):
         key: str,
         order_col: str,
         type_col: str | None = None,
-        max_commit_attempts: int = 20,
     ) -> None:
-        super().__init__(
-            spark, path, max_commit_attempts=max_commit_attempts
-        )
+        super().__init__(spark, path)
         self.key = key
         self.order_col = order_col
         self.type_col = type_col
@@ -3672,18 +3679,12 @@ class IcebergKeyedStore(IcebergAppendSink):
         import pyarrow.parquet as pq
 
         from pyspark.sql import functions as F
-        from pyspark.sql.window import Window
+
+        from .skew import latest_by_key
 
         if self._is_committed(batch_id):
             return None
-        w = Window.partitionBy(self.key).orderBy(
-            F.col(self.order_col).desc()
-        )
-        latest = (
-            batch.withColumn("__rn", F.row_number().over(w))
-            .filter(F.col("__rn") == 1)
-            .drop("__rn")
-        )
+        latest = latest_by_key(batch, self.key, self.order_col)
         if self.type_col and self.type_col in latest.columns:
             rows = latest.filter(
                 F.col(self.type_col) != F.lit("delete")

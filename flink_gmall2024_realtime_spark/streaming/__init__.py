@@ -11,8 +11,8 @@ streaming DataFrame pipeline:
                  DwdBaseLog five-way split, the DimApp config-driven router
 - ``delta``      Delta Lake sinks, keyed stores and the incremental source
 - ``tablecommit`` the commit core under the Delta and Iceberg writers
-                 (publish, footer stats, staged placement, drift check,
-                 orphan sweep)
+                 (publish and its retry loop, footer stats, staged
+                 placement, drift check, orphan sweep)
 - ``kafka``      Kafka source/sink builders (FlinkSourceUtil/FlinkSinkUtil
                  equivalents) for live deployments; fixture tests use file
                  streams with identical topology code

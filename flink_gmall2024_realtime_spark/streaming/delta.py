@@ -57,11 +57,20 @@ import re
 
 from pyspark.sql import DataFrame
 
+from ..operators.deltalog import (
+    _dir_get,
+    _dir_reader,
+    _log_listing,
+    read_commit,
+    replay_delta_dir,
+)
+
 # ConcurrentWriteError lives in the commit core; importing it from here
 # keeps working
 from .tablecommit import (
     ConcurrentWriteError,
     check_drift,
+    commit_with_retry,
     drain,
     footer_stats,
     place_staged,
@@ -187,6 +196,34 @@ def _is_data_file(rel: str) -> bool:
     return rel.endswith(".parquet")
 
 
+def _readd(add: dict, **fields) -> str:
+    """The add action that puts an existing data file (back) into the
+    table. A checkpoint row carries no ``modificationTime``, which the
+    protocol requires on every add action, so it defaults to 0 as on
+    every add this writer emits."""
+    add = {**add, "modificationTime": add.get("modificationTime", 0)}
+    return json.dumps({"add": {**add, "dataChange": True, **fields}})
+
+
+def _content_keys(live: dict) -> dict:
+    """{rel: deletion vector} of live add actions — what identifies a live
+    file's content. A Delta data file never changes under its path; a
+    delete re-adds the path with a new deletion vector. The other add
+    fields (stats, dataChange, modificationTime) differ between a JSON
+    add and its checkpoint row, so comparing whole actions would report
+    drift where there is none."""
+    return {
+        rel: tuple(
+            sorted(
+                (k, v)
+                for k, v in (add.get("deletionVector") or {}).items()
+                if v is not None
+            )
+        )
+        for rel, add in live.items()
+    }
+
+
 def _hive_name(prefix: str, batch_id: int):
     """``place_staged`` namer that keeps the Hive partition dirs:
     ``[<partition dirs>/]<prefix>-b<batch>-<i>.parquet``."""
@@ -234,19 +271,19 @@ class DeltaAppendSink:
     is Delta's own: the log actions, txn batch ids, checkpoints and
     deletion vectors."""
 
+    # the txn appId (and the CREATE commit's table id) of this writer
+    # class: existing tables dedupe replays against these exact strings
+    APP_ID = "delta-append-sink"
+
     def __init__(
         self,
         path: str,
-        max_commit_attempts: int = 20,
-        app_id: str = "delta-append-sink",
         checkpoint_interval: int | None = None,
         checkpoint_parts: int = 1,
         schema_evolution: bool = False,
         partition_columns: list[str] | None = None,
     ) -> None:
         self.path = path
-        self.max_commit_attempts = max_commit_attempts
-        self.app_id = app_id
         self.schema_evolution = schema_evolution
         self.checkpoint_interval = checkpoint_interval
         # r13: PARTITIONED tables — every add carries partitionValues,
@@ -291,21 +328,14 @@ class DeltaAppendSink:
             for i in range(n)
         ]
 
+    def _listing(self) -> tuple[dict, dict, bool]:
+        return _log_listing(_dir_reader(self.path)[1])
+
     def committed_versions(self) -> list[int]:
-        return sorted(
-            int(fn[: -len(".json")])
-            for fn in os.listdir(self._logdir())
-            if fn.endswith(".json")
-        )
+        return sorted(self._listing()[0])
 
     def checkpoint_versions(self) -> list[int]:
-        return sorted(
-            {
-                int(fn.split(".", 1)[0])
-                for fn in os.listdir(self._logdir())
-                if fn.endswith(".parquet") and ".checkpoint" in fn
-            }
-        )
+        return sorted(self._listing()[1])
 
     def _seed_txn_from_checkpoint(self) -> None:
         """After ``clean_log()`` (or on restart against a cleaned table)
@@ -317,27 +347,26 @@ class DeltaAppendSink:
         self._txn_seeded = True
         if self.checkpoint_versions():
             txns = self._replay_state(self.head_version())["txns"]
-            self._txn_max = max(self._txn_max, txns.get(self.app_id, -1))
+            self._txn_max = max(self._txn_max, txns.get(self.APP_ID, -1))
 
     def _is_committed(self, batch_id: int) -> bool:
         self._seed_txn_from_checkpoint()
         # only parse commit files newer than the last scan — O(new) per
         # micro-batch instead of O(all history) (ADVICE r11)
+        get = _dir_get(self.path)
         for v in self.committed_versions():
             if v < self._scanned_upto:
                 continue
-            with open(self._commit_path(v), "rb") as f:
-                for line in f.read().splitlines():
-                    action = json.loads(line)
-                    if "commitInfo" in action:
-                        bid = action["commitInfo"].get("batchId")
-                        if bid is not None:
-                            self._known_batch_ids.add(bid)
-                    elif "txn" in action:
-                        if action["txn"].get("appId") == self.app_id:
-                            self._txn_max = max(
-                                self._txn_max, action["txn"].get("version", -1)
-                            )
+            for action in read_commit(get, v, "its batch id is unreadable"):
+                if "commitInfo" in action:
+                    bid = action["commitInfo"].get("batchId")
+                    if bid is not None:
+                        self._known_batch_ids.add(bid)
+                elif "txn" in action:
+                    if action["txn"].get("appId") == self.APP_ID:
+                        self._txn_max = max(
+                            self._txn_max, action["txn"].get("version", -1)
+                        )
             self._scanned_upto = v + 1
         return batch_id in self._known_batch_ids or batch_id <= self._txn_max
 
@@ -579,7 +608,7 @@ class DeltaAppendSink:
         txn = json.dumps(
             {
                 "txn": {
-                    "appId": self.app_id,
+                    "appId": self.APP_ID,
                     "version": batch_id,
                     "lastUpdated": 0,
                 }
@@ -588,7 +617,8 @@ class DeltaAppendSink:
         info = json.dumps(
             {"commitInfo": {"operation": "STREAMING UPDATE", "batchId": batch_id}}
         )
-        for _ in range(self.max_commit_attempts):
+
+        def build():
             head = self.head_version()
             if (
                 expected_files is not None
@@ -597,9 +627,9 @@ class DeltaAppendSink:
             ):
                 # another writer landed between our snapshot and this
                 # attempt: every file we remove/re-add must be UNCHANGED
-                # (same add action, same deletionVector) or the
-                # mutation was computed against stale state; one
-                # computed against an EMPTY table conflicts with any commit
+                # (same path, same deletionVector) or the mutation was
+                # computed against stale state; one computed against an
+                # EMPTY table conflicts with any commit
                 if not expected_files:
                     raise ConcurrentWriteError(
                         f"concurrent update: version {head} landed on the "
@@ -607,8 +637,8 @@ class DeltaAppendSink:
                         "recompute against the new head"
                     )
                 check_drift(
-                    expected_files,
-                    self._replay_state(head)["live"],
+                    _content_keys(expected_files),
+                    _content_keys(self._replay_state(head)["live"]),
                     f"the snapshot at version {snapshot_version} (head "
                     f"now {head})",
                 )
@@ -628,7 +658,7 @@ class DeltaAppendSink:
                     json.dumps(
                         {
                             "metaData": {
-                                "id": self.app_id,
+                                "id": self.APP_ID,
                                 "format": {"provider": "parquet", "options": {}},
                                 "schemaString": _schema_string(batch),
                                 "partitionColumns": self.partition_columns,
@@ -647,24 +677,25 @@ class DeltaAppendSink:
                 for r in (removes or [])
             )
             lines.extend(adds)
-            body = ("\n".join(lines) + "\n").encode()
-            if not publish_if_absent(self._commit_path(next_v), body):
-                # lost the race: maybe OUR earlier attempt actually landed
-                if self._is_committed(batch_id):
-                    return None
-                continue  # append-only commits never conflict; retry above
+            return next_v, ("\n".join(lines) + "\n").encode(), next_v
+
+        # append-only commits never conflict: a lost race rebuilds on the
+        # new head unless OUR earlier attempt is the one that landed
+        version = commit_with_retry(
+            f"delta commit of batch {batch_id}",
+            build,
+            lambda v, body: publish_if_absent(self._commit_path(v), body),
+            lambda: self._is_committed(batch_id),
+        )
+        if version is not None:
             # fold OUR OWN commit into the replay-dedupe state immediately:
             # a same-instance replay after clean_log() pruned this JSON
             # would otherwise pass _is_committed and double-commit
             # (ADVICE r12)
             self._known_batch_ids.add(batch_id)
             self._txn_max = max(self._txn_max, batch_id)
-            self._maybe_checkpoint(next_v)
-            return next_v
-        raise ConcurrentWriteError(
-            f"could not claim a delta version for batch {batch_id} in "
-            f"{self.max_commit_attempts} attempts"
-        )
+            self._maybe_checkpoint(version)
+        return version
 
     def _physical_batch(
         self, batch: DataFrame
@@ -997,10 +1028,7 @@ class DeltaAppendSink:
             .select("__f", "__p")
         )
 
-        def fetch(rel: str) -> bytes:
-            with open(os.path.join(self.path, rel), "rb") as f:
-                return f.read()
-
+        fetch = _dir_get(self.path)
         # DISTRIBUTED DV construction (r14): positions roaring-serialize
         # per file IN EXECUTORS (groupBy file + applyInPandas) — the
         # driver only ever collects ONE compressed bitmap per touched
@@ -1126,7 +1154,7 @@ class DeltaAppendSink:
                 uid = _uuid.UUID(
                     int=(
                         batch_id * 2654435761
-                        + _zlib.crc32(self.app_id.encode())
+                        + _zlib.crc32(self.APP_ID.encode())
                     )
                     % (1 << 128)
                 )
@@ -1137,16 +1165,18 @@ class DeltaAppendSink:
                 ) as f:
                     f.write(blob)
             for rel, card, di in dv_slots:
-                new_add = dict(live[rel])
-                new_add["dataChange"] = True
-                new_add["deletionVector"] = {
-                    "storageType": "u",
-                    "pathOrInlineDv": enc,
-                    "offset": offsets[di],
-                    "sizeInBytes": len(datas[di]),
-                    "cardinality": card,
-                }
-                adds.append(json.dumps({"add": new_add}))
+                adds.append(
+                    _readd(
+                        live[rel],
+                        deletionVector={
+                            "storageType": "u",
+                            "pathOrInlineDv": enc,
+                            "offset": offsets[di],
+                            "sizeInBytes": len(datas[di]),
+                            "cardinality": card,
+                        },
+                    )
+                )
         extra = None
         proto = state.get("protocol") or {}
         feats = set(proto.get("readerFeatures") or [])
@@ -1206,12 +1236,11 @@ class DeltaAppendSink:
         live = state["live"]
         removes = sorted(set(live) - set(target))
         readds = sorted(set(target) - set(live))
-        # files whose add CHANGED between the versions (a delete_where
+        # files whose content CHANGED between the versions (a delete_where
         # re-added them with a different DV) must also roll back
+        now, then = _content_keys(live), _content_keys(target)
         changed = sorted(
-            rel
-            for rel in set(live) & set(target)
-            if live[rel] != target[rel]
+            rel for rel in set(live) & set(target) if now[rel] != then[rel]
         )
         missing = [
             rel
@@ -1223,10 +1252,7 @@ class DeltaAppendSink:
                 f"restore target files vacuumed: {missing[:3]}"
                 f"{'...' if len(missing) > 3 else ''}"
             )
-        adds = [
-            json.dumps({"add": {**target[rel], "dataChange": True}})
-            for rel in readds + changed
-        ]
+        adds = [_readd(target[rel]) for rel in readds + changed]
         return self._commit_actions(
             None,
             batch_id,
@@ -1323,8 +1349,6 @@ class DeltaAppendSink:
         resolution — delegates to the shared metadata-only replay
         (``operators/deltalog.replay_delta_dir``: newest usable
         checkpoint + JSON tail)."""
-        from ..operators.deltalog import replay_delta_dir
-
         return replay_delta_dir(self.path, version)
 
     def _maybe_checkpoint(self, version: int) -> None:
@@ -1357,28 +1381,27 @@ class DeltaAppendSink:
             # checkpoint contents for a version are deterministic state —
             # a lost race means an identical file already exists
             publish_if_absent(target, blob)
-        lc_path = os.path.join(self._logdir(), "_last_checkpoint")
-        current = -1
-        if os.path.exists(lc_path):
-            with open(lc_path, "rb") as f:
-                current = json.loads(f.read()).get("version", -1)
-        if version > current:
+        if version > self._pointed_checkpoint():
             size = len(state["live"]) + 2 + len(state["txns"])
             lc = {"version": version, "size": size}
             if n > 1:
                 lc["parts"] = n
-            replace_atomically(lc_path, json.dumps(lc).encode())
+            replace_atomically(
+                os.path.join(self._logdir(), "_last_checkpoint"),
+                json.dumps(lc).encode(),
+            )
+
+    def _pointed_checkpoint(self) -> int:
+        """The version ``_last_checkpoint`` names; -1 without the pointer."""
+        blob = _dir_get(self.path)("_delta_log/_last_checkpoint", optional=True)
+        return -1 if blob is None else json.loads(blob).get("version", -1)
 
     def clean_log(self) -> list[int]:
         """Delete JSON commits at or below the last checkpoint — delta-
         spark's log cleanup. Snapshot reads and replay-idempotence both
         survive via the checkpoint (txn rows carry the batch ids).
         Returns the pruned versions."""
-        lc_path = os.path.join(self._logdir(), "_last_checkpoint")
-        if not os.path.exists(lc_path):
-            return []
-        with open(lc_path, "rb") as f:
-            cp = json.loads(f.read())["version"]
+        cp = self._pointed_checkpoint()
         pruned = []
         for v in self.committed_versions():
             if v <= cp:
@@ -1396,9 +1419,8 @@ class DeltaAppendSink:
     def head_version(self) -> int:
         # after clean_log the JSON can be empty (or start past 0): the
         # table head is the max over commits AND checkpoints
-        versions = self.committed_versions()
-        cps = self.checkpoint_versions()
-        return max(versions[-1] if versions else -1, cps[-1] if cps else -1)
+        commits, checkpoints, _ = self._listing()
+        return max(max(commits, default=-1), max(checkpoints, default=-1))
 
     def _session(self, op: str):
         spark = getattr(self, "spark", None)
@@ -1461,6 +1483,8 @@ class DeltaKeyedStore(DeltaAppendSink):
     merged snapshot); big fact streams belong on
     ``DeltaAppendSink.commit_batch_distributed``."""
 
+    APP_ID = "delta-keyed-store"
+
     def __init__(
         self,
         spark,
@@ -1468,16 +1492,12 @@ class DeltaKeyedStore(DeltaAppendSink):
         key: str,
         order_col: str,
         type_col: str | None = None,
-        max_commit_attempts: int = 20,
-        app_id: str = "delta-keyed-store",
         checkpoint_interval: int | None = None,
         schema_evolution: bool = False,
         change_data_feed: bool = False,
     ) -> None:
         super().__init__(
             path,
-            max_commit_attempts=max_commit_attempts,
-            app_id=app_id,
             checkpoint_interval=checkpoint_interval,
             schema_evolution=schema_evolution,
         )
@@ -1630,7 +1650,7 @@ class DeltaKeyedStore(DeltaAppendSink):
 
     def vacuum(
         self, retention_seconds: float = 7 * 24 * 3600.0
-    ) -> list[int]:
+    ) -> list[str]:
         """Delete data files no longer referenced by the HEAD snapshot
         (removed by earlier merges) — Delta's VACUUM. Historical time
         travel below the vacuum horizon stops working, exactly like the
@@ -1671,6 +1691,7 @@ class BucketedDeltaKeyedStore(DeltaKeyedStore):
     sees an ordinary multi-file table."""
 
     _BUCKET_RE = re.compile(r"^bucket-(\d{5})-b\d{10}\.parquet$")
+    APP_ID = "delta-bucketed-store"
 
     def __init__(
         self,
@@ -1680,8 +1701,6 @@ class BucketedDeltaKeyedStore(DeltaKeyedStore):
         order_col: str,
         type_col: str | None = None,
         n_buckets: int = 16,
-        max_commit_attempts: int = 20,
-        app_id: str = "delta-bucketed-store",
         checkpoint_interval: int | None = None,
         schema_evolution: bool = False,
     ) -> None:
@@ -1691,8 +1710,6 @@ class BucketedDeltaKeyedStore(DeltaKeyedStore):
             key,
             order_col,
             type_col=type_col,
-            max_commit_attempts=max_commit_attempts,
-            app_id=app_id,
             checkpoint_interval=checkpoint_interval,
             schema_evolution=schema_evolution,
         )
@@ -1895,32 +1912,13 @@ class DeltaStreamSource:
         # None = snapshot-first start; an int = resume AFTER that version
         self._pos = starting_version
 
-    # ------------------------------------------------------------ state
-
-    def _commit_actions(self, version: int) -> list[dict]:
-        import os
-
-        p = os.path.join(self.path, "_delta_log", f"{version:020d}.json")
-        if not os.path.isfile(p):
-            raise ValueError(
-                f"delta commit {version} was cleaned from the log; an "
-                "incremental read across it is impossible — restart the "
-                "source snapshot-first (starting_version=None)"
-            )
-        with open(p, "rb") as f:
-            return [
-                json.loads(line)
-                for line in f.read().splitlines()
-                if line.strip()
-            ]
-
     # ------------------------------------------------------------- read
 
     def next_batch(self):
         """Returns (DataFrame, through_version) of rows not yet
         consumed, or None when the source is caught up. The first call
         on a fresh source returns the full snapshot at the head."""
-        from ..operators.deltalog import delta_scan, replay_delta_dir, scan_adds
+        from ..operators.deltalog import delta_scan, scan_adds
 
         head_state = replay_delta_dir(self.path)
         head = head_state["version"]
@@ -1932,8 +1930,14 @@ class DeltaStreamSource:
         if self.max_commits_per_batch is not None:
             head = min(head, self._pos + self.max_commits_per_batch)
         adds: dict = {}  # rel -> newest add action in the window
+        get = _dir_get(self.path)
         for v in range(self._pos + 1, head + 1):
-            for action in self._commit_actions(v):
+            for action in read_commit(
+                get,
+                v,
+                "an incremental read across it is impossible — restart "
+                "the source snapshot-first (starting_version=None)",
+            ):
                 if "remove" in action:
                     if action["remove"].get("dataChange", True) and not (
                         self.ignore_changes

@@ -12,6 +12,8 @@ The steps they share live here, once:
   non-empty task file moves to a deterministic name under the table root;
 - ``check_drift`` — the optimistic-concurrency check a mutating commit
   runs against the head it is about to publish onto;
+- ``commit_with_retry`` — the optimistic-concurrency loop around every
+  metadata commit: build on a fresh head, publish, retry a lost race;
 - ``sweep_orphans`` — the retention-horizon delete of unreferenced files;
 - ``drain`` — the loop behind every incremental source's ``stream_to``.
 
@@ -26,6 +28,12 @@ import os
 import shutil
 import threading
 import time
+
+
+# Publish races one commit may lose in a row before it gives up: far above
+# what a handful of concurrent writers cause, low enough that a livelock
+# surfaces as an error instead of a hang.
+MAX_COMMIT_ATTEMPTS = 20
 
 
 class ConcurrentWriteError(RuntimeError):
@@ -214,6 +222,32 @@ def check_drift(
             f"(computed-against files gone/changed: {gone[:3]}, "
             f"new files: {extra[:3]}) — recompute against the new head"
         )
+
+
+def commit_with_retry(what: str, build, publish, landed=None):
+    """The optimistic-concurrency loop of every table commit.
+
+    Each attempt calls ``build()``, which reads a fresh head and returns
+    ``(target, body, result)``: the version to claim, the metadata file to
+    publish there, and what the commit returns once published. ``body``
+    None means there is nothing to publish and ``result`` is final. A
+    conflict the build detects (``check_drift``) raises out of the loop.
+    ``publish(target, body)`` is the format's putIfAbsent step. After a
+    lost race, ``landed()`` says whether this very batch is already
+    committed (an earlier attempt of it, or a replay elsewhere): the
+    commit then returns None; otherwise it rebuilds on the new head.
+    ``MAX_COMMIT_ATTEMPTS`` lost races in a row raise
+    ``ConcurrentWriteError`` naming ``what``."""
+    for _ in range(MAX_COMMIT_ATTEMPTS):
+        target, body, result = build()
+        if body is None or publish(target, body):
+            return result
+        if landed is not None and landed():
+            return None
+    raise ConcurrentWriteError(
+        f"{what} lost the publish race {MAX_COMMIT_ATTEMPTS} times in a "
+        "row — too many concurrent writers on this table"
+    )
 
 
 def sweep_orphans(

@@ -3446,3 +3446,95 @@ def test_scan_read_schema_comes_from_the_log_not_inference(spark, tmp_path):
     }
     rows = {r["k"]: (r["v"], r["x"], r["n"]) for r in df.collect()}
     assert rows == {1: ("a", 2.5, None), 2: ("b", 1.5, 7)}
+
+
+def _replay_outcome(replay, version):
+    """(sorted live paths) or ('raises', message) of one replay."""
+    try:
+        return sorted(replay(version)["live"])
+    except ValueError as e:
+        return ("raises", str(e))
+
+
+@pytest.mark.parametrize(
+    "fixture,seed",
+    [
+        ("synth_delta_checkpointed", 2),  # full JSON, two-part checkpoint
+        ("synth_delta_checkpointed", 3),  # JSON <= 10 pruned
+        ("synth_delta_checkpointed", 4),  # full JSON, single-part
+        ("synth_delta_checkpointed", 5),
+        ("synth_delta_v2checkpoint", 0),  # sidecars, full JSON
+        ("synth_delta_v2checkpoint", 1),  # sidecars, JSON pruned
+        ("synth_delta_dv", 0),
+        ("synth_delta_dv", 1),
+    ],
+)
+def test_dir_replay_matches_zip_replay(tmp_path, fixture, seed):
+    """The same table as a ZIP payload and extracted to a directory
+    replays to the same live files at every version, and both refuse the
+    same versions (a pruned JSON prefix below the checkpoint)."""
+    from flink_gmall2024_realtime_spark.operators import deltalog
+
+    payload = getattr(deltalog, fixture)(seed)
+    root = tmp_path / "tbl"
+    with zipfile.ZipFile(io.BytesIO(payload)) as z:
+        z.extractall(root)
+    head = deltalog.replay_delta_dir(str(root))["version"]
+    assert head == deltalog._replay(deltalog._zip_reader(payload))["version"]
+    readable = 0
+    for v in range(head + 1):
+        from_zip = _replay_outcome(
+            lambda ver: deltalog._replay(deltalog._zip_reader(payload), ver), v
+        )
+        from_dir = _replay_outcome(
+            lambda ver: deltalog.replay_delta_dir(str(root), ver), v
+        )
+        assert from_dir == from_zip, v
+        if from_zip[0] == "raises":
+            assert "precedes checkpoint" in from_zip[1]
+            continue
+        readable += 1
+        assert deltalog.read_delta_snapshot_dir(str(root), v) == (
+            deltalog.read_delta_snapshot(payload, v)
+        )
+    # odd seeds of the checkpointed fixtures prune the JSON <= 10: they
+    # read only from the checkpoint at version 10 on
+    pruned = fixture != "synth_delta_dv" and seed % 2 == 1
+    assert readable == (head - 9 if pruned else head + 1)
+
+
+def test_restore_from_a_checkpoint_writes_complete_add_actions(tmp_path):
+    """A restore whose target version is served by a checkpoint re-adds
+    files from checkpoint rows, which carry no ``modificationTime``; the
+    re-add must still carry every field the protocol requires."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from flink_gmall2024_realtime_spark.streaming.delta import DeltaAppendSink
+
+    sink = DeltaAppendSink(str(tmp_path / "t"))
+    schema = {"type": "struct", "fields": [
+        {"name": "k", "type": "long", "nullable": True, "metadata": {}}
+    ]}
+    with open(sink._commit_path(0), "w") as f:
+        f.write(json.dumps(
+            {"protocol": {"minReaderVersion": 1, "minWriterVersion": 2}}
+        ) + "\n")
+        f.write(json.dumps({"metaData": {
+            "id": "t", "format": {"provider": "parquet", "options": {}},
+            "schemaString": json.dumps(schema), "partitionColumns": [],
+            "configuration": {},
+        }}) + "\n")
+    pq.write_table(pa.table({"k": [1]}), os.path.join(sink.path, "f1.parquet"))
+    sink._commit_actions(None, 1, [sink._add_action("f1.parquet", 1)])
+    sink.write_checkpoint(1)
+    assert sink.clean_log() == [0, 1]
+    sink._commit_actions(None, 2, [], removes=["f1.parquet"])
+    v = sink.restore(1, 3)
+    with open(sink._commit_path(v)) as f:
+        adds = [json.loads(line)["add"] for line in f if '"add"' in line]
+    assert [a["path"] for a in adds] == ["f1.parquet"]
+    assert {"path", "partitionValues", "size", "modificationTime",
+            "dataChange"} <= set(adds[0])
+    assert adds[0]["dataChange"] is True
+    assert sink.live_files() == ["f1.parquet"]

@@ -1,6 +1,7 @@
 """The table-format commit core (``streaming/tablecommit.py``) without
 Spark: durability of the putIfAbsent publish through both table formats,
-the lost-race contract, the footer-stats fold and the drift check."""
+the lost-race contract, the retry loop, the Iceberg version hint, the
+footer-stats fold and the drift check."""
 
 from __future__ import annotations
 
@@ -127,3 +128,133 @@ def test_drift_check_subset_and_exact_modes():
     tablecommit.check_drift({}, {}, "compact", exact=True)
     with pytest.raises(ConcurrentWriteError):
         tablecommit.check_drift({}, {"c": 3}, "compact", exact=True)
+
+
+def _delta_table_at_v0(path: str) -> DeltaAppendSink:
+    sink = DeltaAppendSink(path)
+    schema = {"type": "struct", "fields": [
+        {"name": "k", "type": "long", "nullable": True, "metadata": {}}
+    ]}
+    v0 = [
+        {"protocol": {"minReaderVersion": 1, "minWriterVersion": 2}},
+        {"metaData": {"id": "t", "format": {"provider": "parquet", "options": {}},
+                      "schemaString": json.dumps(schema),
+                      "partitionColumns": [], "configuration": {}}},
+    ]
+    with open(sink._commit_path(0), "w") as f:
+        f.write("".join(json.dumps(a) + "\n" for a in v0))
+    return sink
+
+
+def test_lost_race_to_the_same_batch_returns_none(tmp_path, monkeypatch):
+    """Another attempt of batch 1 claims version 1 between this attempt's
+    build and its publish: the loser reports the batch as already
+    committed (None) instead of committing it a second time."""
+    from flink_gmall2024_realtime_spark.streaming import delta as delta_mod
+
+    path = str(tmp_path / "t")
+    mine, other = _delta_table_at_v0(path), DeltaAppendSink(path)
+    real = delta_mod.publish_if_absent
+    raced = []
+
+    def publish(target, body):
+        if not raced:
+            raced.append(target)
+            assert other._commit_actions(None, 1, []) == 1
+        return real(target, body)
+
+    monkeypatch.setattr(delta_mod, "publish_if_absent", publish)
+    assert mine._commit_actions(None, 1, []) is None
+    assert raced == [mine._commit_path(1)]
+    assert mine.committed_versions() == [0, 1]
+
+
+def test_lost_race_of_another_batch_rebuilds_on_the_new_head():
+    heads = iter([4, 5])
+    built = []
+
+    def build():
+        v = next(heads) + 1
+        built.append(v)
+        return v, b"body", v
+
+    claimed = {5}  # another writer holds version 5
+    got = tablecommit.commit_with_retry(
+        "op", build, lambda v, body: v not in claimed, lambda: False
+    )
+    assert got == 6 and built == [5, 6]
+
+
+def test_permanent_loss_raises_concurrent_write_error_naming_the_op(
+    tmp_path, monkeypatch
+):
+    from flink_gmall2024_realtime_spark.streaming import delta as delta_mod
+
+    calls = []
+
+    def build():
+        calls.append(1)
+        return len(calls), b"body", len(calls)
+
+    with pytest.raises(ConcurrentWriteError, match="iceberg rollback to snapshot 7"):
+        tablecommit.commit_with_retry(
+            "iceberg rollback to snapshot 7", build, lambda v, body: False
+        )
+    assert len(calls) == tablecommit.MAX_COMMIT_ATTEMPTS
+    assert issubclass(ConcurrentWriteError, RuntimeError)
+    # a format commit that can never claim its version surfaces the same way
+    sink = _delta_table_at_v0(str(tmp_path / "t"))
+    monkeypatch.setattr(delta_mod, "publish_if_absent", lambda t, b: False)
+    with pytest.raises(ConcurrentWriteError, match="delta commit of batch 2"):
+        sink._commit_actions(None, 2, [])
+    assert sink.committed_versions() == [0]
+
+
+def _hint(path: str) -> int:
+    with open(os.path.join(path, "metadata", "version-hint.text")) as f:
+        return int(f.read())
+
+
+def _head_version(path: str) -> int:
+    return max(
+        int(fn[1:].split(".")[0])
+        for fn in os.listdir(os.path.join(path, "metadata"))
+        if fn.endswith(".metadata.json")
+    )
+
+
+def test_every_iceberg_metadata_op_advances_the_version_hint(tmp_path):
+    """``version-hint.text`` names the head metadata version after every
+    op that publishes one, not only after a snapshot commit."""
+    from flink_gmall2024_realtime_spark.operators.iceberg import (
+        _dir_reader,
+        _iceberg_live,
+    )
+
+    path = str(tmp_path / "t")
+    sink = IcebergAppendSink(None, path)
+    fields = [{"id": 1, "name": "k", "required": False, "type": "long"}]
+    for b in range(3):
+        rel = f"data/part-b{b:010d}.parquet"
+        pq.write_table(
+            pa.table({"k": pa.array([b, b + 10], pa.int64())}),
+            os.path.join(path, rel),
+        )
+        sink._commit_snapshot(b, fields, [sink._data_entry(rel, 2, fields)])
+        assert _hint(path) == _head_version(path) == b + 1
+    first = sink._head()[1]["snapshots"][0]["snapshot-id"]
+
+    assert sink.rewrite_manifests(10) == 11
+    assert _hint(path) == _head_version(path) == 4
+    assert sink.rollback_to(first) == 5
+    assert _hint(path) == _head_version(path) == 5
+    assert sink.expire_snapshots(keep_last=4) == []  # nothing to publish
+    assert _hint(path) == _head_version(path) == 5
+    assert sink.rollback_to(11) == 6
+    assert sink.expire_snapshots(keep_last=1) == [1, 2, 3]
+    assert _hint(path) == _head_version(path) == 7
+    # the hinted head still resolves: three live files, one manifest
+    sid, n_manifests, live, _d, _e, _md, _loc = _iceberg_live(
+        *_dir_reader(path), None
+    )
+    assert (sid, n_manifests, len(live)) == (11, 1, 3)
