@@ -45,7 +45,6 @@ beyond-reference LLM-data-pipeline surface the build brief asks for.
 from __future__ import annotations
 
 import json
-import struct
 from typing import Iterator
 
 import pandas as pd
@@ -294,71 +293,16 @@ def _column_ids(metadata: dict) -> dict[str, int] | None:
 
 
 def _dv_raw(dv: dict, fetch) -> tuple[bytes, int | None]:
-    """One ``deletionVector`` descriptor to its RAW serialized roaring-
-    bitmap-array bytes + declared cardinality, WITHOUT decoding any
-    position (r15 — the scan path must never hold deleted positions on
-    the driver; decode happens in executors). Framing is still verified
+    """THE resolver of one ``deletionVector`` descriptor: its RAW
+    serialized roaring-bitmap-array bytes + declared cardinality, WITHOUT
+    decoding any position (r15 — the scan path must never hold deleted
+    positions on the driver; decode happens in executors). Storage is
+    inline ('i', Z85 in the log itself), a UUID-named sidecar file ('u',
+    ``deletion_vector_<uuid>.bin`` under the table root, optional random
+    prefix dir) or an absolute path ('p'). Framing is still verified
     here: inline Z85 length bounds, on-disk format version / size / CRC
     — O(compressed bytes), not O(positions)."""
-    import zlib as _zlib
-
-    from .roaring import z85_decode
-
-    storage = dv.get("storageType")
-    if storage == "i":
-        data = z85_decode(dv["pathOrInlineDv"])
-        declared = dv["sizeInBytes"]
-        if not declared <= len(data) < declared + 4:
-            raise ValueError(
-                f"inline DV sizeInBytes {declared} inconsistent with "
-                f"decoded length {len(data)}"
-            )
-        return data[:declared], dv.get("cardinality")
-    if storage in ("u", "p"):
-        if storage == "u":
-            import uuid
-
-            enc = dv["pathOrInlineDv"]
-            if len(enc) < 20:
-                raise ValueError(f"DV pathOrInlineDv too short: {enc!r}")
-            prefix, tail = enc[:-20], enc[-20:]
-            uid = uuid.UUID(bytes=z85_decode(tail))
-            rel = f"deletion_vector_{uid}.bin"
-            if prefix:
-                rel = f"{prefix}/{rel}"
-        else:
-            rel = dv["pathOrInlineDv"]
-        offset = dv.get("offset")
-        if offset is None:
-            offset = 1
-        blob = fetch(rel)
-        if not blob or blob[0] != 1:
-            raise ValueError(f"DV file format version {blob[:1]!r} != 1")
-        if offset < 1 or offset + 4 > len(blob):
-            raise ValueError("DV offset outside file")
-        (size,) = struct.unpack_from(">I", blob, offset)
-        if size != dv["sizeInBytes"]:
-            raise ValueError(
-                f"DV sizeInBytes {dv['sizeInBytes']} != framed size {size}"
-            )
-        data = blob[offset + 4 : offset + 4 + size]
-        if len(data) < size:
-            raise ValueError("DV data truncated")
-        (crc,) = struct.unpack_from(">I", blob, offset + 4 + size)
-        if crc != _zlib.crc32(data) & 0xFFFFFFFF:
-            raise ValueError("DV checksum mismatch")
-        return data, dv.get("cardinality")
-    raise ValueError(f"unknown DV storageType {storage!r}")
-
-
-def _dv_positions(dv: dict, fetch) -> list[int]:
-    """Decode one ``deletionVector`` descriptor to its sorted deleted
-    row indexes: inline ('i', Z85 in the log itself) or UUID-named
-    sidecar file ('u', ``deletion_vector_<uuid>.bin`` under the table
-    root, optional random prefix dir); absolute paths ('p') are a loud
-    seam. Declared cardinality is cross-checked against the decoded
-    bitmap — a wrong DV must never silently drop the wrong rows."""
-    from .roaring import parse_dv_in_file, parse_roaring_bitmap_array, z85_decode
+    from .roaring import dv_in_file, z85_decode
 
     storage = dv.get("storageType")
     if storage == "i":
@@ -371,8 +315,8 @@ def _dv_positions(dv: dict, fetch) -> list[int]:
                 f"inline DV sizeInBytes {declared} inconsistent with "
                 f"decoded length {len(data)}"
             )
-        positions = parse_roaring_bitmap_array(data[:declared])
-    elif storage == "u":
+        return data[:declared], dv.get("cardinality")
+    if storage == "u":
         import uuid
 
         enc = dv["pathOrInlineDv"]
@@ -383,30 +327,32 @@ def _dv_positions(dv: dict, fetch) -> list[int]:
         rel = f"deletion_vector_{uid}.bin"
         if prefix:
             rel = f"{prefix}/{rel}"
-        # offset is OPTIONAL in the DV descriptor (spec: "if not
-        # present, the data starts right after the 1-byte format
-        # version") — default to 1 rather than KeyError on spec-valid
-        # tables (ADVICE r13)
-        offset = dv.get("offset")
-        if offset is None:
-            offset = 1
-        positions = parse_dv_in_file(
-            fetch(rel), offset, dv["sizeInBytes"]
-        )
     elif storage == "p":
-        # absolute path (r14): pathOrInlineDv IS the path — directory-
-        # rooted fetchers resolve it (os.path.join discards their root
-        # for absolute paths); payload-rooted readers miss and raise
-        # their own loud missing-file error
-        offset = dv.get("offset")
-        if offset is None:
-            offset = 1
-        positions = parse_dv_in_file(
-            fetch(dv["pathOrInlineDv"]), offset, dv["sizeInBytes"]
-        )
+        # absolute path (r14): directory-rooted fetchers resolve it
+        # (os.path.join discards their root for absolute paths);
+        # payload-rooted readers miss and raise their own loud error
+        rel = dv["pathOrInlineDv"]
     else:
         raise ValueError(f"unknown DV storageType {storage!r}")
-    declared = dv.get("cardinality")
+    # offset is OPTIONAL in the descriptor (spec: "if not present, the
+    # data starts right after the 1-byte format version") (ADVICE r13)
+    offset = dv.get("offset")
+    if offset is None:
+        offset = 1
+    return dv_in_file(fetch(rel), offset, dv["sizeInBytes"]), dv.get(
+        "cardinality"
+    )
+
+
+def _dv_positions(dv: dict, fetch) -> list[int]:
+    """One ``deletionVector`` descriptor decoded to its sorted deleted row
+    indexes: ``_dv_raw``, then the bitmap parse. Declared cardinality is
+    cross-checked against the decoded bitmap — a wrong DV must never
+    silently drop the wrong rows."""
+    from .roaring import parse_roaring_bitmap_array
+
+    data, declared = _dv_raw(dv, fetch)
+    positions = parse_roaring_bitmap_array(data)
     if declared is not None and declared != len(positions):
         raise ValueError(
             f"DV cardinality {declared} != decoded {len(positions)}"
@@ -1846,6 +1792,20 @@ def replay_delta_dir(path: str, version: int | None = None) -> dict:
     contract: snapshot resolution reads a few KB of actions, the scan
     stays fully distributed)."""
     return _replay(_dir_reader(path), version)
+
+
+def replay_head_dir(path: str) -> dict | None:
+    """``replay_delta_dir`` at the head from ONE directory listing; None
+    while the log holds no commit and no checkpoint (a table about to be
+    created). THE read of one write operation in ``streaming/delta.py``:
+    batch-id dedupe, the writer gate, table config and CHECK constraints,
+    the schema check, column mapping and the files a mutating commit
+    replaces all answer from it."""
+    reader = _dir_reader(path)
+    commits, checkpoints, _ = _log_listing(reader[1])
+    if not commits and not checkpoints:
+        return None
+    return _replay(reader)
 
 
 _DELTA_TO_SPARK = {

@@ -355,6 +355,31 @@ def _head_metadata(path: str) -> tuple[int, dict | None]:
         return v, json.load(f)
 
 
+def _batch_ids(md: dict | None) -> tuple[set[int], int]:
+    """Batch-id dedupe from ONE metadata document: (the batch ids in the
+    live snapshot summaries, the ``max-expired-batch-id`` watermark that
+    expired snapshots folded into, -1 without one). Batch ids are
+    monotone micro-batch ids, so an id at or below the watermark was
+    committed by an expired snapshot — the Iceberg analog of Delta
+    checkpoints carrying txn rows (r14)."""
+    if md is None:
+        return set(), -1
+    ids = set()
+    for s in md.get("snapshots", []):
+        bid = (s.get("summary") or {}).get("batch-id")
+        if bid is not None:
+            ids.add(int(bid))
+    wm = (md.get("properties") or {}).get("max-expired-batch-id")
+    return ids, -1 if wm is None else int(wm)
+
+
+def _batch_landed(md: dict | None, batch_id: int) -> bool:
+    """Whether the metadata document ``md`` records ``batch_id`` as
+    committed, live or expired."""
+    ids, watermark = _batch_ids(md)
+    return batch_id in ids or batch_id <= watermark
+
+
 def _iceberg_live(
     members_get,
     names,
@@ -2704,30 +2729,31 @@ class IcebergAppendSink:
         return _head_metadata(self.path)
 
     def committed_batch_ids(self) -> set[int]:
-        _, md = self._head()
-        if md is None:
-            return set()
-        out = set()
-        for s in md.get("snapshots", []):
-            bid = (s.get("summary") or {}).get("batch-id")
-            if bid is not None:
-                out.add(int(bid))
-        return out
+        """Batch ids of the head's live snapshots."""
+        return _batch_ids(self._head()[1])[0]
 
     def _is_committed(self, batch_id: int) -> bool:
-        """Replay dedupe that SURVIVES snapshot expiration: live
-        snapshot summaries carry exact batch ids; expired ones fold
-        into the metadata's ``max-expired-batch-id`` watermark (batch
-        ids are monotone micro-batch ids, so <= watermark means an
-        expired snapshot committed it) — the Iceberg analog of Delta
-        checkpoints carrying txn rows (r14)."""
-        if batch_id in self.committed_batch_ids():
-            return True
-        _, md = self._head()
-        if md is None:
-            return False
-        wm = (md.get("properties") or {}).get("max-expired-batch-id")
-        return wm is not None and batch_id <= int(wm)
+        """Replay dedupe that SURVIVES snapshot expiration
+        (``_batch_landed`` over the head metadata)."""
+        return _batch_landed(self._head()[1], batch_id)
+
+    def _commit_batch_op(self, what: str, batch_id: int, build):
+        """``commit_with_retry`` around ``build(head_v, md)`` for an op
+        that commits batch ``batch_id``: after a lost race the head is
+        read ONCE, and that read serves both ``landed()`` and the
+        rebuild."""
+        fresh: list = []
+
+        def landed() -> bool:
+            fresh.append(self._head())
+            return _batch_landed(fresh[-1][1], batch_id)
+
+        return commit_with_retry(
+            f"iceberg {what} of batch {batch_id}",
+            lambda: build(*(fresh.pop() if fresh else self._head())),
+            self._publish_metadata,
+            landed,
+        )
 
     # ----------------------------------------------------------- write
 
@@ -3016,8 +3042,7 @@ class IcebergAppendSink:
                 },
             )
 
-        def build():
-            head_v, md = self._head()
+        def build(head_v, md):
             # OCC: validate on EVERY attempt (the head may already have
             # moved between the caller's read and the first publish) — a
             # lost pointer race must not re-publish stale delete
@@ -3209,12 +3234,7 @@ class IcebergAppendSink:
                     new_md["current-schema-id"] = schema_update["schema-id"]
             return head_v + 1, json.dumps(new_md).encode(), snap_id
 
-        return commit_with_retry(
-            f"iceberg {what} of batch {batch_id}",
-            build,
-            self._publish_metadata,
-            lambda: self._is_committed(batch_id),
-        )
+        return self._commit_batch_op(what, batch_id, build)
 
     def delete_where(
         self,
@@ -3365,12 +3385,11 @@ class IcebergAppendSink:
                     "expire_snapshots would drop the current snapshot"
                 )
             expired = snaps[: len(snaps) - keep_last]
-            wm = (md.get("properties") or {}).get("max-expired-batch-id")
             bids = [
                 int((s.get("summary") or {}).get("batch-id", -1))
                 for s in expired
             ]
-            new_wm = max(bids + ([int(wm)] if wm is not None else []))
+            new_wm = max(bids + [_batch_ids(md)[1]])
             new_md = dict(md)
             new_md["snapshots"] = keep
             props = dict(md.get("properties") or {})
@@ -3487,8 +3506,7 @@ class IcebergAppendSink:
         if self._is_committed(batch_id):
             return None
 
-        def build():
-            head_v, md = self._head()
+        def build(head_v, md):
             if md is None:
                 raise ValueError("rewrite_manifests on a table with no commits")
             spec = {
@@ -3616,12 +3634,7 @@ class IcebergAppendSink:
             new_md["snapshots"] = md["snapshots"] + [snapshot]
             return head_v + 1, json.dumps(new_md).encode(), snap_id
 
-        return commit_with_retry(
-            f"iceberg rewrite_manifests of batch {batch_id}",
-            build,
-            self._publish_metadata,
-            lambda: self._is_committed(batch_id),
-        )
+        return self._commit_batch_op("rewrite_manifests", batch_id, build)
 
     def sink(self):
         def write(batch, batch_id: int) -> None:

@@ -292,9 +292,9 @@ def synth_roaring_dump(seed: int) -> bytes:
 
 
 @malformed_guard
-def parse_dv_in_file(blob: bytes, offset: int, size_in_bytes: int) -> list[int]:
-    """One DV out of an on-disk DV file: size/CRC framing verified,
-    bitmap decoded to sorted row indexes."""
+def dv_in_file(blob: bytes, offset: int, size_in_bytes: int) -> bytes:
+    """The serialized bitmap of one DV inside an on-disk DV file, its
+    format version and size/CRC framing verified."""
     if not blob or blob[0] != 1:
         raise ValueError(f"DV file format version {blob[:1]!r} != 1")
     if offset < 1 or offset + 4 > len(blob):
@@ -310,4 +310,10 @@ def parse_dv_in_file(blob: bytes, offset: int, size_in_bytes: int) -> list[int]:
     (crc,) = struct.unpack_from(">I", blob, offset + 4 + size)
     if crc != zlib.crc32(data) & 0xFFFFFFFF:
         raise ValueError("DV checksum mismatch")
-    return parse_roaring_bitmap_array(data)
+    return data
+
+
+def parse_dv_in_file(blob: bytes, offset: int, size_in_bytes: int) -> list[int]:
+    """One DV out of an on-disk DV file: size/CRC framing verified,
+    bitmap decoded to sorted row indexes."""
+    return parse_roaring_bitmap_array(dv_in_file(blob, offset, size_in_bytes))

@@ -12,9 +12,10 @@ needs, in an OPEN format any Delta reader can consume:
 - **exactly-once under at-least-once replay**: every commit carries a
   ``txn`` action (Delta's setTransaction: appId + monotonically
   increasing transaction version = the streaming batch id) plus a
-  ``commitInfo`` with the batch id; a replayed batch whose id is
-  already committed — in the JSON log OR recorded in a checkpoint's txn
-  rows after log cleanup — is skipped before any write. A crash after
+  ``commitInfo`` with the batch id; a replayed batch whose id is at or
+  below the head snapshot's txn version for this writer — replayed from
+  the JSON log or, after log cleanup, from a checkpoint's txn rows — is
+  skipped before any write. A crash after
   the data file but before the commit leaves an unreferenced parquet
   file (vacuum fodder, exactly like real Delta) and the replay rewrites
   it.
@@ -63,6 +64,8 @@ from ..operators.deltalog import (
     _log_listing,
     read_commit,
     replay_delta_dir,
+    replay_head_dir,
+    scan_adds,
 )
 
 # ConcurrentWriteError lives in the commit core; importing it from here
@@ -298,13 +301,6 @@ class DeltaAppendSink:
             raise ValueError("checkpoint_parts must be >= 1")
         self.checkpoint_parts = checkpoint_parts
         os.makedirs(os.path.join(path, "_delta_log"), exist_ok=True)
-        # incremental batch-id scan state: versions < _scanned_upto are
-        # already folded into _known_batch_ids / _txn_max (commit files
-        # are immutable once published, so the cache never invalidates)
-        self._scanned_upto = 0
-        self._known_batch_ids: set[int] = set()
-        self._txn_max = -1
-        self._txn_seeded = False
 
     # ------------------------------------------------------------- log
 
@@ -337,38 +333,14 @@ class DeltaAppendSink:
     def checkpoint_versions(self) -> list[int]:
         return sorted(self._listing()[1])
 
-    def _seed_txn_from_checkpoint(self) -> None:
-        """After ``clean_log()`` (or on restart against a cleaned table)
-        the pruned JSON no longer carries the early batch ids; the txn
-        rows of the replayed state (newest complete checkpoint + JSON
-        tail) do."""
-        if self._txn_seeded:
-            return
-        self._txn_seeded = True
-        if self.checkpoint_versions():
-            txns = self._replay_state(self.head_version())["txns"]
-            self._txn_max = max(self._txn_max, txns.get(self.APP_ID, -1))
-
-    def _is_committed(self, batch_id: int) -> bool:
-        self._seed_txn_from_checkpoint()
-        # only parse commit files newer than the last scan — O(new) per
-        # micro-batch instead of O(all history) (ADVICE r11)
-        get = _dir_get(self.path)
-        for v in self.committed_versions():
-            if v < self._scanned_upto:
-                continue
-            for action in read_commit(get, v, "its batch id is unreadable"):
-                if "commitInfo" in action:
-                    bid = action["commitInfo"].get("batchId")
-                    if bid is not None:
-                        self._known_batch_ids.add(bid)
-                elif "txn" in action:
-                    if action["txn"].get("appId") == self.APP_ID:
-                        self._txn_max = max(
-                            self._txn_max, action["txn"].get("version", -1)
-                        )
-            self._scanned_upto = v + 1
-        return batch_id in self._known_batch_ids or batch_id <= self._txn_max
+    def _is_committed(self, batch_id: int, snap: dict | None) -> bool:
+        """Replay dedupe: every commit of this class carries a ``txn``
+        whose version is its batch id, and checkpoints keep the txn rows,
+        so the snapshot's txn version also covers JSON ``clean_log``
+        pruned."""
+        return snap is not None and batch_id <= snap["txns"].get(
+            self.APP_ID, -1
+        )
 
     # ----------------------------------------------------------- write
 
@@ -452,17 +424,12 @@ class DeltaAppendSink:
                         "writer cannot honor — refusing to write"
                     )
 
-    def _table_config(self, state: dict | None = None) -> dict:
-        if state is not None:
-            return dict(state["metadata"].get("configuration") or {})
-        if self.head_version() < 0:
+    def _table_config(self, snap: dict | None) -> dict:
+        """Table properties at the snapshot; on a table about to be
+        created, the ones its CREATE commit will stamp."""
+        if snap is None:
             return dict(self.table_configuration)
-        return dict(
-            self._replay_state(self.head_version())["metadata"].get(
-                "configuration"
-            )
-            or {}
-        )
+        return dict(snap["metadata"].get("configuration") or {})
 
     def _check_constraints(self, batch: DataFrame, conf: dict) -> None:
         """Enforce ``delta.constraints.<name>`` CHECK expressions on
@@ -484,9 +451,7 @@ class DeltaAppendSink:
                     f"row {bad[0].asDict()}"
                 )
 
-    def _schema_delta(
-        self, batch: DataFrame, state: dict | None = None
-    ) -> str | None:
+    def _schema_delta(self, batch: DataFrame, state: dict | None) -> str | None:
         """Validate the batch schema against the table's current schema
         (r12 — previously batches after v0 committed silently with
         whatever columns they carried). Same fields -> None. New fields
@@ -496,11 +461,7 @@ class DeltaAppendSink:
         on an existing column is always an error — evolution appends, it
         never rewrites."""
         if state is None:
-            if self.head_version() < 0:
-                return None  # version 0 writes the initial metaData itself
-            state = self._replay_state(self.head_version())
-        if state is None:
-            return None
+            return None  # version 0 writes the initial metaData itself
         table = json.loads(state["metadata"]["schemaString"])["fields"]
         have = {f["name"]: f["type"] for f in table}
         batch_fields = json.loads(_schema_string(batch))["fields"]
@@ -552,6 +513,63 @@ class DeltaAppendSink:
             }
         )
 
+    def _commit(
+        self,
+        snap: dict | None,
+        batch: DataFrame | None,
+        batch_id: int,
+        adds: list[str],
+        removes: list[str] | None = None,
+        extra_lines: list[str] | None = None,
+        removes_data_change: bool = True,
+        read_scope=None,
+    ) -> int | None:
+        """Check one commit against its operation's snapshot ``snap``,
+        then publish it through ``_commit_actions``. r14 writer-side
+        enforcement (real Delta's writer protocol): the writer-feature
+        gate, CHECK constraints on every written batch, and
+        ``delta.appendOnly`` forbidding dataChange removes (compaction's
+        dataChange=false removes stay legal, like real Delta); a batch
+        that adds columns appends its metaData action. The files a commit
+        removes are the ones it was computed against: they are its
+        expected files at the snapshot's version. ``read_scope`` marks a
+        commit that read every live file the predicate admits (a keyed
+        merge)."""
+        self._check_write_protocol(snap)
+        conf = self._table_config(snap)
+        if batch is not None:
+            self._check_constraints(batch, conf)
+        if (
+            removes
+            and removes_data_change
+            and conf.get("delta.appendOnly") == "true"
+        ):
+            raise ValueError(
+                "delta.appendOnly table: commits may not remove data"
+            )
+        lines = list(extra_lines or [])
+        meta_update = (
+            self._schema_delta(batch, snap) if batch is not None else None
+        )
+        if meta_update is not None:
+            lines.append(meta_update)
+        live = snap["live"] if snap is not None else {}
+        return self._commit_actions(
+            batch,
+            batch_id,
+            adds,
+            removes=removes,
+            extra_lines=lines,
+            removes_data_change=removes_data_change,
+            expected_files=(
+                {rel: live[rel] for rel in removes or []}
+                if removes or read_scope is not None
+                else None
+            ),
+            snapshot_version=snap["version"] if snap is not None else -1,
+            read_scope=read_scope,
+        )
+
     def _commit_actions(
         self,
         batch: DataFrame | None,
@@ -562,12 +580,14 @@ class DeltaAppendSink:
         removes_data_change: bool = True,
         expected_files: dict | None = None,
         snapshot_version: int | None = None,
+        read_scope=None,
     ) -> int | None:
-        """Claim the next version with txn + commitInfo + ``removes`` +
-        ``adds`` action lines; None when a concurrent attempt of the
-        same batch landed first. ``batch=None`` (metadata-only commits
-        like delete_where) skips schema validation and is invalid for
-        the table-creating version 0.
+        """Claim the next version with txn + commitInfo + ``extra_lines``
+        + ``removes`` + ``adds`` action lines; None when a concurrent
+        attempt of the same batch landed first. ``batch`` supplies the
+        protocol and schema of the table-creating version 0; a
+        metadata-only commit (``batch=None``, like delete_where) cannot
+        create the table.
 
         ``expected_files`` (MUTATING commits — delete_where/optimize,
         ADVICE r13): {rel: add-action-as-observed} at
@@ -576,35 +596,13 @@ class DeltaAppendSink:
         conflict, but a mutating commit re-published verbatim against a
         moved head can resurrect rows another delete_where/optimize
         removed (stale DV union, re-adding a compacted-away file) — so
-        when the head has advanced past the snapshot, the live state is
-        re-read and any drift in those files raises
+        when the head has advanced past the snapshot, the head is
+        replayed and any drift in those files raises
         ``ConcurrentWriteError`` instead of silently committing, the
-        same conflict detection real Delta's OCC performs."""
-        # r14: writer-side table-property enforcement (real Delta's
-        # writer protocol): CHECK constraints on every written batch,
-        # and delta.appendOnly forbids dataChange removes (compaction's
-        # dataChange=false removes stay legal, like real Delta). ONE
-        # state replay per commit serves enforcement + schema checks.
-        state0 = (
-            self._replay_state(self.head_version())
-            if self.head_version() >= 0
-            else None
-        )
-        self._check_write_protocol(state0)
-        conf0 = self._table_config(state0)
-        if batch is not None:
-            self._check_constraints(batch, conf0)
-        if (
-            removes
-            and removes_data_change
-            and conf0.get("delta.appendOnly") == "true"
-        ):
-            raise ValueError(
-                "delta.appendOnly table: commits may not remove data"
-            )
-        meta_update = (
-            self._schema_delta(batch, state0) if batch is not None else None
-        )
+        same conflict detection real Delta's OCC performs. With
+        ``read_scope`` (rel -> bool) the commit read every live file the
+        predicate admits, so the check is exact within it: a file that
+        appeared there conflicts too."""
         txn = json.dumps(
             {
                 "txn": {
@@ -617,6 +615,14 @@ class DeltaAppendSink:
         info = json.dumps(
             {"commitInfo": {"operation": "STREAMING UPDATE", "batchId": batch_id}}
         )
+        replayed: dict = {}
+
+        def head_state(head: int) -> dict:
+            # each attempt lists the log; a head replays only once
+            if head not in replayed:
+                replayed.clear()
+                replayed[head] = self._replay_state(head)
+            return replayed[head]
 
         def build():
             head = self.head_version()
@@ -627,27 +633,19 @@ class DeltaAppendSink:
             ):
                 # another writer landed between our snapshot and this
                 # attempt: every file we remove/re-add must be UNCHANGED
-                # (same path, same deletionVector) or the mutation was
-                # computed against stale state; one computed against an
-                # EMPTY table conflicts with any commit
-                if not expected_files:
-                    raise ConcurrentWriteError(
-                        f"concurrent update: version {head} landed on the "
-                        "empty table this commit was computed against — "
-                        "recompute against the new head"
-                    )
+                # (same path, same deletionVector)
+                live = head_state(head)["live"]
+                if read_scope is not None:
+                    live = {r: a for r, a in live.items() if read_scope(r)}
                 check_drift(
                     _content_keys(expected_files),
-                    _content_keys(self._replay_state(head)["live"]),
+                    _content_keys(live),
                     f"the snapshot at version {snapshot_version} (head "
                     f"now {head})",
+                    exact=read_scope is not None,
                 )
             next_v = head + 1
-            lines = [txn, info]
-            if extra_lines:
-                lines.extend(extra_lines)
-            if meta_update is not None and next_v > 0:
-                lines.append(meta_update)
+            lines = [txn, info, *(extra_lines or [])]
             if next_v == 0:
                 if batch is None:
                     raise ValueError(
@@ -685,20 +683,16 @@ class DeltaAppendSink:
             f"delta commit of batch {batch_id}",
             build,
             lambda v, body: publish_if_absent(self._commit_path(v), body),
-            lambda: self._is_committed(batch_id),
+            lambda: self._is_committed(
+                batch_id, head_state(self.head_version())
+            ),
         )
         if version is not None:
-            # fold OUR OWN commit into the replay-dedupe state immediately:
-            # a same-instance replay after clean_log() pruned this JSON
-            # would otherwise pass _is_committed and double-commit
-            # (ADVICE r12)
-            self._known_batch_ids.add(batch_id)
-            self._txn_max = max(self._txn_max, batch_id)
             self._maybe_checkpoint(version)
         return version
 
     def _physical_batch(
-        self, batch: DataFrame
+        self, batch: DataFrame, snap: dict | None
     ) -> tuple[DataFrame, list[str], dict | None]:
         """Column-mapped tables store PHYSICAL column names (and parquet
         field ids in id mode) in their data files; batches arrive with
@@ -708,12 +702,11 @@ class DeltaAppendSink:
         appended rows silently read as nulls (ADVICE r14). Returns
         (translated batch, physical partition columns, physical-name ->
         field-id map or None). No-op on unmapped tables."""
-        if self.head_version() < 0:
+        if snap is None:
             return batch, list(self.partition_columns), None
         from ..operators.deltalog import _column_ids, _column_mapping
 
-        state = self._replay_state(self.head_version())
-        tbl_pcols = list(state["metadata"].get("partitionColumns") or [])
+        tbl_pcols = list(snap["metadata"].get("partitionColumns") or [])
         if tbl_pcols != list(self.partition_columns):
             # an add without (or with wrong) partitionValues silently
             # corrupts partition pruning — refuse up front
@@ -721,7 +714,7 @@ class DeltaAppendSink:
                 f"sink partition_columns {self.partition_columns} do not "
                 f"match the table's declared partitionColumns {tbl_pcols}"
             )
-        mapping = _column_mapping(state["metadata"])
+        mapping = _column_mapping(snap["metadata"])
         if not mapping:
             return batch, list(self.partition_columns), None
         unknown = [c for c in batch.columns if c not in mapping]
@@ -732,7 +725,7 @@ class DeltaAppendSink:
                 "physicalName/field-id assignment, which this writer "
                 "does not do"
             )
-        ids = _column_ids(state["metadata"]) or None
+        ids = _column_ids(snap["metadata"]) or None
         batch = _to_physical(batch, mapping, ids)
         phys_ids = (
             {mapping[n]: i for n, i in ids.items()} if ids else None
@@ -751,9 +744,10 @@ class DeltaAppendSink:
                 "partitioned tables write through commit_batch_distributed "
                 "(partitionBy layout needs the distributed writer)"
             )
-        if self._is_committed(batch_id):
+        snap = replay_head_dir(self.path)
+        if self._is_committed(batch_id, snap):
             return None
-        phys, _pc, phys_ids = self._physical_batch(batch)
+        phys, _pc, phys_ids = self._physical_batch(batch, snap)
         rel = f"part-b{batch_id:010d}.parquet"
         full = os.path.join(self.path, rel)
         table = phys.toArrow()
@@ -777,8 +771,8 @@ class DeltaAppendSink:
             )
         # deterministic rewrite on replay-after-crash: same rows, same file
         pq.write_table(table, full, compression="snappy")
-        return self._commit_actions(
-            batch, batch_id, [self._add_action(rel, table.num_rows)]
+        return self._commit(
+            snap, batch, batch_id, [self._add_action(rel, table.num_rows)]
         )
 
     def commit_batch_distributed(
@@ -789,14 +783,15 @@ class DeltaAppendSink:
         AddFile per file in a single commit. The fact-sized path: rows
         never pass through the driver. Returns the committed version, or
         None on replay."""
-        if self._is_committed(batch_id):
+        snap = replay_head_dir(self.path)
+        if self._is_committed(batch_id, snap):
             return None
         missing = [c for c in self.partition_columns if c not in batch.columns]
         if missing:
             raise ValueError(
                 f"batch lacks partition column(s) {missing}"
             )
-        phys, phys_pcols, phys_ids = self._physical_batch(batch)
+        phys, phys_pcols, phys_ids = self._physical_batch(batch, snap)
         if phys_ids:
             phys.sparkSession.conf.set(
                 "spark.sql.parquet.fieldId.write.enabled", "true"
@@ -815,7 +810,7 @@ class DeltaAppendSink:
                 phys_pcols,
             )
         ]
-        return self._commit_actions(batch, batch_id, adds)
+        return self._commit(snap, batch, batch_id, adds)
 
     def sink(self, distributed: bool = False):
         """``foreachBatch`` adapter."""
@@ -845,12 +840,12 @@ class DeltaAppendSink:
         breaking every read (ADVICE r12). Files younger than the horizon
         (by mtime) are kept; pass 0 only when no other writer can be
         in flight."""
-        head = self.head_version()
-        if head < 0:
+        snap = replay_head_dir(self.path)
+        if snap is None:
             return []
         return sweep_orphans(
             self.path,
-            set(self.live_files(head)),
+            set(snap["live"]),
             retention_seconds,
             _is_data_file,
         )
@@ -1005,12 +1000,11 @@ class DeltaAppendSink:
             z85_encode,
         )
 
-        if self._is_committed(batch_id):
+        state = replay_head_dir(self.path)
+        if self._is_committed(batch_id, state):
             return None
-        head = self.head_version()
-        if head < 0:
+        if state is None:
             raise ValueError("delete_where on a table with no commits")
-        state = self._replay_state(head)
         spark = self._session("delete_where")
         live = state["live"]
         by_path = {
@@ -1200,17 +1194,9 @@ class DeltaAppendSink:
                     }
                 )
             ]
-        removes_json = removes if removes else None
-        version = self._commit_actions(
-            None,
-            batch_id,
-            adds,
-            removes=removes_json,
-            extra_lines=extra,
-            expected_files={rel: live[rel] for rel in removes} or None,
-            snapshot_version=head,
+        return self._commit(
+            state, None, batch_id, adds, removes=removes, extra_lines=extra
         )
-        return version
 
     # ---------------------------------------------------------- restore
 
@@ -1224,16 +1210,16 @@ class DeltaAppendSink:
         files must still exist (not vacuumed). Replay-idempotent via
         the txn batch id; mutating-commit OCC conflict detection
         applies."""
-        if self._is_committed(batch_id):
+        snap = replay_head_dir(self.path)
+        if self._is_committed(batch_id, snap):
             return None
-        head = self.head_version()
-        if head < 0:
+        if snap is None:
             raise ValueError("restore on a table with no commits")
+        head = snap["version"]
         if not 0 <= version <= head:
             raise ValueError(f"version {version} outside log range 0..{head}")
         target = self._replay_state(version)["live"]
-        state = self._replay_state(head)
-        live = state["live"]
+        live = snap["live"]
         removes = sorted(set(live) - set(target))
         readds = sorted(set(target) - set(live))
         # files whose content CHANGED between the versions (a delete_where
@@ -1253,14 +1239,8 @@ class DeltaAppendSink:
                 f"{'...' if len(missing) > 3 else ''}"
             )
         adds = [_readd(target[rel]) for rel in readds + changed]
-        return self._commit_actions(
-            None,
-            batch_id,
-            adds,
-            removes=removes + changed,
-            expected_files={rel: live[rel] for rel in removes + changed}
-            or None,
-            snapshot_version=head,
+        return self._commit(
+            snap, None, batch_id, adds, removes=removes + changed
         )
 
     # --------------------------------------------------------- optimize
@@ -1285,23 +1265,18 @@ class DeltaAppendSink:
         table's PHYSICAL names (with parquet field ids stamped in id
         mode) so compacted files follow the same writer rules as the
         originals."""
-        from ..operators.deltalog import (
-            _column_ids,
-            _column_mapping,
-            delta_scan,
-        )
+        from ..operators.deltalog import _column_ids, _column_mapping
 
         if target_files < 1:
             raise ValueError("target_files must be >= 1")
-        if self._is_committed(batch_id):
+        state = replay_head_dir(self.path)
+        if self._is_committed(batch_id, state):
             return None
-        head = self.head_version()
-        if head < 0:
+        if state is None:
             raise ValueError("optimize on a table with no commits")
-        state = self._replay_state(head)
         spark = self._session("optimize")
         old = sorted(state["live"])
-        df = delta_scan(spark, self.path, version=head)
+        df = scan_adds(spark, self.path, state["metadata"], state["live"])
         mapping = _column_mapping(state["metadata"])
         ids = _column_ids(state["metadata"])
         if mapping:
@@ -1332,14 +1307,8 @@ class DeltaAppendSink:
                 phys_pcols,
             )
         ]
-        return self._commit_actions(
-            None,
-            batch_id,
-            adds,
-            removes=old,
-            removes_data_change=False,
-            expected_files={rel: state["live"][rel] for rel in old} or None,
-            snapshot_version=head,
+        return self._commit(
+            state, None, batch_id, adds, removes=old, removes_data_change=False
         )
 
     # ------------------------------------------------ checkpoint / clean
@@ -1407,11 +1376,6 @@ class DeltaAppendSink:
             if v <= cp:
                 os.unlink(self._commit_path(v))
                 pruned.append(v)
-        # the pruned JSON may have carried batch ids this instance never
-        # scanned — force the next _is_committed to re-seed from the
-        # checkpoint's txn rows (ADVICE r12)
-        if pruned:
-            self._txn_seeded = False
         return pruned
 
     # ------------------------------------------------------------ read
@@ -1563,10 +1527,9 @@ class DeltaKeyedStore(DeltaAppendSink):
     def commit_batch(self, batch: DataFrame, batch_id: int) -> int | None:
         from .sinks import upsert_batch
 
-        if self._is_committed(batch_id):
+        state = replay_head_dir(self.path)
+        if self._is_committed(batch_id, state):
             return None
-        head = self.head_version()
-        state = self._replay_state(head) if head >= 0 else None
         old = sorted(state["live"]) if state else []
         # r16: explicit schema from the log (the union after evolution —
         # appends only), no mergeSchema footer sweep over the live set
@@ -1601,11 +1564,11 @@ class DeltaKeyedStore(DeltaAppendSink):
                     }
                 )
             ]
-        return self._commit_actions(
-            batch, batch_id, [self._add_action(rel, table.num_rows)],
-            removes=old, extra_lines=extra,
-            expected_files={r: state["live"][r] for r in old},
-            snapshot_version=head,
+        # the merge read the whole table: any file that moved under it,
+        # or appeared beside it, conflicts
+        return self._commit(
+            state, batch, batch_id, [self._add_action(rel, table.num_rows)],
+            removes=old, extra_lines=extra, read_scope=lambda _rel: True,
         )
 
     def commit_batch_distributed(self, batch, batch_id):
@@ -1692,6 +1655,8 @@ class BucketedDeltaKeyedStore(DeltaKeyedStore):
 
     _BUCKET_RE = re.compile(r"^bucket-(\d{5})-b\d{10}\.parquet$")
     APP_ID = "delta-bucketed-store"
+    # the table property ``rebucket`` persists the bucket count in
+    _N_BUCKETS = "gmall.bucketedStore.nBuckets"
 
     def __init__(
         self,
@@ -1735,17 +1700,10 @@ class BucketedDeltaKeyedStore(DeltaKeyedStore):
         return int(m.group(1))
 
     def _table_n_buckets(self) -> int | None:
-        """Bucket count persisted in the table metadata (written by
+        """Bucket count persisted in the head's metadata (written by
         ``rebucket``); None before any rebucket."""
-        if self.head_version() < 0:
-            return None
-        conf = (
-            self._replay_state(self.head_version())["metadata"].get(
-                "configuration"
-            )
-            or {}
-        )
-        n = conf.get("gmall.bucketedStore.nBuckets")
+        conf = self._table_config(replay_head_dir(self.path))
+        n = conf.get(self._N_BUCKETS)
         return int(n) if n is not None else None
 
     def _write_buckets(
@@ -1787,13 +1745,12 @@ class BucketedDeltaKeyedStore(DeltaKeyedStore):
         than losing its merge)."""
         if new_n < 1:
             raise ValueError("n_buckets must be >= 1")
-        if self._is_committed(batch_id):
+        state = replay_head_dir(self.path)
+        if self._is_committed(batch_id, state):
             self.n_buckets = new_n
             return None
-        head = self.head_version()
-        if head < 0:
+        if state is None:
             raise ValueError("rebucket on a store with no commits")
-        state = self._replay_state(head)
         old_rels = sorted(state["live"])
         if not old_rels:
             raise ValueError("rebucket on a store with no state")
@@ -1814,19 +1771,14 @@ class BucketedDeltaKeyedStore(DeltaKeyedStore):
                         "partitionColumns": md.get("partitionColumns", []),
                         "configuration": {
                             **(md.get("configuration") or {}),
-                            "gmall.bucketedStore.nBuckets": str(new_n),
+                            self._N_BUCKETS: str(new_n),
                         },
                     }
                 }
             )
-            return self._commit_actions(
-                None,
-                batch_id,
-                adds,
-                removes=old_rels,
+            return self._commit(
+                state, None, batch_id, adds, removes=old_rels,
                 extra_lines=[meta],
-                expected_files={rel: state["live"][rel] for rel in old_rels},
-                snapshot_version=head,
             )
         except BaseException:
             self.n_buckets = old_n
@@ -1835,13 +1787,14 @@ class BucketedDeltaKeyedStore(DeltaKeyedStore):
     def commit_batch(self, batch: DataFrame, batch_id: int) -> int | None:
         from .sinks import upsert_batch
 
-        if self._is_committed(batch_id):
+        state = replay_head_dir(self.path)
+        if self._is_committed(batch_id, state):
             return None
         # a rebucket may have changed the bucket count since this
         # instance was constructed: the TABLE is authoritative (r14)
-        table_n = self._table_n_buckets()
-        if table_n is not None and table_n != self.n_buckets:
-            self.n_buckets = table_n
+        table_n = self._table_config(state).get(self._N_BUCKETS)
+        if table_n is not None:
+            self.n_buckets = int(table_n)
         # buckets this batch touches — bounded by n_buckets, tiny collect
         touched = sorted(
             r.b
@@ -1849,8 +1802,6 @@ class BucketedDeltaKeyedStore(DeltaKeyedStore):
             .distinct()
             .collect()
         )
-        head = self.head_version()
-        state = self._replay_state(head) if head >= 0 else None
         by_bucket: dict[int, list[str]] = {}
         for rel in sorted(state["live"]) if state else []:
             by_bucket.setdefault(self._bucket_of(rel), []).append(rel)
@@ -1868,7 +1819,13 @@ class BucketedDeltaKeyedStore(DeltaKeyedStore):
         adds = self._write_buckets(
             merged, max(len(touched), 1), f"b{batch_id:010d}", batch_id
         )
-        return self._commit_actions(batch, batch_id, adds, removes=cur_rels)
+        # the merge read every live file of its touched buckets: they must
+        # be exactly unchanged at publish time; other buckets may move
+        scope = set(touched)
+        return self._commit(
+            state, batch, batch_id, adds, removes=cur_rels,
+            read_scope=lambda rel: self._bucket_of(rel) in scope,
+        )
 
     # the merge IS the distributed path here — rows never hit the driver
     commit_batch_distributed = commit_batch

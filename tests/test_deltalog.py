@@ -3538,3 +3538,185 @@ def test_restore_from_a_checkpoint_writes_complete_add_actions(tmp_path):
             "dataChange"} <= set(adds[0])
     assert adds[0]["dataChange"] is True
     assert sink.live_files() == ["f1.parquet"]
+
+
+def _count_calls(monkeypatch, module, name) -> list:
+    """Wrap ``module.name`` so every call is recorded, and return the log."""
+    calls: list = []
+    real = getattr(module, name)
+
+    def counted(*args, **kw):
+        calls.append(args)
+        return real(*args, **kw)
+
+    monkeypatch.setattr(module, name, counted)
+    return calls
+
+
+@pytest.mark.parametrize("kind", ["append", "keyed", "bucketed"])
+def test_each_delta_write_replays_its_log_once(spark, tmp_path, monkeypatch, kind):
+    """A write reads its table once: on a 6-version table with no
+    checkpoint an uncontended commit replays the log exactly once, and a
+    replayed batch id replays once and writes no data file."""
+    from flink_gmall2024_realtime_spark.operators import deltalog
+    from flink_gmall2024_realtime_spark.streaming.delta import (
+        BucketedDeltaKeyedStore,
+        DeltaAppendSink,
+        DeltaKeyedStore,
+    )
+
+    path = str(tmp_path / kind)
+    if kind == "append":
+        sink = DeltaAppendSink(path)
+    elif kind == "keyed":
+        sink = DeltaKeyedStore(spark, path, key="k", order_col="o")
+    else:
+        sink = BucketedDeltaKeyedStore(
+            spark, path, key="k", order_col="o", n_buckets=4
+        )
+
+    def batch(b):
+        return spark.range(3 * b, 3 * b + 3).selectExpr(
+            "id AS k", "id * 10 AS v", f"{b}L AS o"
+        )
+
+    for b in range(6):
+        sink.commit_batch(batch(b), b)
+    assert sink.committed_versions() == list(range(6))
+    assert sink.checkpoint_versions() == []
+    replays = _count_calls(monkeypatch, deltalog, "_replay")
+    assert sink.commit_batch(batch(6), 6) == 6
+    assert len(replays) == 1
+
+    def files():
+        return sorted(
+            os.path.relpath(os.path.join(d, f), path)
+            for d, _dirs, fns in os.walk(path)
+            for f in fns
+        )
+
+    before = files()
+    replays.clear()
+    assert sink.commit_batch(batch(3), 3) is None
+    assert len(replays) == 1
+    assert files() == before
+
+
+_RACE_SCHEMA = "k long, v long, ord long"
+
+
+def _bucketed_race(spark, path, n_buckets, setup, mine_rows, other_rows):
+    """``mine`` reads its snapshot and writes its buckets; ``other``
+    commits ``other_rows`` before ``mine`` publishes. Returns (result or
+    the raised error, other)."""
+    from flink_gmall2024_realtime_spark.streaming.delta import (
+        BucketedDeltaKeyedStore,
+    )
+
+    def store():
+        return BucketedDeltaKeyedStore(
+            spark, path, key="k", order_col="ord", n_buckets=n_buckets
+        )
+
+    mine, other = store(), store()
+    setup(mine)
+    real = mine._commit_actions
+
+    def lose(*args, **kw):
+        other.commit_batch(spark.createDataFrame(other_rows, _RACE_SCHEMA), 7)
+        return real(*args, **kw)
+
+    mine._commit_actions = lose
+    try:
+        got = mine.commit_batch(spark.createDataFrame(mine_rows, _RACE_SCHEMA), 1)
+    except Exception as e:  # noqa: BLE001 — the caller asserts the type
+        got = e
+    return got, other
+
+
+def _bucket_of_keys(spark, keys, n_buckets):
+    from pyspark.sql import functions as F
+
+    return {
+        r.k: r.b
+        for r in spark.createDataFrame([(k,) for k in keys], "k long")
+        .select("k", F.pmod(F.xxhash64("k"), F.lit(n_buckets)).cast("int").alias("b"))
+        .collect()
+    }
+
+
+def test_bucketed_store_merge_that_loses_its_bucket_fails_loudly(spark, tmp_path):
+    """A bucketed merge that another writer's commit to the SAME bucket
+    overtook raises ``ConcurrentWriteError`` instead of publishing a
+    second live file for that bucket (duplicate keys)."""
+    from flink_gmall2024_realtime_spark.streaming.delta import (
+        ConcurrentWriteError,
+    )
+
+    first = [(1, 10, 1), (2, 20, 1), (3, 30, 1)]
+    got, other = _bucketed_race(
+        spark,
+        str(tmp_path / "one_bucket"),
+        1,
+        lambda s: s.commit_batch(spark.createDataFrame(first, _RACE_SCHEMA), 0),
+        [(2, 21, 2), (4, 40, 2)],
+        [(1, 11, 3), (3, 31, 3)],
+    )
+    assert isinstance(got, ConcurrentWriteError), got
+    assert "concurrent update" in str(got)
+    assert other.committed_versions() == [0, 1]
+    assert len(other.live_files()) == 1
+    rows = {r.k: r.v for r in other.read_latest().collect()}
+    assert rows == {1: 11, 2: 20, 3: 31}
+
+
+def test_bucketed_store_race_into_an_empty_bucket_fails_loudly(spark, tmp_path):
+    """Two merges inserting into the same bucket, empty in both snapshots:
+    the loser has no file there to lose, yet a second live file for the
+    bucket would still duplicate keys."""
+    from flink_gmall2024_realtime_spark.streaming.delta import (
+        ConcurrentWriteError,
+    )
+
+    buckets = _bucket_of_keys(spark, range(40), 2)
+    zero = [k for k in buckets if buckets[k] == 0]
+    one = [k for k in buckets if buckets[k] == 1]
+    got, other = _bucketed_race(
+        spark,
+        str(tmp_path / "empty_bucket"),
+        2,
+        lambda s: s.commit_batch(
+            spark.createDataFrame([(zero[0], 0, 1)], _RACE_SCHEMA), 0
+        ),
+        [(one[0], 1, 2)],
+        [(one[0], 2, 3), (one[1], 2, 3)],
+    )
+    assert isinstance(got, ConcurrentWriteError), got
+    assert len(other.live_files()) == 2  # one per bucket
+    rows = {r.k: r.v for r in other.read_latest().collect()}
+    assert rows == {zero[0]: 0, one[0]: 2, one[1]: 2}
+
+
+def test_bucketed_store_race_on_other_buckets_commits(spark, tmp_path):
+    """Only the touched buckets must be unchanged: a concurrent commit to
+    another bucket does not block the merge, and both land."""
+    buckets = _bucket_of_keys(spark, range(40), 2)
+    zero = [k for k in buckets if buckets[k] == 0]
+    one = [k for k in buckets if buckets[k] == 1]
+    got, other = _bucketed_race(
+        spark,
+        str(tmp_path / "other_bucket"),
+        2,
+        lambda s: s.commit_batch(
+            spark.createDataFrame(
+                [(zero[0], 0, 1), (one[0], 0, 1)], _RACE_SCHEMA
+            ),
+            0,
+        ),
+        [(zero[0], 5, 2), (zero[1], 5, 2)],
+        [(one[0], 7, 3)],
+    )
+    assert got == 2
+    assert len(other.live_files()) == 2
+    rows = {r.k: r.v for r in other.read_latest().collect()}
+    assert rows == {zero[0]: 5, zero[1]: 5, one[0]: 7}

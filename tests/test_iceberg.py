@@ -1994,3 +1994,32 @@ def test_plain_scan_explicit_schema_matches_inference(spark, tmp_path):
     }
     rows = {r["k"]: (r["v"], r["x"], r["n"]) for r in df.collect()}
     assert rows == {1: ("a", 2.5, None), 2: ("b", 1.5, 7)}
+
+
+def test_append_commit_reads_the_head_metadata_at_most_twice(
+    spark, tmp_path, monkeypatch
+):
+    """An uncontended ``commit_batch`` parses the head metadata once for
+    its batch-id dedupe and once to build the commit: never more."""
+    from flink_gmall2024_realtime_spark.operators import iceberg
+
+    sink = iceberg.IcebergAppendSink(spark, str(tmp_path / "t"))
+
+    def batch(b):
+        return spark.range(3 * b, 3 * b + 3).selectExpr("id AS k", "id * 10 AS v")
+
+    for b in range(6):
+        sink.commit_batch(batch(b), b)
+    calls: list = []
+    real = iceberg._head_metadata
+
+    def counted(path):
+        calls.append(path)
+        return real(path)
+
+    monkeypatch.setattr(iceberg, "_head_metadata", counted)
+    assert sink.commit_batch(batch(6), 6) is not None
+    assert len(calls) <= 2
+    calls.clear()
+    assert sink.commit_batch(batch(3), 3) is None
+    assert len(calls) == 1

@@ -251,6 +251,36 @@ def test_keyed_upsert_sink_heals_interrupted_swap(spark, tmp_path):
     assert rows.get("b") == 9
 
 
+def test_keyed_upsert_sink_drops_orphaned_staging_dir(spark, tmp_path):
+    """A ``.tmp_<n>`` staging dir whose batch never replays (the stream
+    moved on) is garbage: the next write deletes it, and none of its rows
+    ever reach the table."""
+    path = os.path.join(str(tmp_path), "dim_orphan")
+    schema = "id string, v long, ts long"
+    writer = sinks.keyed_upsert_sink(spark, path, key="id", order_col="ts", n_buckets=4)
+    writer(spark.createDataFrame([(k, 1, 1) for k in "abcdef"], schema), 0)
+    orphan = os.path.join(path, ".tmp_7")
+    (
+        spark.createDataFrame([(k, 99, 9, 0) for k in "abcxyz"], schema + ", bucket int")
+        .withColumn(sinks.TABLE_COL, F.lit(0))
+        .write.partitionBy(sinks.TABLE_COL, "bucket")
+        .parquet(orphan)
+    )
+
+    def table():
+        listing = sorted(
+            (d, sorted(os.listdir(os.path.join(path, d))))
+            for d in os.listdir(path) if d.startswith("bucket=")
+        )
+        return listing, sorted(map(tuple, spark.read.parquet(path).collect()))
+
+    before = table()
+    writer(spark.createDataFrame([], schema), 8)
+    assert not os.path.exists(orphan)
+    assert table() == before
+    assert {r[0] for r in before[1]} == set("abcdef")
+
+
 def _buckets(spark, keys, n_buckets):
     return {
         r["id"]: r["b"]

@@ -258,3 +258,40 @@ def test_every_iceberg_metadata_op_advances_the_version_hint(tmp_path):
         *_dir_reader(path), None
     )
     assert (sid, n_manifests, len(live)) == (11, 1, 3)
+
+
+def test_iceberg_lost_race_reads_the_head_once_for_landed_and_rebuild(
+    tmp_path,
+):
+    """After losing the pointer race to another batch, the commit reads the
+    new head once: that read tells ``landed()`` the batch is not yet
+    committed and is the head the rebuild publishes onto."""
+    path = str(tmp_path / "t")
+    mine, other = IcebergAppendSink(None, path), IcebergAppendSink(None, path)
+    fields = [{"id": 1, "name": "k", "required": False, "type": "long"}]
+
+    def entry(b):
+        rel = f"data/part-b{b:010d}.parquet"
+        pq.write_table(
+            pa.table({"k": pa.array([b], pa.int64())}),
+            os.path.join(path, rel),
+        )
+        return mine._data_entry(rel, 1, fields)
+
+    mine._commit_snapshot(0, fields, [entry(0)])
+    reads = []
+    real_head, real_publish = mine._head, mine._publish_metadata
+
+    def head():
+        reads.append(1)
+        return real_head()
+
+    def publish(version, body):
+        if version == 2:
+            other._commit_snapshot(1, fields, [entry(1)])
+        return real_publish(version, body)
+
+    mine._head, mine._publish_metadata = head, publish
+    assert mine._commit_snapshot(2, fields, [entry(2)]) == 3
+    assert len(reads) == 2
+    assert other.committed_batch_ids() == {0, 1, 2}
