@@ -34,7 +34,7 @@ from __future__ import annotations
 
 import json
 import struct
-from typing import Iterator
+from typing import Callable, Iterator
 
 import pandas as pd
 from pyspark.sql import DataFrame
@@ -2944,16 +2944,16 @@ class IcebergAppendSink:
             out[k] = int(v) if types.get(k) in ("long", "int") else v
         return out
 
-    def _live_signature(self) -> dict[str, int]:
+    def _live_signature(self, snapshot_id: int | None = None) -> dict[str, int]:
         """{rel: sequence-number} over every live DATA, position-delete
-        and equality-delete file at the current head (metadata-only;
-        absent seqs encode as -1). The OCC validation unit: a mutating
-        commit computed against one signature must not publish onto a
-        head whose signature drifted (real Iceberg's
-        ``validateDataFilesExist``)."""
+        and equality-delete file of ``snapshot_id`` (default: the current
+        head; metadata-only; absent seqs encode as -1, a snapshot that is
+        gone has {}). The OCC validation unit: a mutating commit computed
+        against one signature must not publish onto a head whose
+        signature drifted (real Iceberg's ``validateDataFilesExist``)."""
         try:
             _sid, _n, live, dels, eqs, _md, _loc = _iceberg_live(
-                *_dir_reader(self.path), None
+                *_dir_reader(self.path), snapshot_id
             )
         except ValueError:
             return {}
@@ -2978,7 +2978,7 @@ class IcebergAppendSink:
         eq_delete_files: list | None = None,
         replace: bool = False,
         operation: str | None = None,
-        expected_state: dict | None = None,
+        expected_state: tuple[int, Callable[[], dict]] | None = None,
         exact_state: bool = False,
         what: str = "commit",
     ) -> int | None:
@@ -3000,7 +3000,14 @@ class IcebergAppendSink:
         manifest-list entries written before this change carry no
         sequence number and re-encode as seq 0 — conservatively
         maskable by any delete, which is exactly what a delete issued
-        NOW intends."""
+        NOW intends.
+
+        ``expected_state`` is (the head version a mutating op read, a
+        thunk for the live signature it was computed against). While the
+        head is still that version nothing can have drifted; once it has
+        moved, the thunk and the new head's signature go through
+        ``check_drift`` (``exact_state``: any difference conflicts), so
+        an uncontended commit walks no manifests here."""
         import os
 
         from .avro import _zz
@@ -3043,13 +3050,13 @@ class IcebergAppendSink:
             )
 
         def build(head_v, md):
-            # OCC: validate on EVERY attempt (the head may already have
-            # moved between the caller's read and the first publish) — a
+            # OCC: validate on EVERY attempt whose head moved since the
+            # caller's read (it may move before the first publish) — a
             # lost pointer race must not re-publish stale delete
             # manifests that resurrect rows a concurrent compact rewrote
-            if expected_state is not None and md is not None:
+            if expected_state is not None and head_v != expected_state[0]:
                 check_drift(
-                    expected_state,
+                    expected_state[1](),
                     self._live_signature(),
                     what,
                     exact=exact_state,
@@ -3263,12 +3270,11 @@ class IcebergAppendSink:
 
         from pyspark.sql import functions as F
 
-        if self._is_committed(batch_id):
+        head_v, md = self._head()
+        if _batch_landed(md, batch_id):
             return None
-        get, names = _dir_reader(self.path)
-
-        _sid, _n, live, _dels, _eqs, md, _loc = _iceberg_live(
-            get, names, None
+        _sid, _n, live, _dels, _eqs, _md, _loc = _iceberg_live(
+            *_dir_reader(self.path), (md or {}).get("current-snapshot-id")
         )
         if not live:
             raise ValueError("delete_where on a table with no data files")
@@ -3295,8 +3301,12 @@ class IcebergAppendSink:
         # every matched position through a single task (VERDICT r14 #6)
         self.spark.conf.set("spark.sql.parquet.fieldId.write.enabled", "true")
         n_out = delete_file_partitions or max(1, min(16, len(live) // 64 + 1))
+        # the table schema declared from the metadata, as iceberg_scan
+        # reads it: no footer-inference job
+        rs = _parquet_read_schema(md)
+        reader = self.spark.read.schema(rs) if rs is not None else self.spark.read
         matched = (
-            self.spark.read.parquet(*full_paths)
+            reader.parquet(*full_paths)
             .select(
                 F.col("_metadata.file_name").alias("__name"),
                 F.col("_metadata.row_index").alias("__pos"),
@@ -3350,7 +3360,7 @@ class IcebergAppendSink:
             fields,
             [],
             delete_files=delete_files,
-            expected_state=expected,
+            expected_state=(head_v, lambda: expected),
             what="delete_where",
         )
 
@@ -3756,14 +3766,16 @@ class IcebergKeyedStore(IcebergAppendSink):
 
         import pyarrow.parquet as pq
 
-        if self._is_committed(batch_id):
+        head_v, md = self._head()
+        if _batch_landed(md, batch_id):
             return None
         # OCC: a replace snapshot DROPS every prior manifest — any
         # commit landing between this read and the publish would be
         # silently erased, so the head's full live signature must be
-        # exactly what the compaction read (VERDICT r14 #2)
-        expected = self._live_signature()
-        df = iceberg_scan(self.spark, self.path)
+        # exactly that of the snapshot the compaction read (VERDICT r14
+        # #2); the scan is pinned to that snapshot
+        sid = (md or {}).get("current-snapshot-id")
+        df = iceberg_scan(self.spark, self.path, sid)
         tbl = df.toArrow()
         fields = self._schema_fields(df)
         rel = f"data/compact-b{batch_id:010d}.parquet"
@@ -3775,7 +3787,7 @@ class IcebergKeyedStore(IcebergAppendSink):
             [self._data_entry(rel, tbl.num_rows, fields)],
             replace=True,
             operation="replace",
-            expected_state=expected,
+            expected_state=(head_v, lambda: self._live_signature(sid)),
             exact_state=True,
             what="compact",
         )

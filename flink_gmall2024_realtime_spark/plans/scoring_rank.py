@@ -40,7 +40,7 @@ from ..operators.joins import (  # noqa: F401
     lookup_join,
 )
 from ..operators.windows import daily_distinct_count, tumble  # noqa: F401
-from ..sources.fixtures import load_table  # noqa: F401
+from ..sources.fixtures import data_files, load_table  # noqa: F401
 from .catalog import CATALOG, QuerySpec, _t, register  # noqa: F401
 from .pipeline import _ANN_BRUTE_SQL
 from .extended import _COS_PAIR, _EMB_COS_SQL
@@ -2001,22 +2001,12 @@ def _footer_col_minmax(path: str, col: str):
     benches used to run a full ``agg(max)`` job per invocation — ~0.15 s of
     pure scan at sf0.1 and a whole extra pass over the table at any scale —
     to learn a value every file footer states exactly."""
-    import os as _os
-
     try:
         import pyarrow.parquet as _pq
     except ImportError:
         return None
 
-    if _os.path.isdir(path):
-        files = sorted(
-            _os.path.join(r, f)
-            for r, _d, fs in _os.walk(path)
-            for f in fs
-            if f.endswith(".parquet") and not f.startswith((".", "_"))
-        )
-    else:
-        files = [path] if _os.path.exists(path) else []
+    files = data_files(path)
     if not files or len(files) > _FOOTER_MAX_FILES:
         return None
     mn = mx = None

@@ -24,6 +24,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from .fixtures import read_parquet
+
 TABLE_PROCESS_DIM_SCHEMA = (
     "source_table string, sink_table string, sink_columns string, "
     "sink_family string, sink_row_key string, op string"
@@ -58,7 +60,7 @@ def file_config_source(spark: SparkSession, path: str, schema: str = TABLE_PROCE
         return spark.read.schema(schema).option("header", "true").csv(path)
     if path.endswith(".json") or path.endswith(".jsonl"):
         return spark.read.schema(schema).json(path)
-    return spark.read.parquet(path)
+    return read_parquet(spark, path)
 
 
 def cdc_log_config_source(

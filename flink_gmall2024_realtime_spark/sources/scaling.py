@@ -30,6 +30,8 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from .fixtures import read_parquet, table_path
+
 # 10^7 = 2^7 * 5^7: divisible by every key-mod the catalog's predicates use
 # (10, 20, 50), so offset keys keep their mod-class and per-replica results
 # replicate exactly.  NOT divisible by 3 or 7 — a scaled query must not add
@@ -80,7 +82,7 @@ def scaled_table(spark: SparkSession, sf_dir: str, name: str, m: int) -> DataFra
     a fixture artifact, not workload growth.  (Found the hard way: the
     first 100x sweep replicated nation 100x un-offset and q8's
     customer x nation join emitted 3.0e9 rows.)"""
-    base = spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
+    base = read_parquet(spark, table_path(sf_dir, name))
     if name not in KEY_OFFSETS:
         return base
     key_cols = KEY_OFFSETS[name]
@@ -185,8 +187,8 @@ def adversarial_table(
     tables pass through unchanged."""
     target = ADVERSARIAL_MODES[mode]
     if name != target:
-        return spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
-    base = spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
+        return read_parquet(spark, table_path(sf_dir, name))
+    base = read_parquet(spark, table_path(sf_dir, name))
     key_cols = KEY_OFFSETS[name]
     order_key = key_cols[0]
     hub = base.orderBy(order_key).first()

@@ -15,6 +15,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 
+from .fixtures import read_parquet
+
 
 def write_bucketed(
     df: DataFrame,
@@ -66,7 +68,7 @@ def compact_table(
             if f.endswith(".parquet")
         )
     n = max(1, math.ceil(total / target_bytes))
-    df = spark.read.parquet(path)
+    df = read_parquet(spark, path)
     out = df.repartition(n)
     if sort_within:
         out = out.sortWithinPartitions(sort_within)

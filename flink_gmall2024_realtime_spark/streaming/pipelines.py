@@ -32,12 +32,12 @@ def stream_events(spark: SparkSession, sf_dir: str, schema=None) -> DataFrame:
     File streams require a declared schema; hard-coding one would silently
     desync from the driver's fixture format (which has already changed
     TIMESTAMP(NANOS)-as-bigint -> timestamp[us] between rounds), so the
-    schema comes from the batch footer of the same file and the ts
-    normalization is the shared dtype-conditional one in
-    ``sources.fixtures``."""
-    from ..sources.fixtures import _normalize_events, table_path
+    schema is ``footer_schema`` of the same file (the batch reader's, read
+    on the driver with no Spark job) and the ts normalization is the shared
+    dtype-conditional one in ``sources.fixtures``."""
+    from ..sources.fixtures import _normalize_events, footer_schema, table_path
 
-    sch = schema or spark.read.parquet(table_path(sf_dir, "events")).schema
+    sch = schema or footer_schema(table_path(sf_dir, "events"))
     # file stream sources take a directory; glob-filter to the events file
     raw = (
         spark.readStream.schema(sch)

@@ -2023,3 +2023,79 @@ def test_append_commit_reads_the_head_metadata_at_most_twice(
     calls.clear()
     assert sink.commit_batch(batch(3), 3) is None
     assert len(calls) == 1
+
+
+def test_mutating_commits_walk_the_manifests_once_when_uncontended(
+    spark, tmp_path, monkeypatch
+):
+    """``delete_where`` and ``compact`` walk the manifests (``_iceberg_live``)
+    once for their read; the commit re-walks only when the head moved since
+    that read, and a lost race still conflicts loudly."""
+    from flink_gmall2024_realtime_spark.operators import iceberg
+    from flink_gmall2024_realtime_spark.streaming.delta import (
+        ConcurrentWriteError,
+    )
+
+    sink = iceberg.IcebergAppendSink(spark, str(tmp_path / "t"))
+    for b in range(6):
+        sink.commit_batch(
+            spark.range(10 * b, 10 * b + 10).selectExpr("id AS k", "id % 7 AS v"), b
+        )
+    store = iceberg.IcebergKeyedStore(
+        spark, str(tmp_path / "store"), key="k", order_col="ord", type_col="op"
+    )
+    for b in range(6):
+        store.commit_batch(
+            spark.range(b, b + 4).selectExpr(
+                "id AS k", f"id * 10 + {b} AS v", f"{b}L AS ord", "'u' AS op"
+            ),
+            b,
+        )
+    want = sorted((r.k, r.v) for r in store.read_as_of().select("k", "v").collect())
+
+    walks: list = []
+    real = iceberg._iceberg_live
+
+    def counted(*a, **kw):
+        walks.append(a[2:3])
+        return real(*a, **kw)
+
+    monkeypatch.setattr(iceberg, "_iceberg_live", counted)
+    assert sink.delete_where("k % 3 = 0", 6) is not None
+    assert len(walks) == 1
+    walks.clear()
+    assert sink.delete_where("k % 3 = 0", 6) is None
+    assert walks == []
+    assert sorted(r.k for r in iceberg.iceberg_scan(spark, sink.path).collect()) == [
+        k for k in range(60) if k % 3
+    ]
+
+    walks.clear()
+    assert store.compact(6) is not None
+    assert len(walks) == 1
+    assert (
+        sorted((r.k, r.v) for r in store.read_as_of().select("k", "v").collect())
+        == want
+    )
+
+    # lost race: a merge lands between compact's read and its publish
+    orig_scan = iceberg.iceberg_scan
+    fired: dict = {}
+
+    def raced(spark_, p, *a, **kw):
+        if not fired:
+            fired["done"] = True
+            iceberg.IcebergKeyedStore(
+                spark, store.path, key="k", order_col="ord", type_col="op"
+            ).commit_batch(
+                spark.range(1).selectExpr(
+                    "id AS k", "-1L AS v", "7L AS ord", "'u' AS op"
+                ),
+                7,
+            )
+        return orig_scan(spark_, p, *a, **kw)
+
+    monkeypatch.setattr(iceberg, "iceberg_scan", raced)
+    with pytest.raises(ConcurrentWriteError, match="compact"):
+        store.compact(8)
+    assert fired
