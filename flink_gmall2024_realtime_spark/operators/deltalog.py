@@ -260,6 +260,14 @@ def _column_mapping(metadata: dict) -> dict[str, str] | None:
         )
     out: dict[str, str] = {}
     for f in json.loads(metadata["schemaString"]).get("fields", []):
+        if not isinstance(f.get("type"), str):
+            # nested fields carry physical names and ids of their own,
+            # which this top-level map would miss: the leaves would read
+            # as nulls
+            raise NotImplementedError(
+                f"nested field {f['name']!r} under columnMapping={mode} "
+                "unsupported"
+            )
         phys = (f.get("metadata") or {}).get("delta.columnMapping.physicalName")
         if not phys:
             raise ValueError(
@@ -1719,7 +1727,7 @@ def _dv_positions_frame(spark, dv_rows):
     )
 
 
-def _dv_grouped_scan(spark, files, pcols, ptypes, fields3, reader=None):
+def _dv_grouped_scan(spark, files, pcols, ptypes, reader, data_cols):
     """ONE scan of every deletion-vector-carrying file in a Delta
     snapshot: rows keyed by (``_metadata.file_name``, ``row_index``)
     are anti-joined against a single positions DataFrame whose roaring
@@ -1730,9 +1738,9 @@ def _dv_grouped_scan(spark, files, pcols, ptypes, fields3, reader=None):
     positions side broadcasts only under ``_DV_BROADCAST_MAX_POSITIONS``
     estimated positions; above it the anti-join shuffles. Partition
     values re-attach via a broadcast file->partitionValues join (the
-    log is authoritative, not the paths); ``fields3`` is
-    [(logical, physical, sparktype)] so column mapping resolves and
-    schema-evolution gaps read as typed nulls. Callers guarantee file
+    log is authoritative, not the paths). ``reader`` reads files with the
+    table's read schema and ``data_cols`` project its columns to the
+    logical ones. Callers guarantee file
     basenames are unique within ``files``; ``files`` rows are
     (full_path, partition_key, raw_dv_bytes, cardinality)."""
     import os
@@ -1751,11 +1759,7 @@ def _dv_grouped_scan(spark, files, pcols, ptypes, fields3, reader=None):
         # omits cardinality, bound the estimate by bytes, conservatively
         est_positions += card if card is not None else len(raw) * 8
         pv_rows.append((name, *key))
-    if reader is None:
-        base = spark.read.option("mergeSchema", "true").parquet(*sorted(paths))
-    else:
-        base = reader(*sorted(paths))
-    df = base.select(
+    df = reader(*sorted(paths)).select(
         "*",
         F.col("_metadata.file_name").alias("__file"),
         F.col("_metadata.row_index").alias("__pos"),
@@ -1770,12 +1774,7 @@ def _dv_grouped_scan(spark, files, pcols, ptypes, fields3, reader=None):
         )
         pv_df = spark.createDataFrame(pv_rows, pv_schema)
         df = df.join(F.broadcast(pv_df), "__file", "inner")
-    sel = []
-    for name, p, t in fields3:
-        if p in df.columns:
-            sel.append(F.col(p).alias(name))
-        else:
-            sel.append(F.lit(None).cast(t).alias(name))
+    sel = list(data_cols)
     for i, c in enumerate(pcols):
         col = F.col(f"__pv_{i}")
         if c in ptypes:
@@ -1808,12 +1807,143 @@ def replay_head_dir(path: str) -> dict | None:
     return _replay(reader)
 
 
-_DELTA_TO_SPARK = {
-    "long": "long", "integer": "int", "short": "short", "byte": "byte",
-    "double": "double", "float": "float", "string": "string",
-    "boolean": "boolean", "date": "date", "timestamp": "timestamp",
-    "timestamp_ntz": "timestamp_ntz", "binary": "binary",
-}
+# the leaf types of the Delta protocol ("Primitive Types") by Spark
+# ``typeName``; struct, array and map nest them
+_DELTA_LEAVES = frozenset(
+    {
+        "string", "long", "integer", "short", "byte", "float", "double",
+        "decimal", "boolean", "binary", "date", "timestamp", "timestamp_ntz",
+    }
+)
+
+
+def leaf_types(dt):
+    """Every leaf ``DataType`` under ``dt`` (struct fields, array elements,
+    map keys and values), depth first."""
+    from pyspark.sql.types import ArrayType, MapType, StructType
+
+    if isinstance(dt, StructType):
+        for f in dt.fields:
+            yield from leaf_types(f.dataType)
+    elif isinstance(dt, ArrayType):
+        yield from leaf_types(dt.elementType)
+    elif isinstance(dt, MapType):
+        yield from leaf_types(dt.keyType)
+        yield from leaf_types(dt.valueType)
+    else:
+        yield dt
+
+
+def _plain(dt, nullable: bool = False):
+    """``dt`` with empty field metadata at every depth; ``nullable`` also
+    makes every field, array element and map value nullable."""
+    from pyspark.sql.types import ArrayType, MapType, StructField, StructType
+
+    if isinstance(dt, StructType):
+        return StructType(
+            [
+                StructField(
+                    f.name, _plain(f.dataType, nullable), nullable or f.nullable
+                )
+                for f in dt.fields
+            ]
+        )
+    if isinstance(dt, ArrayType):
+        return ArrayType(
+            _plain(dt.elementType, nullable), nullable or dt.containsNull
+        )
+    if isinstance(dt, MapType):
+        return MapType(
+            _plain(dt.keyType, nullable),
+            _plain(dt.valueType, nullable),
+            nullable or dt.valueContainsNull,
+        )
+    return dt
+
+
+def _partition_types(schema, partition_columns) -> dict:
+    """{partition column: DataType} for the partition columns ``schema``
+    declares. Partition values are strings in the log, so a nested
+    partition column has no encoding and is refused by name."""
+    types = {f.name: f.dataType for f in schema.fields}
+    out = {}
+    for c in partition_columns:
+        if c not in types:
+            continue
+        if types[c].typeName() not in _DELTA_LEAVES:
+            raise NotImplementedError(
+                f"unsupported column type {types[c].simpleString()!r} for "
+                f"partition column {c!r}: partition values are primitive"
+            )
+        out[c] = types[c]
+    return out
+
+
+def encode_schema(schema, partition_columns=()) -> str:
+    """A Delta ``schemaString`` for the Spark ``schema``: Spark's own
+    DataType JSON, which is the format the protocol specifies ("Schema
+    Serialization"), with field metadata left empty at every depth. A
+    leaf type the protocol lacks and a nested partition column are
+    refused by name."""
+    for f in schema.fields:
+        for t in leaf_types(f.dataType):
+            if t.typeName() not in _DELTA_LEAVES:
+                raise NotImplementedError(
+                    f"delta: unsupported column type {t.simpleString()!r} "
+                    f"(field {f.name!r})"
+                )
+    _partition_types(schema, partition_columns)
+    return json.dumps(_plain(schema).jsonValue())
+
+
+def decode_schema(schema_string: str, partition_columns=()):
+    """The Spark schema of a Delta ``schemaString``: (the data fields in
+    schema order as a ``StructType``, {partition column: DataType}).
+    Every field, element and value is nullable and carries no metadata:
+    a read schema, which files written before a column was appended
+    satisfy with typed nulls."""
+    from pyspark.sql.types import StructType
+
+    schema = _plain(StructType.fromJson(json.loads(schema_string)), True)
+    ptypes = _partition_types(schema, partition_columns)
+    return (
+        StructType([f for f in schema.fields if f.name not in ptypes]),
+        ptypes,
+    )
+
+
+def _file_read_schema(spark, metadata: dict, data):
+    """(read schema, file column per data field) for a table's data
+    files: logical names and no mapping; physical names under name-mode
+    column mapping; logical names carrying ``parquet.field.id`` under id
+    mode, resolved by Spark's field-id matching (ids missing from old
+    files read as nulls)."""
+    from pyspark.sql.types import StructField, StructType
+
+    mapping = _column_mapping(metadata) or {}
+    ids = _column_ids(metadata)
+    if ids:
+        spark.conf.set("spark.sql.parquet.fieldId.read.enabled", "true")
+        spark.conf.set("spark.sql.parquet.fieldId.read.ignoreMissing", "true")
+        return (
+            StructType(
+                [
+                    StructField(
+                        f.name, f.dataType, True,
+                        {"parquet.field.id": ids[f.name]},
+                    )
+                    for f in data.fields
+                ]
+            ),
+            data.names,
+        )
+    cols = [mapping.get(f.name, f.name) for f in data.fields]
+    return (
+        StructType(
+            [StructField(c, f.dataType, True) for c, f in zip(cols, data.fields)]
+        ),
+        cols,
+    )
 
 
 def _stats_skip(live: dict, stats_filter: dict) -> dict:
@@ -1989,37 +2119,20 @@ def delta_table_changes(
         for rel, a in adds.items():
             prior[rel] = a
     # ---- build the three grouped scans -------------------------------
-    pcols = head_state["metadata"]["partitionColumns"]
-    ptypes = {}
-    table_fields = []
-    for f in json.loads(head_state["metadata"]["schemaString"]).get(
-        "fields", []
-    ):
-        t = f.get("type")
-        if not isinstance(t, str) or t not in _DELTA_TO_SPARK:
-            raise NotImplementedError(f"unsupported column type {t!r}")
-        if f["name"] in pcols:
-            ptypes[f["name"]] = _DELTA_TO_SPARK[t]
-        else:
-            table_fields.append((f["name"], _DELTA_TO_SPARK[t]))
-    out_schema = ", ".join(
-        [f"{n} {t}" for n, t in table_fields]
-        + [f"{c} {ptypes[c]}" for c in pcols]
-        + ["_change_type string", "_commit_version bigint"]
-    )
+    from pyspark.sql.types import LongType, StringType, StructField, StructType
 
+    pcols = head_state["metadata"]["partitionColumns"]
     # r16 (guide §6): the CDF scans read with the EXPLICIT head schema —
     # the log is authoritative and evolution only appends, so the head's
     # non-partition fields are a superset of every range file's columns
     # (files predating an added column return typed nulls, exactly what
     # the mergeSchema + name-guarded projection produced) — instead of a
     # footer-inference sweep over the range's files.
-    from pyspark.sql.types import StructField, StructType
-    from pyspark.sql.types import _parse_datatype_string as _pds
-
-    data_read_schema = StructType(
-        [StructField(n, _pds(t), True) for n, t in table_fields]
+    data, ptypes = decode_schema(
+        head_state["metadata"]["schemaString"], pcols
     )
+    pfields = [StructField(c, ptypes[c], True) for c in pcols]
+    change_type = StructField("_change_type", StringType(), True)
 
     def grouped(files_meta, kind, positions=None, anti_dvs=None):
         """One scan over ``files_meta`` [(rel, version, add)]: rows
@@ -2032,7 +2145,7 @@ def delta_table_changes(
             raise NotImplementedError(
                 "duplicate changed-file basenames in the version range"
             )
-        df = spark.read.schema(data_read_schema).parquet(
+        df = spark.read.schema(data).parquet(
             *sorted(os.path.join(path, rel) for rel, _v, _a in files_meta)
         ).select(
             "*",
@@ -2088,17 +2201,13 @@ def delta_table_changes(
                 F.broadcast(spark.createDataFrame(meta_rows, schema)),
                 "__file",
             )
-        sel = []
-        for n, t in table_fields:
-            if n in df.columns:
-                sel.append(F.col(n).alias(n))
-            else:
-                sel.append(F.lit(None).cast(t).alias(n))
-        for i, c in enumerate(pcols):
-            sel.append(F.col(f"__pv_{i}").cast(ptypes[c]).alias(c))
-        sel.append(F.lit(kind).alias("_change_type"))
-        sel.append(F.col("__v").alias("_commit_version"))
-        return df.select(*sel)
+        return df.select(
+            *data.names,
+            *[F.col(f"__pv_{i}").cast(ptypes[c]).alias(c)
+              for i, c in enumerate(pcols)],
+            F.lit(kind).alias("_change_type"),
+            F.col("__v").alias("_commit_version"),
+        )
 
     parts = []
     if inserts:
@@ -2143,11 +2252,7 @@ def delta_table_changes(
         # _change_type; columns a cdc file does not physically carry read
         # as typed nulls — identical to what the name-guarded projection
         # produced over the mergeSchema read
-        cdc_schema = StructType(
-            [StructField(n, _pds(t), True) for n, t in table_fields]
-            + [StructField(c, _pds(ptypes[c]), True) for c in pcols]
-            + [StructField("_change_type", _pds("string"), True)]
-        )
+        cdc_schema = StructType([*data.fields, *pfields, change_type])
         df = spark.read.schema(cdc_schema).parquet(
             *sorted(os.path.join(path, rel) for rel, _v in cdc_files)
         ).select("*", F.col("_metadata.file_name").alias("__file"))
@@ -2156,24 +2261,23 @@ def delta_table_changes(
             "__file string, __v long",
         )
         df = df.join(F.broadcast(v_df), "__file")
-        sel = []
-        for n, t in table_fields:
-            sel.append(
-                F.col(n).alias(n)
-                if n in df.columns
-                else F.lit(None).cast(t).alias(n)
+        parts.append(
+            df.select(
+                *cdc_schema.names, F.col("__v").alias("_commit_version")
             )
-        for c in pcols:
-            sel.append(
-                F.col(c).cast(ptypes[c]).alias(c)
-                if c in df.columns
-                else F.lit(None).cast(ptypes[c]).alias(c)
-            )
-        sel.append(F.col("_change_type"))
-        sel.append(F.col("__v").alias("_commit_version"))
-        parts.append(df.select(*sel))
+        )
     if not parts:
-        return spark.createDataFrame([], out_schema)
+        return spark.createDataFrame(
+            [],
+            StructType(
+                [
+                    *data.fields,
+                    *pfields,
+                    change_type,
+                    StructField("_commit_version", LongType(), True),
+                ]
+            ),
+        )
     out = parts[0]
     for p_ in parts[1:]:
         out = out.unionByName(p_)
@@ -2240,83 +2344,29 @@ def scan_adds(spark, path: str, metadata: dict, live: dict) -> DataFrame:
     from pyspark.sql import functions as F
 
     mapping = _column_mapping(metadata)  # logical -> physical
-    ids = _column_ids(metadata)  # logical -> field id (id mode)
 
     def phys(name: str) -> str:
         return mapping.get(name, name) if mapping else name
 
     pcols = metadata["partitionColumns"]
-    ptypes = {}
-    for f in json.loads(metadata["schemaString"]).get("fields", []):
-        if f["name"] in pcols:
-            t = f.get("type")
-            if not isinstance(t, str) or t not in _DELTA_TO_SPARK:
-                raise NotImplementedError(
-                    f"unsupported partition column type {t!r}"
-                )
-            ptypes[f["name"]] = _DELTA_TO_SPARK[t]
     # project every file to the TABLE schema (schemaString order): after
     # schema evolution, pre-evolution files lack the appended columns —
     # they read as typed nulls, exactly like real Delta. Files carry
     # PHYSICAL column names under column mapping; the scan returns
     # logical ones.
-    table_fields = []
-    for f in json.loads(metadata["schemaString"]).get("fields", []):
-        if f["name"] in pcols:
-            continue
-        t = f.get("type")
-        if not isinstance(t, str) or t not in _DELTA_TO_SPARK:
-            raise NotImplementedError(f"unsupported column type {t!r}")
-        table_fields.append((f["name"], _DELTA_TO_SPARK[t]))
-
-    # id mode (r14): parquet columns resolve by FIELD ID, not name —
-    # Spark's native fieldId matching does it JVM-side (the read schema
-    # carries parquet.field.id metadata and logical names, so no rename
-    # pass is needed; ids missing from old files read as nulls)
-    id_schema = None
-    if ids:
-        from pyspark.sql.types import StructField, StructType
-        from pyspark.sql.types import _parse_datatype_string as _pds
-
-        spark.conf.set("spark.sql.parquet.fieldId.read.enabled", "true")
-        spark.conf.set("spark.sql.parquet.fieldId.read.ignoreMissing", "true")
-        id_schema = StructType(
-            [
-                StructField(n, _pds(t), True, {"parquet.field.id": ids[n]})
-                for n, t in table_fields
-            ]
-        )
-
+    data, ptypes = decode_schema(metadata["schemaString"], pcols)
     # r15 (guide §6): the read schema comes from the LOG's schemaString —
     # the authoritative source real Delta readers use — instead of
     # mergeSchema footer inference. Explicit-schema reads skip the
     # inference pass entirely (measured 0.133 -> 0.026 s per read-group at
     # fixture scale; at warehouse scale mergeSchema is a footer-reading
-    # job over every live file). Files that predate schema evolution
-    # return typed nulls for appended columns natively; extra (dropped)
-    # physical columns are never read at all — both exactly what the
-    # mergeSchema + project form produced.
-    from pyspark.sql.types import StructField, StructType
-    from pyspark.sql.types import _parse_datatype_string as _pds2
-
-    phys_schema = StructType(
-        [StructField(phys(n), _pds2(t), True) for n, t in table_fields]
-    )
+    # job over every live file). Extra (dropped) physical columns are
+    # never read at all.
+    read_schema, file_cols = _file_read_schema(spark, metadata, data)
+    data_cols = [F.col(c).alias(n) for c, n in zip(file_cols, data.names)]
 
     def read_files(*files):
-        if id_schema is not None:
-            return spark.read.schema(id_schema).parquet(*files)
-        return spark.read.schema(phys_schema).parquet(*files)
-
-    def project(df):
-        cols = []
-        for name, t in table_fields:
-            p = name if id_schema is not None else phys(name)
-            if p in df.columns:
-                cols.append(F.col(p).alias(name))
-            else:
-                cols.append(F.lit(None).cast(t).alias(name))
-        return df.select(*cols)
+        return spark.read.schema(read_schema).parquet(*files)
 
     def attach_partitions(df, key):
         for c, v in zip(pcols, key):
@@ -2351,10 +2401,6 @@ def scan_adds(spark, path: str, metadata: dict, live: dict) -> DataFrame:
         # which no in-repo writer produces.
         names = [os.path.basename(rel) for rel, _k, _r, _c in dv_files]
         if len(set(names)) == len(names):
-            fields3 = [
-                (n, n if id_schema is not None else phys(n), t)
-                for n, t in table_fields
-            ]
             parts.append(
                 _dv_grouped_scan(
                     spark,
@@ -2364,8 +2410,8 @@ def scan_adds(spark, path: str, metadata: dict, live: dict) -> DataFrame:
                     ],
                     pcols,
                     ptypes,
-                    fields3,
-                    reader=read_files,
+                    read_files,
+                    data_cols,
                 )
             )
         else:
@@ -2381,19 +2427,15 @@ def scan_adds(spark, path: str, metadata: dict, live: dict) -> DataFrame:
                 ):
                     pos_df = F.broadcast(pos_df)
                 df = df.join(pos_df, "__pos", "left_anti")
-                parts.append(attach_partitions(project(df), key))
+                parts.append(attach_partitions(df.select(*data_cols), key))
     for key, files in sorted(groups.items()):
         df = read_files(*files)
-        parts.append(attach_partitions(project(df), key))
+        parts.append(attach_partitions(df.select(*data_cols), key))
     if not parts:
-        # empty selection: derive the schema from schemaString
-        fields = []
-        for f in json.loads(metadata["schemaString"])["fields"]:
-            t = f.get("type")
-            if not isinstance(t, str) or t not in _DELTA_TO_SPARK:
-                raise NotImplementedError(f"unsupported column type {t!r}")
-            fields.append(f"{f['name']} {_DELTA_TO_SPARK[t]}")
-        return spark.createDataFrame([], schema=", ".join(fields))
+        # empty selection: the schemaString's fields in their order
+        return spark.createDataFrame(
+            [], decode_schema(metadata["schemaString"])[0]
+        )
     out = parts[0]
     for p in parts[1:]:
         out = out.unionByName(p)

@@ -1007,7 +1007,8 @@ def iceberg_scan(
     def delete_frames():
         """Lazily build (delete frame, data-file seq frame) once."""
         if "ddf" not in _dd:
-            d_raw = spark.read.parquet(
+            # the spec fixes a position-delete file's schema
+            d_raw = spark.read.schema("file_path string, pos long").parquet(
                 *sorted(os.path.join(path, rel) for rel, _s in deletes)
             ).select(
                 F.element_at(
@@ -1155,7 +1156,7 @@ def iceberg_scan(
             # driver-resolved positions
             for full, rel, seq in g["pos"]:
                 positions = sorted(_deleted_positions(resolved, rel, seq))
-                df = spark.read.parquet(full).select(
+                df = _read_data_parquet(full).select(
                     "*", F.col("_metadata.row_index").alias("__pos")
                 )
                 pos_df = spark.createDataFrame(

@@ -542,6 +542,15 @@ def q_time_weighted_avg(spark: SparkSession, sf_dir: str) -> DataFrame:
     return analytics.time_weighted_avg(_t(spark, sf_dir, "events"))
 
 
+def _round6(x):
+    """``x`` rounded half-up to 6 places from its binary double, as
+    DuckDB's ``round(x, 6)`` does. ``F.round`` rounds the shortest
+    decimal string instead, so it takes ties the double does not have:
+    41/640 is 0.06406249999999999445 as a double, and ``F.round`` gives
+    0.064063 where DuckDB gives 0.064062."""
+    return F.floor(x * 1e6 + 0.5) / 1e6
+
+
 @register(
     "q_rank_distribution",
     oracle="""
@@ -594,9 +603,9 @@ def q_rank_distribution(spark: SparkSession, sf_dir: str) -> DataFrame:
             "bal",
             "rnk",
             F.when(F.col("_n") == 1, F.lit(0.0))
-            .otherwise(F.round((F.col("rnk") - 1) / (F.col("_n") - 1), 6))
+            .otherwise(_round6((F.col("rnk") - 1) / (F.col("_n") - 1)))
             .alias("pct_rank"),
-            F.round(F.col("rnk") / F.col("_n"), 6).alias("cume"),
+            _round6(F.col("rnk") / F.col("_n")).alias("cume"),
             "prev_bal",
             F.round(F.col("bal") - F.col("prev_bal"), 2).alias("step"),
         )

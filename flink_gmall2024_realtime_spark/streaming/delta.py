@@ -28,6 +28,15 @@ needs, in an OPEN format any Delta reader can consume:
   (schemaString derived from the batch schema); snapshots at any
   version replay through ``read_delta_snapshot_dir`` or any Delta
   reader.
+- **one schema codec**: the schemaString is Spark's own DataType JSON
+  (``deltalog.encode_schema``; reads decode it with
+  ``deltalog.decode_schema``), so struct, array, map and decimal
+  columns commit like primitive ones — the DWD rows with their
+  ``common``/``page`` structs included. A nested partition column and
+  a nested field under column mapping are refused by name; a
+  ``timestamp_ntz`` at any depth creates a v3/v7 table with the
+  ``timestampNtz`` feature; nested leaves and decimals carry no
+  min/max stats.
 
 Write paths (r12):
 
@@ -52,6 +61,7 @@ Write paths (r12):
 from __future__ import annotations
 
 import datetime
+import decimal
 import json
 import os
 import re
@@ -59,9 +69,15 @@ import re
 from pyspark.sql import DataFrame
 
 from ..operators.deltalog import (
+    _column_ids,
+    _column_mapping,
     _dir_get,
     _dir_reader,
+    _file_read_schema,
     _log_listing,
+    decode_schema,
+    encode_schema,
+    leaf_types,
     read_commit,
     replay_delta_dir,
     replay_head_dir,
@@ -83,72 +99,39 @@ from .tablecommit import (
 )
 
 
-_SPARK_TO_DELTA = {
-    "long": "long",
-    "integer": "integer",
-    "short": "short",
-    "byte": "byte",
-    "double": "double",
-    "float": "float",
-    "string": "string",
-    "boolean": "boolean",
-    "date": "date",
-    "timestamp": "timestamp",
-    # timestampNtz is protocol-gated (reader+writer feature, v3/v7):
-    # _protocol_for emits the feature lists when a batch carries one
-    "timestamp_ntz": "timestamp_ntz",
-    "binary": "binary",
-}
-
-
 def _log_read_schema(state: dict):
     """Explicit Spark read schema from the log's ``schemaString`` (r16,
     guide §6 — VERDICT r15 #1): evolution only ever APPENDS nullable
     fields (``_schema_delta``), so the schema at a version IS the union
     a ``mergeSchema`` footer sweep would infer over that version's live
     files — files predating an added column return typed nulls natively.
-    Returns None (callers keep mergeSchema inference) when any field's
-    type falls outside the sink's primitive set or the table declares
-    column mapping (physical names diverge from logical ones)."""
-    from pyspark.sql.types import StructField, StructType
-    from pyspark.sql.types import _parse_datatype_string as _pds
-
-    from ..operators.deltalog import _DELTA_TO_SPARK
-
+    Returns None (callers keep mergeSchema inference) when the table
+    declares column mapping (physical names diverge from logical ones)."""
     md = state["metadata"]
-    conf = md.get("configuration") or {}
-    if (conf.get("delta.columnMapping.mode") or "none") != "none":
+    if _column_mapping(md):
         return None
-    fields = []
-    for f in json.loads(md["schemaString"]).get("fields", []):
-        t = f.get("type")
-        if not isinstance(t, str) or t not in _DELTA_TO_SPARK:
-            return None
-        fields.append(StructField(f["name"], _pds(_DELTA_TO_SPARK[t]), True))
-    return StructType(fields) if fields else None
+    schema = decode_schema(md["schemaString"])[0]
+    return schema if schema.fields else None
 
 
-def _protocol_for(df: DataFrame) -> dict:
-    """The protocol action a table created from this schema needs —
+def _needs_ntz(dt) -> bool:
+    return any(t.typeName() == "timestamp_ntz" for t in leaf_types(dt))
+
+
+def _protocol_for(schema) -> dict:
+    """The protocol action a table created with this schema needs —
     plain v1/v2 unless a column requires a table feature (today:
-    ``timestamp_ntz`` -> the spec's ``timestampNtz`` reader+writer
-    feature at v3/v7). Writing feature-typed data under a v1 protocol
-    would make every spec-following reader misread it silently."""
-    feats = sorted(
-        {"timestampNtz"}
-        & {
-            "timestampNtz"
-            for f in df.schema.fields
-            if f.dataType.typeName() == "timestamp_ntz"
-        }
-    )
-    if not feats:
+    ``timestamp_ntz`` at any depth -> the spec's ``timestampNtz``
+    reader+writer feature at v3/v7). Writing feature-typed data under a
+    v1 protocol would make every spec-following reader misread it
+    silently."""
+    if not _needs_ntz(schema):
         return {"minReaderVersion": 1, "minWriterVersion": 2}
     return {
         "minReaderVersion": 3,
         "minWriterVersion": 7,
-        "readerFeatures": feats,
-        "writerFeatures": feats,
+        "readerFeatures": ["timestampNtz"],
+        "writerFeatures": ["timestampNtz"],
     }
 
 
@@ -244,26 +227,6 @@ def _json_stat(v):
     return v.isoformat() if isinstance(v, datetime.date) else v
 
 
-def _schema_string(df: DataFrame) -> str:
-    fields = []
-    for f in df.schema.fields:
-        t = f.dataType.typeName()
-        if t not in _SPARK_TO_DELTA:
-            raise NotImplementedError(
-                f"delta append sink: unsupported column type {t!r} "
-                f"(field {f.name!r})"
-            )
-        fields.append(
-            {
-                "name": f.name,
-                "type": _SPARK_TO_DELTA[t],
-                "nullable": bool(f.nullable),
-                "metadata": {},
-            }
-        )
-    return json.dumps({"type": "struct", "fields": fields})
-
-
 class DeltaAppendSink:
     """Append-only Delta table writer for ``foreachBatch``.
 
@@ -355,13 +318,22 @@ class DeltaAppendSink:
         stats: dict = {"numRecords": n_rows}
         try:
             mins, maxs, nulls = footer_stats(full)
-            if mins:
-                stats["minValues"] = {k: _json_stat(v) for k, v in mins.items()}
-                stats["maxValues"] = {k: _json_stat(v) for k, v in maxs.items()}
-            if nulls:
-                stats["nullCount"] = nulls
         except Exception:
-            pass  # stats are an optimization; the add must still commit
+            mins = maxs = nulls = {}  # stats are optional; the add commits
+        # top-level columns only: a nested leaf's footer path ("common.ar")
+        # is not a Delta stats key. Decimals keep no bounds either (JSON
+        # has no exact decimal); skipping keeps files without a column's
+        # stats.
+        bounded = [
+            k for k, v in mins.items()
+            if "." not in k and not isinstance(v, decimal.Decimal)
+        ]
+        if bounded:
+            stats["minValues"] = {k: _json_stat(mins[k]) for k in bounded}
+            stats["maxValues"] = {k: _json_stat(maxs[k]) for k in bounded}
+        nulls = {k: n for k, n in nulls.items() if "." not in k}
+        if nulls:
+            stats["nullCount"] = nulls
         return json.dumps(
             {
                 "add": {
@@ -462,12 +434,16 @@ class DeltaAppendSink:
         never rewrites."""
         if state is None:
             return None  # version 0 writes the initial metaData itself
-        table = json.loads(state["metadata"]["schemaString"])["fields"]
-        have = {f["name"]: f["type"] for f in table}
-        batch_fields = json.loads(_schema_string(batch))["fields"]
+        table_string = state["metadata"]["schemaString"]
+        have = {
+            f.name: f.dataType for f in decode_schema(table_string)[0].fields
+        }
+        batch_string = encode_schema(batch.schema)
+        # both sides decode nullable at every depth: nullability is not
+        # part of a column's type
         conflicts = [
-            f["name"] for f in batch_fields
-            if f["name"] in have and have[f["name"]] != f["type"]
+            f.name for f in decode_schema(batch_string)[0].fields
+            if f.name in have and have[f.name] != f.dataType
         ]
         if conflicts:
             raise ValueError(
@@ -475,16 +451,18 @@ class DeltaAppendSink:
                 f"column(s) {conflicts} — schema evolution appends, it "
                 "never rewrites"
             )
-        new_fields = [f for f in batch_fields if f["name"] not in have]
+        new_fields = [
+            f for f in batch.schema.fields if f.name not in have
+        ]
         if not new_fields:
             return None
         if not self.schema_evolution:
             raise ValueError(
                 f"delta sink: batch carries new column(s) "
-                f"{[f['name'] for f in new_fields]} and schema_evolution "
+                f"{[f.name for f in new_fields]} and schema_evolution "
                 "is off"
             )
-        needs = {f["name"] for f in new_fields if f["type"] == "timestamp_ntz"}
+        needs = {f.name for f in new_fields if _needs_ntz(f.dataType)}
         if needs:
             proto = state.get("protocol") or {}
             if "timestampNtz" not in (proto.get("readerFeatures") or []):
@@ -495,7 +473,12 @@ class DeltaAppendSink:
                     "upgrade commits are unsupported; create the table "
                     "with the feature instead"
                 )
-        merged = table + [{**f, "nullable": True} for f in new_fields]
+        added = {f.name for f in new_fields}
+        merged = json.loads(table_string)["fields"] + [
+            {**f, "nullable": True}
+            for f in json.loads(batch_string)["fields"]
+            if f["name"] in added
+        ]
         return json.dumps(
             {
                 "metaData": {
@@ -651,14 +634,18 @@ class DeltaAppendSink:
                     raise ValueError(
                         "metadata-only commit cannot create the table"
                     )
-                lines.append(json.dumps({"protocol": _protocol_for(batch)}))
+                lines.append(
+                    json.dumps({"protocol": _protocol_for(batch.schema)})
+                )
                 lines.append(
                     json.dumps(
                         {
                             "metaData": {
                                 "id": self.APP_ID,
                                 "format": {"provider": "parquet", "options": {}},
-                                "schemaString": _schema_string(batch),
+                                "schemaString": encode_schema(
+                                    batch.schema, self.partition_columns
+                                ),
                                 "partitionColumns": self.partition_columns,
                                 "configuration": dict(
                                     self.table_configuration
@@ -701,11 +688,12 @@ class DeltaAppendSink:
         resolves by physicalName/field id, finds nothing, and the
         appended rows silently read as nulls (ADVICE r14). Returns
         (translated batch, physical partition columns, physical-name ->
-        field-id map or None). No-op on unmapped tables."""
+        field-id map or None). No-op on unmapped tables. An unsupported
+        column type or a nested partition column is refused here, before
+        any file is written."""
+        encode_schema(batch.schema, self.partition_columns)
         if snap is None:
             return batch, list(self.partition_columns), None
-        from ..operators.deltalog import _column_ids, _column_mapping
-
         tbl_pcols = list(snap["metadata"].get("partitionColumns") or [])
         if tbl_pcols != list(self.partition_columns):
             # an add without (or with wrong) partitionValues silently
@@ -865,29 +853,11 @@ class DeltaAppendSink:
 
         from pyspark.sql import functions as F
 
-        from ..operators.deltalog import (
-            _DELTA_TO_SPARK,
-            _column_ids,
-            _column_mapping,
-        )
-
         mapping = _column_mapping(state["metadata"])
-        ids = _column_ids(state["metadata"])
-        meta = [
-            F.col("_metadata.file_path").alias("__f"),
-            F.col("_metadata.row_index").alias("__p"),
-        ]
         pcols = state["metadata"]["partitionColumns"]
-        fields = []
-        for f in json.loads(state["metadata"]["schemaString"]).get(
-            "fields", []
-        ):
-            if f["name"] in pcols:
-                continue
-            t = f.get("type")
-            if not isinstance(t, str) or t not in _DELTA_TO_SPARK:
-                raise NotImplementedError(f"unsupported column type {t!r}")
-            fields.append((f["name"], _DELTA_TO_SPARK[t]))
+        data, ptypes = decode_schema(
+            state["metadata"]["schemaString"], pcols
+        )
 
         def attach_partitions(df):
             """Join the log's partitionValues onto rows by file name —
@@ -900,14 +870,6 @@ class DeltaAppendSink:
                 raise NotImplementedError(
                     "duplicate data-file basenames in the live set"
                 )
-            ptypes = {}
-            for f in json.loads(state["metadata"]["schemaString"]).get(
-                "fields", []
-            ):
-                if f["name"] in pcols and isinstance(f.get("type"), str):
-                    ptypes[f["name"]] = _DELTA_TO_SPARK.get(
-                        f["type"], "string"
-                    )
             rows = []
             for rel, add in sorted(live.items()):
                 pv = add.get("partitionValues") or {}
@@ -932,39 +894,20 @@ class DeltaAppendSink:
                 "__name", *[f"__pv_{i}" for i in range(len(pcols))]
             )
 
-        meta = meta + [F.col("_metadata.file_name").alias("__name")]
-        if ids:
-            from pyspark.sql.types import StructField, StructType
-            from pyspark.sql.types import _parse_datatype_string as _pds
-
-            spark.conf.set("spark.sql.parquet.fieldId.read.enabled", "true")
-            spark.conf.set(
-                "spark.sql.parquet.fieldId.read.ignoreMissing", "true"
-            )
-            schema = StructType(
-                [
-                    StructField(n, _pds(t), True, {"parquet.field.id": ids[n]})
-                    for n, t in fields
-                ]
-            )
-            df = spark.read.schema(schema).parquet(*paths).select(
-                *meta, *[F.col(n) for n, _t in fields]
-            )
-            return attach_partitions(df)
         # r16 (guide §6): explicit read schema from the log's schemaString
-        # (physical names under column mapping, logical otherwise) instead
-        # of a mergeSchema footer sweep — files missing an evolved column
-        # return typed nulls natively, dropped physical columns are never
-        # read
-        from pyspark.sql.types import StructField, StructType
-        from pyspark.sql.types import _parse_datatype_string as _pds
-
-        phys = [((mapping or {}).get(n, n), n, t) for n, t in fields]
-        raw = spark.read.schema(
-            StructType([StructField(p, _pds(t), True) for p, _n, t in phys])
-        ).parquet(*paths)
+        # (physical names under column mapping, field ids in id mode,
+        # logical names otherwise) instead of a mergeSchema footer sweep —
+        # files missing an evolved column return typed nulls natively,
+        # dropped physical columns are never read
+        schema, cols = _file_read_schema(spark, state["metadata"], data)
+        raw = spark.read.schema(schema).parquet(*paths)
         return attach_partitions(
-            raw.select(*meta, *[F.col(p).alias(n) for p, n, _t in phys])
+            raw.select(
+                F.col("_metadata.file_path").alias("__f"),
+                F.col("_metadata.row_index").alias("__p"),
+                F.col("_metadata.file_name").alias("__name"),
+                *[F.col(c).alias(n) for c, n in zip(cols, data.names)],
+            )
         )
 
     def delete_where(self, condition, batch_id: int) -> int | None:
@@ -993,7 +936,7 @@ class DeltaAppendSink:
 
         from pyspark.sql import functions as F
 
-        from ..operators.deltalog import _column_mapping, _dv_positions
+        from ..operators.deltalog import _dv_positions
         from ..operators.roaring import (
             build_dv_file,
             serialize_roaring_bitmap_array,
@@ -1265,8 +1208,6 @@ class DeltaAppendSink:
         table's PHYSICAL names (with parquet field ids stamped in id
         mode) so compacted files follow the same writer rules as the
         originals."""
-        from ..operators.deltalog import _column_ids, _column_mapping
-
         if target_files < 1:
             raise ValueError("target_files must be >= 1")
         state = replay_head_dir(self.path)

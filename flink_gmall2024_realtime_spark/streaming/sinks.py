@@ -820,8 +820,12 @@ def hll_register_sink(
         heal(reg_path, old_path)
         fresh = sketch.hll_registers(batch, group_col, id_col)
         if os.path.exists(reg_path):
+            # the stored registers have the schema this sink writes:
+            # declaring it skips an inference job per batch
             merged = sketch.merge_registers(
-                spark.read.parquet(reg_path), fresh, group_col
+                spark.read.schema(fresh.schema).parquet(reg_path),
+                fresh,
+                group_col,
             )
         else:
             merged = fresh
@@ -878,7 +882,14 @@ def _sum_merge_sink(spark: SparkSession, path: str, build_fn, keys: list[str], m
                 "or restore the checkpoint"
             )
         fresh = build_fn(batch)
-        stored = spark.read.parquet(data_path) if os.path.exists(data_path) else None
+        # the stored table has the schema of what this sink writes: a
+        # merge keeps ``fresh``'s columns and types (a count summed stays
+        # long), so declaring it skips an inference job per batch
+        stored = (
+            spark.read.schema(fresh.schema).parquet(data_path)
+            if os.path.exists(data_path)
+            else None
+        )
         if merge_fn is not None:
             merged = merge_fn(stored, fresh)
         elif stored is not None:

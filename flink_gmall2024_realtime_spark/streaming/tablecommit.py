@@ -106,12 +106,14 @@ def footer_stats(full: str) -> tuple[dict, dict, dict]:
     """(mins, maxs, null_counts) per column name, folded over every row
     group of the parquet footer (the writer already paid for them).
 
-    A column whose min/max is missing from any row group, or whose binary
-    bounds are not UTF-8, has no min/max at all: keeping an earlier row
-    group's narrower bounds would let data skipping prune matching rows.
+    A column whose min/max is missing from any row group, whose binary
+    bounds are not UTF-8, or whose bounds pyarrow cannot convert has no
+    min/max at all: keeping an earlier row group's narrower bounds would
+    let data skipping prune matching rows.
     A null count is the sum over row groups and is dropped when any row
     group lacks one. Values stay native (int, str, date, datetime); each
     format encodes them its own way."""
+    import pyarrow as pa
     import pyarrow.parquet as pq
 
     md = pq.ParquetFile(full).metadata
@@ -135,7 +137,13 @@ def footer_stats(full: str) -> tuple[dict, dict, dict]:
             if st is None or not st.has_min_max:
                 no_bounds.add(name)
                 continue
-            mn, mx = st.min, st.max
+            try:
+                mn, mx = st.min, st.max
+            except pa.ArrowException:
+                # pyarrow cannot convert some bounds, such as a decimal
+                # stored as INT32/INT64
+                no_bounds.add(name)
+                continue
             if isinstance(mn, bytes):
                 try:
                     mn, mx = mn.decode(), mx.decode()

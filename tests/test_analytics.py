@@ -462,3 +462,36 @@ def test_markov_counts_match_python_model(spark_module, rows):
         for r in seq.groupBy("src", "dst").agg(F.count(F.lit(1)).alias("n")).collect()
     }
     assert got == _markov_python(data)
+
+
+def test_rank_distribution_rounds_the_binary_double_like_its_oracle(
+    spark, tmp_path
+):
+    """``q_rank_distribution`` rounds ``cume`` and ``pct_rank`` from the
+    binary double, as DuckDB's ``round(x, 6)`` does: 41/640 is just
+    below the decimal tie 0.0640625, so it rounds to 0.064062."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from flink_gmall2024_realtime_spark.plans import CATALOG
+
+    n = 640
+    pq.write_table(
+        pa.table(
+            {
+                "c_custkey": pa.array(range(1, n + 1), pa.int64()),
+                "c_nationkey": pa.array([11] * n, pa.int32()),
+                "c_acctbal": pa.array([float(k) for k in range(n)], pa.float64()),
+            }
+        ),
+        tmp_path / "customer.parquet",
+    )
+    rows = {
+        r["rnk"]: r
+        for r in CATALOG["q_rank_distribution"].spark(spark, str(tmp_path)).collect()
+    }
+    assert len(rows) == n
+    assert rows[41]["cume"] == 0.064062  # F.round gives 0.064063
+    # (rnk - 1) / (n - 1) = 1/639 rounds down; 320/639 = 0.50078247... up
+    assert rows[2]["pct_rank"] == 0.001565
+    assert rows[321]["pct_rank"] == 0.500782

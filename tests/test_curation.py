@@ -378,6 +378,61 @@ def test_hdr_hist_sink_streaming_equals_batch(spark, sf_dir, tmp_path):
     assert sorted(map(tuple, est_stream)) == sorted(map(tuple, est_batch))
 
 
+def test_sketch_sinks_read_their_store_with_a_declared_schema(
+    spark, sf_dir, tmp_path, monkeypatch
+):
+    """Every stored-table read of ``cm_sketch_sink`` and
+    ``hll_register_sink`` declares the schema the sink writes, so no
+    micro-batch runs a schema-inference job; over 3 batches the stores
+    equal the single-pass sketches."""
+    import os
+
+    from pyspark.sql.readwriter import DataFrameReader
+
+    from flink_gmall2024_realtime_spark.operators import sketch
+    from flink_gmall2024_realtime_spark.streaming import sinks
+
+    ev = (
+        load_table(spark, sf_dir, "events")
+        .filter(F.col("user_id").isNotNull())
+        .select("event_type", "user_id")
+    )
+    reads = []
+    real_schema, real_parquet = DataFrameReader.schema, DataFrameReader.parquet
+
+    def schema(self, s):
+        self._declared = True
+        return real_schema(self, s)
+
+    def parquet(self, *paths, **kw):
+        reads.append((paths, getattr(self, "_declared", False)))
+        return real_parquet(self, *paths, **kw)
+
+    monkeypatch.setattr(DataFrameReader, "schema", schema)
+    monkeypatch.setattr(DataFrameReader, "parquet", parquet)
+    cm_store = os.path.join(str(tmp_path), "cm")
+    hll_store = os.path.join(str(tmp_path), "hll")
+    cm = sinks.cm_sketch_sink(spark, cm_store, "user_id")
+    hll = sinks.hll_register_sink(spark, hll_store)
+    for i in range(3):
+        chunk = ev.filter(F.col("user_id") % 3 == i)
+        cm(chunk, batch_id=i)
+        hll(chunk, batch_id=i)
+    monkeypatch.undo()
+    assert len(reads) == 4  # batches 1 and 2 of each sink read their store
+    assert [p for p, declared in reads if not declared] == []
+
+    def rows(path):
+        return sorted(map(tuple, spark.read.parquet(path).collect()))
+
+    assert rows(os.path.join(cm_store, "table")) == sorted(
+        map(tuple, sketch.cm_table(ev, "user_id").collect())
+    )
+    assert rows(os.path.join(hll_store, "registers")) == sorted(
+        map(tuple, sketch.hll_registers(ev, "event_type", "user_id").collect())
+    )
+
+
 def test_agg_view_sink_streaming_equals_recompute_and_deletes_groups(spark, sf_dir, tmp_path):
     """Streaming signed-changelog view maintenance (inserts then
     retractions across 3 chunks) must equal a from-scratch recompute over

@@ -267,10 +267,13 @@ class TestDeltaAppendSink:
 
         from flink_gmall2024_realtime_spark.streaming.delta import DeltaAppendSink
 
-        sink = DeltaAppendSink(str(tmp_path / "tbl"))
-        df = spark.createDataFrame([([1, 2],)], "a array<long>")
+        # nested types are Delta columns, but a partition value is a
+        # string in the log: a struct partition column has no encoding
+        sink = DeltaAppendSink(str(tmp_path / "tbl"), partition_columns=["s"])
+        df = spark.createDataFrame([(1, (2,))], "k long, s struct<a: long>")
         with _pytest.raises(NotImplementedError, match="unsupported column type"):
-            sink.commit_batch(df, 0)
+            sink.commit_batch_distributed(df, 0)
+        assert not os.listdir(tmp_path / "tbl" / "_delta_log")
 
 
 def test_last_checkpoint_without_parquet_raises():
@@ -3720,3 +3723,345 @@ def test_bucketed_store_race_on_other_buckets_commits(spark, tmp_path):
     assert len(other.live_files()) == 2
     rows = {r.k: r.v for r in other.read_latest().collect()}
     assert rows == {zero[0]: 5, zero[1]: 5, one[0]: 7}
+
+
+def _all_nullable(dt):
+    """``dt`` with every field, array element and map value nullable."""
+    from pyspark.sql import types as T
+
+    if isinstance(dt, T.StructType):
+        return T.StructType(
+            [T.StructField(f.name, _all_nullable(f.dataType), True) for f in dt]
+        )
+    if isinstance(dt, T.ArrayType):
+        return T.ArrayType(_all_nullable(dt.elementType), True)
+    if isinstance(dt, T.MapType):
+        return T.MapType(dt.keyType, _all_nullable(dt.valueType), True)
+    return dt
+
+
+class TestSchemaCodec:
+    """One Delta schema codec: the ``schemaString`` is Spark's own
+    DataType JSON, so nested types are Delta columns."""
+
+    def _zoo(self):
+        from pyspark.sql import types as T
+
+        prim = T.StructType(
+            [
+                T.StructField("l", T.LongType(), False),
+                T.StructField("i", T.IntegerType()),
+                T.StructField("sh", T.ShortType()),
+                T.StructField("b", T.ByteType()),
+                T.StructField("d", T.DoubleType()),
+                T.StructField("f", T.FloatType()),
+                T.StructField("s", T.StringType(), False),
+                T.StructField("bo", T.BooleanType()),
+                T.StructField("dt", T.DateType()),
+                T.StructField("ts", T.TimestampType()),
+                T.StructField("ntz", T.TimestampNTZType()),
+                T.StructField("bin", T.BinaryType(), True, {"comment": "x"}),
+            ]
+        )
+        nested = T.StructType(
+            [
+                T.StructField("dec", T.DecimalType(10, 2), False),
+                T.StructField(
+                    "st",
+                    T.StructType(
+                        [
+                            T.StructField("t", T.TimestampNTZType(), False),
+                            T.StructField("x", T.LongType()),
+                        ]
+                    ),
+                ),
+                T.StructField(
+                    "arr",
+                    T.ArrayType(
+                        T.StructType(
+                            [T.StructField("a", T.StringType(), False)]
+                        ),
+                        False,
+                    ),
+                ),
+                T.StructField(
+                    "m", T.MapType(T.StringType(), T.LongType(), False), False
+                ),
+            ]
+        )
+        return prim, nested
+
+    def test_round_trip_over_a_type_zoo(self):
+        from pyspark.sql import types as T
+
+        from flink_gmall2024_realtime_spark.operators.deltalog import (
+            decode_schema,
+            encode_schema,
+        )
+
+        prim, nested = self._zoo()
+        for schema in (prim, nested, T.StructType([*prim, *nested])):
+            data, ptypes = decode_schema(encode_schema(schema))
+            assert data == _all_nullable(schema) and ptypes == {}
+        # partition columns come back apart from the data fields
+        data, ptypes = decode_schema(encode_schema(prim, ["s"]), ["s", "gone"])
+        assert "s" not in data.names and ptypes == {"s": T.StringType()}
+
+    def test_primitive_schema_string_is_unchanged(self):
+        """The primitive schemaString is byte-identical to the one the
+        writer emitted before the codec, so every table it wrote keeps
+        its log bytes."""
+        from flink_gmall2024_realtime_spark.operators.deltalog import (
+            encode_schema,
+        )
+
+        prim, _nested = self._zoo()
+        types = [
+            ("l", "long", "false"), ("i", "integer", "true"),
+            ("sh", "short", "true"), ("b", "byte", "true"),
+            ("d", "double", "true"), ("f", "float", "true"),
+            ("s", "string", "false"), ("bo", "boolean", "true"),
+            ("dt", "date", "true"), ("ts", "timestamp", "true"),
+            ("ntz", "timestamp_ntz", "true"), ("bin", "binary", "true"),
+        ]
+        want = '{"type": "struct", "fields": [' + ", ".join(
+            f'{{"name": "{n}", "type": "{t}", "nullable": {nl}, '
+            '"metadata": {}}'
+            for n, t, nl in types
+        ) + "]}"
+        assert encode_schema(prim) == want
+
+    def test_codec_refusals(self):
+        from pyspark.sql import types as T
+
+        from flink_gmall2024_realtime_spark.operators.deltalog import (
+            decode_schema,
+            encode_schema,
+        )
+
+        _prim, nested = self._zoo()
+        with pytest.raises(NotImplementedError, match="partition column 'st'"):
+            encode_schema(nested, ["st"])
+        with pytest.raises(NotImplementedError, match="partition column 'arr'"):
+            decode_schema(encode_schema(nested), ["arr"])
+        interval = T.StructType(
+            [T.StructField("iv", T.ArrayType(T.DayTimeIntervalType()))]
+        )
+        with pytest.raises(NotImplementedError, match="field 'iv'"):
+            encode_schema(interval)
+
+    @pytest.mark.parametrize("mode", ["name", "id"])
+    def test_nested_field_under_column_mapping_is_loud(self, mode):
+        from flink_gmall2024_realtime_spark.operators.deltalog import (
+            synth_delta_mapped,
+        )
+
+        def add_struct(members):
+            log0 = "_delta_log/" + "0" * 20 + ".json"
+            out = []
+            for line in members[log0].decode().splitlines():
+                a = json.loads(line)
+                if "metaData" in a:
+                    schema = json.loads(a["metaData"]["schemaString"])
+                    schema["fields"].append(
+                        {
+                            "name": "s",
+                            "type": {
+                                "type": "struct",
+                                "fields": [
+                                    {"name": "a", "type": "long",
+                                     "nullable": True, "metadata": {}}
+                                ],
+                            },
+                            "nullable": True,
+                            "metadata": {
+                                "delta.columnMapping.physicalName": "col-s",
+                                "delta.columnMapping.id": 99,
+                            },
+                        }
+                    )
+                    a["metaData"]["schemaString"] = json.dumps(schema)
+                out.append(json.dumps(a))
+            members[log0] = "\n".join(out).encode()
+
+        with pytest.raises(NotImplementedError, match="nested field 's'"):
+            read_delta_snapshot(
+                _rebuild(synth_delta_mapped(2, mode=mode), add_struct)
+            )
+
+    def test_nested_timestamp_ntz_needs_the_feature(self, spark, tmp_path):
+        from flink_gmall2024_realtime_spark.operators.deltalog import (
+            delta_scan,
+            replay_delta_dir,
+        )
+        from flink_gmall2024_realtime_spark.streaming.delta import (
+            DeltaAppendSink,
+        )
+
+        ntz = spark.sql(
+            "SELECT 1L AS k, named_struct('t', "
+            "TIMESTAMP_NTZ'2024-01-02 03:04:05') AS s"
+        )
+        path = str(tmp_path / "ntz")
+        DeltaAppendSink(path).commit_batch(ntz, 0)
+        proto = replay_delta_dir(path)["protocol"]
+        assert proto == {
+            "minReaderVersion": 3,
+            "minWriterVersion": 7,
+            "readerFeatures": ["timestampNtz"],
+            "writerFeatures": ["timestampNtz"],
+        }
+        assert delta_scan(spark, path).collect() == ntz.collect()
+        # evolution into a v1 table: a nested timestamp_ntz needs the
+        # feature the table lacks
+        plain = str(tmp_path / "plain")
+        sink = DeltaAppendSink(plain, schema_evolution=True)
+        sink.commit_batch(spark.sql("SELECT 1L AS k"), 0)
+        assert replay_delta_dir(plain)["protocol"] == {
+            "minReaderVersion": 1, "minWriterVersion": 2,
+        }
+        with pytest.raises(NotImplementedError, match=r"\['s'\]"):
+            sink.commit_batch(ntz, 1)
+
+    def test_nested_type_change_is_loud_and_nullability_is_not(
+        self, spark, tmp_path
+    ):
+        from flink_gmall2024_realtime_spark.operators.deltalog import (
+            delta_scan,
+            replay_delta_dir,
+        )
+        from flink_gmall2024_realtime_spark.streaming.delta import (
+            DeltaAppendSink,
+        )
+
+        path = str(tmp_path / "t")
+        sink = DeltaAppendSink(path, schema_evolution=True)
+        sink.commit_batch(
+            spark.createDataFrame([(1, (2, [3]))], "k long, s struct<a: long, b: array<long>>"),
+            0,
+        )
+        # the same type with non-null leaves is the same column type
+        sink.commit_batch(
+            spark.createDataFrame(
+                [(4, (5, [6]))],
+                "k long, s struct<a: long not null, b: array<long> not null>",
+            ),
+            1,
+        )
+        with pytest.raises(ValueError, match=r"changes the type .*\['s'\]"):
+            sink.commit_batch(
+                spark.createDataFrame(
+                    [(7, (8, ["9"]))], "k long, s struct<a: long, b: array<string>>"
+                ),
+                2,
+            )
+        # evolution appends a nested column at the top level
+        sink.commit_batch(
+            spark.createDataFrame(
+                [(10, (11, [12]), {"x": 1})],
+                "k long, s struct<a: long, b: array<long>>, m map<string, long>",
+            ),
+            3,
+        )
+        assert replay_delta_dir(path)["version"] == 2
+        got = sorted(tuple(r) for r in delta_scan(spark, path).collect())
+        assert got == [
+            (1, (2, [3]), None), (4, (5, [6]), None), (10, (11, [12]), {"x": 1}),
+        ]
+
+    def test_dwd_page_branch_commits_and_reads_back(self, spark, tmp_path):
+        """A DWD page-branch batch, with the reference's ``common`` and
+        ``page`` structs, is a Delta table: it reads back equal through
+        the snapshot scan, the stream source and the change feed, its
+        stats stay flat, and a top-level stats filter still prunes."""
+        from flink_gmall2024_realtime_spark.operators.deltalog import (
+            delta_scan,
+            delta_table_changes,
+            replay_delta_dir,
+        )
+        from flink_gmall2024_realtime_spark.streaming import pipelines
+        from flink_gmall2024_realtime_spark.streaming.delta import (
+            DeltaAppendSink,
+            DeltaStreamSource,
+        )
+
+        def page_batch(ts0):
+            logs = [
+                json.dumps(
+                    {
+                        "common": {"mid": f"m{i}", "is_new": str(i % 2),
+                                   "ar": str(i % 3), "uid": str(i)},
+                        "page": {"page_id": "home" if i % 2 else "good_detail",
+                                 "during_time": 1000 + i,
+                                 "last_page_id": None if i % 2 else "home"},
+                        "ts": ts0 + i,
+                    }
+                )
+                for i in range(6)
+            ]
+            raw = spark.createDataFrame([(x,) for x in logs], "value string")
+            return pipelines.dwd_base_log_pipeline(raw)["page"]
+
+        b0, b1 = page_batch(1000), page_batch(9000)
+        assert {"common", "page"} <= set(b0.columns)
+        path = str(tmp_path / "dwd_traffic_page")
+        sink = DeltaAppendSink(path)
+        sink.commit_batch(b0, 0)
+        sink.commit_batch_distributed(b1.coalesce(1), 1)
+
+        def rows(df):
+            return sorted(
+                tuple(r) for r in df.select(*b0.columns).collect()
+            )
+
+        want = rows(b0.unionByName(b1))
+        assert len(want) == 12
+        assert rows(delta_scan(spark, path)) == want
+        src_df, through = DeltaStreamSource(spark, path).next_batch()
+        assert through == 1 and rows(src_df) == want
+        changes = delta_table_changes(spark, path, 0)
+        assert {r[0] for r in changes.select("_change_type").collect()} == {
+            "insert"
+        }
+        assert rows(changes) == want
+
+        live = replay_delta_dir(path)["live"]
+        assert len(live) == 2
+        for add in live.values():
+            stats = json.loads(add["stats"])
+            for key in ("minValues", "maxValues", "nullCount"):
+                assert not [k for k in stats.get(key, {}) if "." in k]
+            assert "ts" in stats["minValues"]
+        late = delta_scan(spark, path, stats_filter={"ts": (9000, None)})
+        assert rows(late) == rows(b1)
+
+    def test_decimal_and_nested_leaves_get_no_bounds(self, spark, tmp_path):
+        """Decimals (a Spark file stores decimal(10,2) as INT64, an Arrow
+        file as fixed-length bytes) and nested leaves carry no min/max;
+        the other columns of the same file keep theirs."""
+        from flink_gmall2024_realtime_spark.operators.deltalog import (
+            delta_scan,
+            replay_delta_dir,
+        )
+        from flink_gmall2024_realtime_spark.streaming.delta import (
+            DeltaAppendSink,
+        )
+
+        df = spark.sql(
+            "SELECT id AS k, CAST(id / 4 AS DECIMAL(10,2)) AS d, "
+            "named_struct('a', id) AS s FROM range(8)"
+        ).coalesce(1)
+        path = str(tmp_path / "dec")
+        sink = DeltaAppendSink(path)
+        sink.commit_batch(df, 0)
+        sink.commit_batch_distributed(df, 1)
+        live = replay_delta_dir(path)["live"]
+        assert len(live) == 2
+        for add in live.values():
+            stats = json.loads(add["stats"])
+            assert stats["numRecords"] == 8
+            assert set(stats["minValues"]) == {"k"}
+            assert set(stats["maxValues"]) == {"k"}
+            assert "." not in "".join(stats["nullCount"])
+        got = sorted(tuple(r) for r in delta_scan(spark, path).collect())
+        assert got == sorted(tuple(r) for r in df.unionAll(df).collect())

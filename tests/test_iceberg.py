@@ -991,6 +991,27 @@ class TestIcebergDeleteWhere:
         got = sorted(r.k for r in ice.iceberg_scan(spark, path).collect())
         assert got == [k for k in range(100) if k % 3 != 0]
 
+    def test_scan_plan_over_position_deletes_starts_no_spark_job(
+        self, spark, tmp_path
+    ):
+        """The position-delete files are read with the spec's schema, so
+        building the scan plan runs no schema-inference job."""
+        from flink_gmall2024_realtime_spark.operators import iceberg as ice
+
+        path, sink = self._table(spark, tmp_path)
+        sink.delete_where("k % 3 = 0", 1)
+        sc = spark.sparkContext
+        group = "test_scan_plan_over_position_deletes_starts_no_spark_job"
+        sc.setJobGroup(group, "iceberg scan plan")
+        try:
+            df = ice.iceberg_scan(spark, path)
+            assert df.columns and df.schema.fields
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
+        got = sorted(r.k for r in df.collect())
+        assert got == [k for k in range(100) if k % 3 != 0]
+
     def test_scan_shuffle_path_above_broadcast_threshold(
         self, spark, tmp_path, monkeypatch
     ):
